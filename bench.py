@@ -445,7 +445,8 @@ def _compact_line(full: dict, n_retries: int) -> str:
     the sidecar only (r12 verdict #1 — they are what overflowed the
     line).  Sheds optional fields in ``_COMPACT_SHED_ORDER`` if over
     budget, and as a last resort trims query decimals — the per-query
-    map itself is unconditional."""
+    map itself is unconditional, so a line still over budget after that
+    is kept and reported on stderr."""
     compact = {
         "metric": full["metric"],
         "value": full["value"],
@@ -470,6 +471,12 @@ def _compact_line(full: dict, n_retries: int) -> str:
             k: round(float(v), 2) for k, v in compact["queries"].items()
         }
         line = json.dumps(compact)
+    if len(line) > _COMPACT_MAX_CHARS:
+        print(
+            f"# WARNING: stdout line is {len(line)} chars, over the "
+            f"{_COMPACT_MAX_CHARS}-char budget even after trimming",
+            file=sys.stderr,
+        )
     return line
 
 
@@ -736,13 +743,10 @@ def main() -> None:
             )
         _host_probe("sf1_isolated:end")
 
-    # sf0.1 isolated-warm twin for the composite family: their stacked
-    # key-level combine runs several jobs per query (branch-cache fill +
-    # terminal), and each extra job magnifies the aged-session tax the
-    # main lanes carry after ~45 prior queries (measured r9:
-    # composite_relational 5.3-5.5 s in a fresh session with identical
-    # per-run resets vs 8-10.6 s mid-suite).  Post-reset best-of-3 at
-    # the very end records the code's cost next to the in-suite number.
+    # sf0.1 isolated-warm twin for the blocking lanes with the longest
+    # stage chains: the main lanes run in a session aged by ~45 prior
+    # queries, which taxes every stage.  Post-reset best-of-3 at the
+    # very end records the code's cost next to the in-suite number.
     sf01_isolated_warm: dict[str, float] = {}
     _host_probe("sf01_isolated")
     for name in (

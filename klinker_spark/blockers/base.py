@@ -53,9 +53,16 @@ class SchemaAgnosticBlocker(Blocker):
         left_rel: DataFrame | None = None,
         right_rel: DataFrame | None = None,
     ) -> BlockManager:
-        bm = self._assign(
+        return self.assign_text(
             left.concat_values(), right.concat_values(), left.name, right.name
         )
+
+    def assign_text(
+        self, left: DataFrame, right: DataFrame, left_name: str, right_name: str
+    ) -> BlockManager:
+        """:meth:`_assign` on ready ``(id, text)`` frames, then the
+        optional purge — for callers that already hold the concat."""
+        bm = self._assign(left, right, left_name, right_name)
         if getattr(self, "_purge", False):
             bm = bm.purge(cc_round=self._cc_round)
         return bm

@@ -3,9 +3,8 @@ an EMBEDDING relation branch (E6).
 
 Reference: ``/root/reference/src/klinker/blockers/hybrid.py:15-178``
 (``CompositeRelationalDeepBlocker``, ``CompositeEmbeddingBlocker``,
-``CompositeLightEABlocker``).  Round 2 covered these "by composition";
-this module provides the dedicated classes so a reference user can
-instantiate them by name with the same knobs.
+``CompositeLightEABlocker``): dedicated classes so a reference user
+can instantiate them by name with the same knobs.
 
 All three parameterize the :class:`~.composite.CompositeUniqueNameBlocker`
 flow — unique pass → anti-join covered → token blocking on attributes →
@@ -25,13 +24,11 @@ branch:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..data.blocks import BlockManager
 from ..data.frames import EntityFrame
 from .composite import CompositeUniqueNameBlocker
 from .token import TokenBlocker
-from .unique_name import UniqueNameBlocker
 
 # NOTE: ..embedding.* is imported lazily inside the constructors —
 # embedding.blocker itself imports blockers.base, so a module-level
@@ -145,8 +142,8 @@ class CompositeLightEABlocker(CompositeUniqueNameBlocker):
 
         super().__init__(
             TokenBlocker(min_token_length=attr_min_token_length),
-            # unused: assign() below replaces the relation branch with
-            # the graph encoder + kNN build
+            # unused: _rel_input / _rel_blocks below replace the relation
+            # branch with the graph encoder + kNN build
             None,
             None,
             None,
@@ -157,57 +154,12 @@ class CompositeLightEABlocker(CompositeUniqueNameBlocker):
         )
         self._builder = KNNBlockBuilder(k=k)
 
+    def _rel_input(self, frame: EntityFrame, rels: DataFrame, own_text: DataFrame) -> DataFrame:
+        """Embeddings from propagation over the full relation graph;
+        the composite flow drops unique-covered ids afterwards."""
+        return self._encoder.encode(own_text, rels)
+
     def _rel_blocks(
-        self,
-        left: EntityFrame,
-        right: EntityFrame,
-        left_rel: DataFrame,
-        right_rel: DataFrame,
-        unique: BlockManager | None,
+        self, left: DataFrame, right: DataFrame, left_name: str, right_name: str
     ) -> BlockManager:
-        def side_emb(frame: EntityFrame, rels: DataFrame) -> DataFrame:
-            emb = self._encoder.encode(frame.concat_values(), rels)
-            if unique is not None:
-                emb = emb.join(unique.covered_ids(frame.name), "id", "left_anti")
-            return emb
-
-        return self._builder.build_blocks(
-            side_emb(left, left_rel),
-            side_emb(right, right_rel),
-            left.name,
-            right.name,
-        )
-
-    def assign(
-        self,
-        left: EntityFrame,
-        right: EntityFrame,
-        left_rel: DataFrame | None = None,
-        right_rel: DataFrame | None = None,
-    ) -> BlockManager:
-        assert left_rel is not None and right_rel is not None
-        if not self.use_unique_name:
-            attr_blocks = self._attribute_blocker.assign(left, right)
-            return attr_blocks.combine(
-                self._rel_blocks(left, right, left_rel, right_rel, None)
-            )
-        # lazily-marked key-frame cache — the first consuming action
-        # (the NN builder's index job or combine_all's stack job) fills
-        # it; later actions read the filled cache.  See the rationale
-        # in CompositeUniqueNameBlocker.assign.
-        unique = (
-            UniqueNameBlocker()
-            .assign(left, right)
-            .persisted(effective=True, materialize=False)
-        )
-
-        from .composite import filter_with_unique
-
-        left_rest = left.with_attrs(filter_with_unique(left.attrs, unique, left.name))
-        right_rest = right.with_attrs(
-            filter_with_unique(right.attrs, unique, right.name)
-        )
-        # single stacked-frame combine — see CompositeUniqueNameBlocker
-        attr_blocks = self._attribute_blocker.assign(left_rest, right_rest)
-        rel_blocks = self._rel_blocks(left, right, left_rel, right_rel, unique)
-        return BlockManager.combine_all([unique, attr_blocks, rel_blocks])
+        return self._builder.build_blocks(left, right, left_name, right_name)

@@ -154,9 +154,14 @@ def concat_neighbor_attributes(
     include_own_attributes: bool = True,
     top_n_a: int | None = None,
     top_n_r: int | None = None,
+    own_text: DataFrame | None = None,
 ) -> DataFrame:
     """Per-entity concat of its *neighbors'* attribute text → ``(id, text)``
     (E3, ``relation_aware.py:156-247``).
+
+    ``own_text``: ``frame.concat_values()`` when the caller already
+    holds it; ignored under ``top_n_a``, whose property filter changes
+    the own text.
 
     Steps: add inverse edges (P7+U1) → optional property/relation
     importance filters (A4/A5 + W1) → per-entity attr concat (P3) →
@@ -180,7 +185,8 @@ def concat_neighbor_attributes(
             with_inv, relation_importance(rels, num_entities), top_n_r, "rel", "head"
         )
 
-    own_text = frame.with_attrs(attrs).concat_values()  # (id, text)
+    if own_text is None or top_n_a:
+        own_text = frame.with_attrs(attrs).concat_values()  # (id, text)
 
     # Own attributes ride along as self-loop edges instead of a second
     # pass over own_text: one join + one aggregate for the whole blob,
@@ -209,13 +215,20 @@ class _ConcatRelationalInfo:
         self.top_n_a = top_n_a
         self.top_n_r = top_n_r
 
-    def _conc(self, frame: EntityFrame, rels: DataFrame, include_own: bool) -> DataFrame:
+    def _conc(
+        self,
+        frame: EntityFrame,
+        rels: DataFrame,
+        include_own: bool,
+        own_text: DataFrame | None = None,
+    ) -> DataFrame:
         return concat_neighbor_attributes(
             frame,
             rels,
             include_own_attributes=include_own,
             top_n_a=self.top_n_a,
             top_n_r=self.top_n_r,
+            own_text=own_text,
         )
 
 

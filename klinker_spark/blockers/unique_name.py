@@ -23,19 +23,19 @@ class UniqueNameBlocker(Blocker):
     """Blocks keyed by values held by exactly one entity per side."""
 
     @staticmethod
-    def _unique_values(frame: EntityFrame, name: str) -> DataFrame:
-        """A10: ``groupBy(value).agg(countDistinct(id) = 1)``; keeps the
-        single owner id per value.  ``max(id)`` is exact under the n=1
-        filter — avoids carrying a set."""
+    def _unique_values(frame: EntityFrame) -> DataFrame:
+        """A10: the values held by exactly one id → ``(block_key, id)``.
+
+        One aggregate: a value's ids are all equal iff ``min(id) =
+        max(id)``, which equals the reference's ``nunique == 1``
+        (``count_distinct(id) = 1``) without its second exchange — both
+        skip null ids, and an all-null value fails either test."""
         return (
             frame.attrs.where(F.col("value").isNotNull())
             .groupBy(F.col("value").alias("block_key"))
-            .agg(
-                F.count_distinct(F.col("id")).alias("n"),
-                F.max(F.col("id")).alias("only_id"),
-            )
-            .where(F.col("n") == 1)
-            .select("block_key", F.col("only_id").alias("id"))
+            .agg(F.min(F.col("id")).alias("_lo"), F.max(F.col("id")).alias("id"))
+            .where(F.col("_lo") == F.col("id"))
+            .select("block_key", "id")
         )
 
     def assign(
@@ -46,8 +46,8 @@ class UniqueNameBlocker(Blocker):
         right_rel: DataFrame | None = None,
     ) -> BlockManager:
         return BlockManager.from_key_assignments(
-            self._unique_values(left, left.name),
-            self._unique_values(right, right.name),
+            self._unique_values(left),
+            self._unique_values(right),
             left.name,
             right.name,
             assume_distinct=True,

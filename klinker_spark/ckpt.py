@@ -42,9 +42,9 @@ from pyspark.sql import DataFrame, SparkSession
 __all__ = ["checkpoint", "release", "release_all", "release_owned", "track"]
 
 #: persist()-ed frames registered by library code whose cache must
-#: outlive the registering call (e.g. combine_all's stacked frame,
-#: alive until the manager's terminal action) — released at the next
-#: harness-level :func:`release_all`.  DataFrame-level unpersist (not
+#: outlive the registering call (e.g. ``BlockManager.persisted``'s key
+#: frames, alive until the caller's last action) — released at the
+#: next harness-level :func:`release_all`.  DataFrame-level unpersist (not
 #: just the backing RDD) so the CacheManager entry goes too and later
 #: plans stop substituting the dropped InMemoryRelation.
 _TRACKED: list[DataFrame] = []

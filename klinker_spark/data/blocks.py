@@ -20,6 +20,7 @@ on skewed key distributions.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -253,10 +254,11 @@ class BlockManager:
         )
 
     def covered_ids(self, side: str) -> DataFrame:
-        """Distinct ids appearing in any block on the given side — the
-        anti-join input of composite flows (P10).  Key-frame path reads
-        the (block-filtered) assignment table; array path explodes the
-        cells."""
+        """Ids appearing in any block on the given side — the anti-join
+        build side of composite flows (P10).  Not deduplicated: an id in
+        several blocks repeats, which no semi/anti-join minds.  Key-frame
+        path reads the (block-filtered) assignment table; array path
+        explodes the cells."""
         if side not in (self.left_name, self.right_name):
             raise ValueError(
                 f"unknown side {side!r}: this manager's sides are "
@@ -265,44 +267,22 @@ class BlockManager:
         if self.left_keys is not None:
             lk, rk = self.effective_keys()
             kf = lk if side == self.left_name else rk
-            return kf.select("id").distinct()
-        return self.df.select(F.explode(F.col(side)).alias("id")).distinct()
+            return kf.select("id")
+        return self.df.select(F.explode(F.col(side)).alias("id"))
 
-    def persisted(self, effective: bool = False, materialize: bool = True) -> "BlockManager":
-        """Cache + materialize the manager's backing frames NOW.
-
-        Composite flows embed the unique-name table ~6× downstream (two
-        covered-id anti-joins per branch + the combines); left lazy,
-        each copy re-enters analysis as a full aggregate subtree and the
-        terminal plan blows up (measured 29 s analysis + 48 s execution
-        vs ~6 s total at sf0.01).  Once cached, downstream plans
-        substitute InMemoryRelation at analysis time.  Key-frame
+    def persisted(self, effective: bool = False) -> "BlockManager":
+        """Cache + materialize the manager's backing frames NOW — for a
+        caller that runs several actions on one manager.  Key-frame
         managers persist the two assignment tables (never building the
         array cells at all); df-layout managers persist the block table.
 
         ``effective=True`` persists the block-filtered frames instead of
-        the raw assignments — right when downstream reads the EFFECTIVE
-        form repeatedly (the unique table: 4 covered-id anti-joins + 2
-        combines).  Branch managers consumed by ONE combine keep
-        ``effective=False``: the raw cache already collapses the
-        semi-join's double subtree reference, and skipping the eager
-        filter saves a materialization pass.  Both frames materialize in
-        a single job (union-count) rather than two serial actions.
+        the raw assignments.  Both frames materialize in a single job
+        (union-count) rather than two serial actions.
 
-        ``materialize=False`` only MARKS the frames for caching: the
-        plan-level dedup (CacheManager substitutes the same
-        InMemoryRelation for every reference at analysis time, and the
-        scheduler computes one RDD once per job) happens at persist()
-        time, so downstream references already collapse; the compute is
-        deferred into the terminal action's job instead of paying a
-        serial job barrier here.  Use it when the manager is consumed by
-        exactly one downstream action; keep the eager default when
-        several separate actions will read it (each would otherwise race
-        to compute the first fill).
-
-        Like combine_all's stacked cache, the persisted frames register
-        with :func:`klinker_spark.ckpt.release_all` — long sessions
-        free them wholesale at the next harness boundary.
+        The persisted frames register with
+        :func:`klinker_spark.ckpt.release_all`; :meth:`release_caches`
+        frees them per manager.
         """
         from ..ckpt import track
 
@@ -319,8 +299,7 @@ class BlockManager:
             )
             track(lk, owner=out)
             track(rk, owner=out)
-            if materialize:
-                lk.unionByName(rk).count()
+            lk.unionByName(rk).count()
             return out
         df = self.df.persist()
         out = BlockManager(df, self.left_name, self.right_name)
@@ -330,50 +309,39 @@ class BlockManager:
 
     def release_caches(self) -> None:
         """Unpersist the cached frames THIS manager registered
-        (``persisted()`` / ``combine_all``'s stacked spine) and drop
-        them from the harness registry — the per-manager cleanup lever
-        (r10 ADVICE): a long-lived library consumer composing many
-        managers calls this when a manager is dead instead of relying
-        on the harness-level :func:`klinker_spark.ckpt.release_all`.
-        Safe only after the manager's terminal action; idempotent."""
+        (:meth:`persisted`) and drop them from the harness registry —
+        the per-manager cleanup lever: a long-lived library consumer
+        composing many managers calls this when a manager is dead
+        instead of relying on the harness-level
+        :func:`klinker_spark.ckpt.release_all`.  Safe only after the
+        manager's last action; idempotent."""
         from ..ckpt import release_owned
 
         release_owned(self)
 
     # ---------------------------------------------------------------- combine
     @classmethod
-    def combine_all(
-        cls, managers: list["BlockManager"], materialize: bool = True
-    ) -> "BlockManager":
-        """N-way key-level combine, ONE exchange total (eager).
+    def combine_all(cls, managers: list["BlockManager"]) -> "BlockManager":
+        """N-way key-level combine, ONE exchange total (lazy).
 
         Stacks every manager's raw assignment frames into a single
-        tagged frame ``(block_key, id, _b=branch, _s=side)``, hash-
-        repartitions it on ``block_key`` ONCE and caches it (the single
-        job that computes each branch spine exactly once — per-branch
-        semi-join filters would instead spawn broadcast-build jobs that
-        each recompute a spine before the caches fill: measured 68 jobs
-        / 25 s executor time for one composite at sf0.1).  Everything
+        tagged frame ``(block_key, id, _b=branch, _s=side)`` and
+        hash-repartitions it on ``block_key`` ONCE.  Everything
         downstream rides that partitioning with zero further exchanges:
         two-sidedness per (key, branch) is a window max (hash(key)
         satisfies the (key, branch) clustering), the per-side dedup is a
         group-by whose keys start with block_key, and the terminal pair
-        join sees two co-partitioned sides.  At scale the cache is one
-        shuffle-sized spill; the window sorts within partitions only.
+        join sees two co-partitioned sides.  Both sides read the same
+        exchange, so exchange reuse computes the stacked frame once in
+        the terminal action — nothing is cached and no job runs here.
+        A caller running several actions on the result calls
+        :meth:`persisted` on it.
 
         Semantics == chained array combines: a key's members are the
         union of its members from every branch where it is two-sided,
         and keys two-sided in no branch vanish.  Array-layout inputs
         (``from_dict`` / ``read_parquet`` managers without key frames)
-        fall back to the chained array-path combine below.
-
-        The stacked cache is registered with :func:`klinker_spark.ckpt.
-        release_all`: a long session composing many combines frees the
-        orphaned entries at its next harness-level release instead of
-        accumulating them (the cache must outlive THIS manager's
-        terminal action, so combine_all cannot unpersist it itself).
-        NOTE this makes ``combine``/``combine_all`` on key-framed
-        inputs EAGER — the stack job runs at graph-construction time."""
+        fall back to the chained array-path combine below."""
         names = {(m.left_name, m.right_name) for m in managers}
         if len(names) > 1:
             raise ValueError(
@@ -382,8 +350,6 @@ class BlockManager:
                 "inputs to a common orientation first"
             )
         if any(m.left_keys is None for m in managers):
-            import functools
-
             return functools.reduce(lambda a, b: a._combine_arrays(b), managers)
         first = managers[0]
         legs = []
@@ -397,17 +363,9 @@ class BlockManager:
                         F.lit(s).alias("_s"),
                     )
                 )
-        import functools
-
-        from ..ckpt import track
-
-        stacked = (
-            functools.reduce(lambda a, c: a.unionByName(c), legs)
-            .repartition(F.col("block_key"))
-            .persist()
+        stacked = functools.reduce(lambda a, c: a.unionByName(c), legs).repartition(
+            F.col("block_key")
         )
-        if materialize:
-            stacked.count()
         w = Window.partitionBy("block_key", "_b")
         both = (
             stacked.withColumn(
@@ -425,8 +383,17 @@ class BlockManager:
                 .select("block_key", "id")
             )
 
-        out = cls(
-            None,
+        def members(s: int):
+            return F.array_sort(F.collect_set(F.when(F.col("_s") == s, F.col("id"))))
+
+        # the array layout in ONE pass over the stack (collect_set skips
+        # the other side's nulls); assembling it from the two key frames
+        # would plan the whole stacked subtree twice
+        arrays = both.groupBy("block_key").agg(
+            members(0).alias(first.left_name), members(1).alias(first.right_name)
+        )
+        return cls(
+            arrays,
             first.left_name,
             first.right_name,
             side(0),
@@ -434,8 +401,6 @@ class BlockManager:
             keys_effective=True,
             keys_partitioned=True,
         )
-        track(stacked, owner=out)
-        return out
 
     def combine(self, other: "BlockManager") -> "BlockManager":
         """Outer-join two block tables on key; union id-lists per side
@@ -458,11 +423,7 @@ class BlockManager:
         effective — every surviving key has both sides from whichever
         input blocked it.  Only a hand-built df-layout manager
         (``from_dict`` / ``read_parquet``) can hold an empty-array cell,
-        and those take the array path below.
-
-        NOTE: the key-frame fast path delegates to :meth:`combine_all`,
-        which is EAGER (it runs the stack job and registers a cache at
-        call time — see its docstring); the array path stays lazy.
+        and those take the array path below.  Both paths are lazy.
         """
         if self.left_keys is not None and other.left_keys is not None:
             return BlockManager.combine_all([self, other])

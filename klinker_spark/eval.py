@@ -55,18 +55,22 @@ class Evaluation:
         materialization.
 
         ``left_count`` / ``right_count`` accept the entity DataFrames
-        themselves; then the whole evaluation runs in TWO driver
-        actions — one scan of the (huge) pairs table with the gold set
-        broadcast onto it, and one action folding the three small
-        counts (gold, |L|, |R|) into a single cross-joined aggregate
-        plan — instead of four.
+        themselves; their counts and the gold count are single-row
+        aggregates cross-joined into the pair-count action.  The array
+        path is then ONE driver action (a scan of the pairs table with
+        the gold set broadcast onto it), the key path two (the
+        keys-per-entity probe, then the counts).
         """
         lcol, rcol = gold.columns[:2]
         g = gold.select(
             F.col(lcol).cast("string").alias("left_id"),
             F.col(rcol).cast("string").alias("right_id"),
         ).distinct()  # gold is a set of links; dupes would inflate the left-join
-        n_pairs = tp = None
+        small = g.agg(F.count("*").alias("_ng"))
+        if isinstance(left_count, DataFrame):
+            small = small.crossJoin(left_count.agg(F.count("*").alias("_nl")))
+        if isinstance(right_count, DataFrame):
+            small = small.crossJoin(right_count.agg(F.count("*").alias("_nr")))
         if distinct and blocks.left_keys is not None:
             # Assignment-frame fast path (the reference's
             # MinimalEvaluation direction, ``eval.py:22-141``, taken to
@@ -104,17 +108,14 @@ class Evaluation:
             )
             tp_agg = covered.agg(F.count("*").alias("_tp"))
             if single_key:
-                sizes = (
-                    la.groupBy("block_key").agg(F.count("*").alias("_nl"))
-                    .join(ra.groupBy("block_key").agg(F.count("*").alias("_nr")), "block_key")
-                    .agg(F.sum(F.col("_nl") * F.col("_nr")).alias("_n"))
+                n_agg = (
+                    la.groupBy("block_key").agg(F.count("*").alias("_bl"))
+                    .join(ra.groupBy("block_key").agg(F.count("*").alias("_br")), "block_key")
+                    .agg(F.sum(F.col("_bl") * F.col("_br")).alias("_n"))
                 )
-                row = tp_agg.crossJoin(sizes).first()
             else:
-                row = tp_agg.crossJoin(
-                    blocks.pairs(distinct=True).agg(F.count("*").alias("_n"))
-                ).first()
-            n_pairs, tp = int(row["_n"] or 0), int(row["_tp"] or 0)
+                n_agg = blocks.pairs(distinct=True).agg(F.count("*").alias("_n"))
+            row = tp_agg.crossJoin(n_agg).crossJoin(small).first()
         else:
             pairs = blocks.pairs(distinct=distinct)
             # one job for comparisons + TPs: left-join gold (broadcast —
@@ -125,19 +126,12 @@ class Evaluation:
             row = marked.agg(
                 F.count("*").alias("_n"),
                 F.sum(F.coalesce(F.col("_g"), F.lit(0))).alias("_tp"),
-            ).first()
-            n_pairs, tp = row["_n"], int(row["_tp"] or 0)
-        small = g.agg(F.count("*").alias("_ng"))
+            ).crossJoin(small).first()
+        n_pairs, tp, n_gold = int(row["_n"] or 0), int(row["_tp"] or 0), row["_ng"]
         if isinstance(left_count, DataFrame):
-            small = small.crossJoin(left_count.agg(F.count("*").alias("_nl")))
+            left_count = row["_nl"]
         if isinstance(right_count, DataFrame):
-            small = small.crossJoin(right_count.agg(F.count("*").alias("_nr")))
-        srow = small.first()
-        n_gold = srow["_ng"]
-        if isinstance(left_count, DataFrame):
-            left_count = srow["_nl"]
-        if isinstance(right_count, DataFrame):
-            right_count = srow["_nr"]
+            right_count = row["_nr"]
         return cls(
             true_positives=tp,
             false_positives=n_pairs - tp,

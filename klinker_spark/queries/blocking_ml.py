@@ -229,8 +229,9 @@ def composite_unique_name_blocking(spark, sf_dir):
     custkey).  The relation branch is disabled (attr-only composite) so
     the oracle stays tractable; the full relational branch is covered by
     relational_token_blocking."""
-    from ..blockers.composite import CompositeUniqueNameBlocker
-    from ..blockers.unique_name import UniqueNameBlocker
+    from ..blockers.composite import filter_with_unique as fwu
+    from ..blockers.composite import unique_name_blocks
+    from ..blockers.token import TokenBlocker
 
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer")
@@ -250,19 +251,7 @@ def composite_unique_name_blocking(spark, sf_dir):
         ),
         "customer",
     )
-    # materialize=False: every consumer (two covered-id anti-joins +
-    # combine_all) drains inside the single terminal action, which fills
-    # the cache on first touch — the eager union-count is a pure serial
-    # job barrier here (interleaved A/B at sf0.1: eager 4.4-6.3 s vs
-    # lazy 4.0-4.8 s, identical results)
-    unique = (
-        UniqueNameBlocker()
-        .assign(left_u, right_u)
-        .persisted(effective=True, materialize=False)
-    )
-
-    from ..blockers.composite import filter_with_unique as fwu
-    from ..blockers.token import TokenBlocker
+    unique = unique_name_blocks(left_u, right_u)
 
     left_t = EntityFrame(
         fwu(
@@ -353,13 +342,25 @@ def composite_relational_blocking(spark, sf_dir):
     """E4/E5/E6: the FULL CompositeRelationalTokenBlocker flow —
     unique-name pass (nations, the only values unique on both sides) →
     anti-join covered entities → token blocker on remaining attrs →
-    token blocker on neighbor-concat text of the remainder → two
-    array-union combines.  The oracle models combine exactly: per-side
+    token blocker on neighbor-concat text of the remainder → one
+    key-level combine.  The oracle models combine exactly: per-side
     assignment sets unioned per block_key across the three branches,
     then the per-key cross product (a key hit by several branches pairs
     the *union* of its members, not the union of per-branch pairs)."""
     from ..blockers.composite import CompositeRelationalTokenBlocker
 
+    bm = CompositeRelationalTokenBlocker().assign(*composite_relational_inputs(spark, sf_dir))
+    # no .distinct(): combine output has unique keys + set arrays, so the
+    # exploded pairs are distinct already (asserted by the oracle hash);
+    # re-distincting would shuffle the full quadratic pair set once more
+    return _explode_blocks(bm)
+
+
+def composite_relational_inputs(spark, sf_dir):
+    """``(left, right, left_rel, right_rel)`` of
+    :func:`composite_relational_blocking`: customer segments and
+    supplier names, each side plus the nation names, and one
+    ``in_nation`` edge per customer / supplier."""
     cust = _t(spark, sf_dir, "customer")
     supp = _t(spark, sf_dir, "supplier")
     nat = _t(spark, sf_dir, "nation")
@@ -393,11 +394,7 @@ def composite_relational_blocking(spark, sf_dir):
         F.lit("in_nation").alias("rel"),
         F.concat(F.lit("n"), F.col("s_nationkey")).alias("tail"),
     )
-    bm = CompositeRelationalTokenBlocker().assign(left, right, left_rel, right_rel)
-    # no .distinct(): combine output has unique keys + set arrays, so the
-    # exploded pairs are distinct already (asserted by the oracle hash);
-    # re-distincting would shuffle the full quadratic pair set once more
-    return _explode_blocks(bm)
+    return left, right, left_rel, right_rel
 
 
 @register("gcn_embedding_blocking")

@@ -65,36 +65,37 @@ def main() -> None:
     preckpt: list[str] = []
     orig_lc = df_cls.localCheckpoint
 
-    def recording_lc(self, eager: bool = True):
+    def recording_lc(self, *args, **kwargs):
         try:
             preckpt.append(_fmt_plan(self))
         except Exception:  # noqa: BLE001 - recording must never break a query
             pass
-        return orig_lc(self, eager)
+        return orig_lc(self, *args, **kwargs)
 
     df_cls.localCheckpoint = recording_lc
-    for name in names:
-        preckpt.clear()
-        try:
-            df = QUERIES[name](spark, sf)
-            text = _fmt_plan(df)
-            if "ExistingRDD" in text and preckpt:
-                text += (
-                    f"\n# --- checkpoint-transparent addendum: the final frame is a"
-                    f"\n# --- localCheckpoint leaf; below is the plan of the frame that"
-                    f"\n# --- ENTERED the terminal checkpoint (checkpoint {len(preckpt)}"
-                    f"\n# --- of {len(preckpt)} recorded while building this query) ---\n"
-                    + preckpt[-1]
-                )
-        except Exception as exc:  # noqa: BLE001 - record, keep dumping
-            text = f"ERROR dumping plan: {exc!r}\n"
-        path = os.path.join(outdir, f"{name}_{suffix}.txt")
-        with open(path, "w") as f:
-            f.write(f"# {name} — explain('formatted') @ {sf} [{suffix}]\n")
-            f.write(text)
-        print(f"wrote {path}")
-
-    df_cls.localCheckpoint = orig_lc
+    try:
+        for name in names:
+            preckpt.clear()
+            try:
+                df = QUERIES[name](spark, sf)
+                text = _fmt_plan(df)
+                if "ExistingRDD" in text and preckpt:
+                    text += (
+                        f"\n# --- checkpoint-transparent addendum: the final frame is a"
+                        f"\n# --- localCheckpoint leaf; below is the plan of the frame that"
+                        f"\n# --- ENTERED the terminal checkpoint (checkpoint {len(preckpt)}"
+                        f"\n# --- of {len(preckpt)} recorded while building this query) ---\n"
+                        + preckpt[-1]
+                    )
+            except Exception as exc:  # noqa: BLE001 - record, keep dumping
+                text = f"ERROR dumping plan: {exc!r}\n"
+            path = os.path.join(outdir, f"{name}_{suffix}.txt")
+            with open(path, "w") as f:
+                f.write(f"# {name} — explain('formatted') @ {sf} [{suffix}]\n")
+                f.write(text)
+            print(f"wrote {path}")
+    finally:
+        df_cls.localCheckpoint = orig_lc
 
 
 if __name__ == "__main__":

@@ -88,6 +88,23 @@ def test_compact_line_sheds_optional_fields_before_query_precision():
     assert all(v == 1234.57 for v in parsed["queries"].values())
 
 
+def test_compact_line_warns_when_still_over_budget(capsys):
+    """A per-query map too big for the budget even at 2 decimals keeps
+    every lane and says so on stderr."""
+    timings = {f"synthetic_lane_with_a_very_long_name_{i:03d}": 1.0 for i in range(200)}
+    full = {
+        "metric": "headline_suite_wall_time", "value": 1.0, "unit": "sec",
+        "queries": timings, "sf": 0.1, "warm_lane": "w", "warm_total": 1.0,
+        "curation_total": 1.0, "sf1": {"total": 1.0},
+    }
+    line = bench._compact_line(full, n_retries=0)
+    assert len(line) > bench._COMPACT_MAX_CHARS
+    assert set(json.loads(line)["queries"]) == set(timings)
+    assert "over the 1900-char budget" in capsys.readouterr().err
+    assert bench._compact_line({**full, "queries": {"q": 1.0}}, n_retries=0)
+    assert capsys.readouterr().err == ""
+
+
 def test_retry_lane_prioritizes_biggest_outliers(monkeypatch):
     """Under the per-lane cap the retries must go to the rows whose
     cold/ref ratio is largest — r13 run 1 burned all slots on 2-3x rows

@@ -90,6 +90,41 @@ def test_unique_name_blocker(frame_a, frame_b):
     assert "USA" not in got
 
 
+def test_unique_values_min_max_rule_equals_count_distinct(spark):
+    """The one-aggregate rule ``min(id) = max(id)`` keeps exactly the
+    values ``count_distinct(id) = 1`` keeps, with the same owner id."""
+    from pyspark.sql import functions as F
+
+    from klinker_spark.data.frames import EntityFrame
+
+    attrs = spark.createDataFrame(
+        [
+            ("a1", "p", "solo"),
+            ("a2", "p", "twice"),  # duplicate (value, id) rows: still unique
+            ("a2", "q", "twice"),
+            ("a3", "p", "shared"),  # one value, two ids: not unique
+            ("a4", "p", "shared"),
+            ("a5", "p", None),  # null values never form a block
+            ("a6", "p", None),
+            ("a7", "p", "half"),  # a null id beside one real id
+            (None, "p", "half"),
+            (None, "p", "ghost"),  # only null ids
+        ],
+        "id string, prop string, value string",
+    )
+    got = UniqueNameBlocker._unique_values(EntityFrame(attrs, "A"))
+    want = (
+        attrs.where(F.col("value").isNotNull())
+        .groupBy(F.col("value").alias("block_key"))
+        .agg(F.count_distinct("id").alias("n"), F.max("id").alias("id"))
+        .where("n = 1")
+        .select("block_key", "id")
+    )
+    rows = {tuple(r) for r in got.collect()}
+    assert rows == {tuple(r) for r in want.collect()}
+    assert rows == {("solo", "a1"), ("twice", "a2"), ("half", "a7")}
+
+
 def test_parquet_roundtrip(frame_a, frame_b, tmp_path, spark):
     bm = StandardBlocker("BirthCountry").assign(frame_a, frame_b)
     path = str(tmp_path / "blocks")

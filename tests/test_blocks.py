@@ -8,7 +8,7 @@ import pytest
 
 from klinker_spark.data.blocks import BlockManager
 
-from conftest import blocks_as_dict
+from conftest import SF_DIR, blocks_as_dict
 
 BLOCKS_DICT = {
     2: (["3"], ["3", "5"]),
@@ -264,27 +264,28 @@ def test_block_pairs_explicit_expand_partitions_wins(spark):
     assert "RoundRobinPartitioning" not in default
 
 
-def test_combine_all_cache_registered_for_release(spark):
-    """ADVICE r9: combine_all's eager stacked cache is tracked and
-    freed by the next harness-level release_all — no orphan cache
-    accumulation across a long session of combines."""
-    from klinker_spark import ckpt
+def test_composite_assign_is_lazy_and_cache_free(spark):
+    """CompositeRelationalTokenBlocker.assign builds one lazy plan: it
+    launches no Spark job, and its terminal action leaves no cache
+    behind — no persistent RDD is added, without any release_all.
+    (Compared as id sets: earlier tests' caches may be cleaned up
+    meanwhile, so the count alone can fall.)"""
+    from klinker_spark.blockers.composite import CompositeRelationalTokenBlocker
+    from klinker_spark.queries.blocking_ml import composite_relational_inputs
 
-    ckpt.release_all(spark)
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    bm = _km(spark, [("k", "a1")], [("k", "b1")]).combine(
-        _km(spark, [("k", "a2")], [("k", "b2")])
-    )
-    assert len(ckpt._TRACKED) >= 1
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() > before
-    # the cache is alive for the manager's terminal action …
-    assert {tuple(r) for r in bm.pairs().collect()} == {
-        ("a1", "b1"), ("a1", "b2"), ("a2", "b1"), ("a2", "b2"),
-    }
-    # … and released wholesale at the next harness boundary
-    ckpt.release_all(spark)
-    assert ckpt._TRACKED == []
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs())
+    inputs = composite_relational_inputs(spark, SF_DIR)
+    group = "test-composite-assign"
+    sc.setJobGroup(group, "assign")
+    try:
+        bm = CompositeRelationalTokenBlocker().assign(*inputs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert bm.pairs().collect()
+    assert set(sc._jsc.getPersistentRDDs()) - before == set()
 
 
 def test_release_caches_per_manager(spark):
@@ -297,18 +298,17 @@ def test_release_caches_per_manager(spark):
     ckpt.release_all(spark)
     bm1 = _km(spark, [("k", "a1")], [("k", "b1")]).combine(
         _km(spark, [("k", "a2")], [("k", "b2")])
-    )
+    ).persisted()
     bm2 = _km(spark, [("j", "a9")], [("j", "b9")]).persisted()
     n_tracked = len(ckpt._TRACKED)
-    assert n_tracked >= 3  # bm1's stacked spine + bm2's two key frames
+    assert n_tracked == 4  # two key frames per manager
     bm1.pairs().collect()
     bm1.release_caches()
-    # bm1's cache gone, bm2's still registered and usable
-    assert len(ckpt._TRACKED) == n_tracked - 1
+    # bm1's caches gone, bm2's still registered and usable
+    assert len(ckpt._TRACKED) == n_tracked - 2
     assert {tuple(r) for r in bm2.pairs().collect()} == {("a9", "b9")}
     bm1.release_caches()  # idempotent
-    assert len(ckpt._TRACKED) == n_tracked - 1
+    assert len(ckpt._TRACKED) == n_tracked - 2
     bm2.release_caches()
-    assert len(ckpt._TRACKED) == n_tracked - 3
-    ckpt.release_all(spark)
+    assert ckpt._TRACKED == []
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0

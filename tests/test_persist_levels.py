@@ -14,7 +14,7 @@ import pytest
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-SF_DIR = "/root/testdata/sf0.001"
+from conftest import SF_DIR
 
 AUDITED_QUERIES = [
     "lsh_precision_recall_audit",
