@@ -13,8 +13,8 @@ evict-churns later queries (measured: pagerank sf1 24 s fresh vs
 ~50 s behind a session's worth of orphan blocks — the round-7
 headline regression).
 
-Two eager levers, both no-ops on errors (lifecycle hygiene must never
-fail a query):
+Two eager levers, both best-effort — errors are logged, never raised
+(lifecycle hygiene must never fail a query):
 
 - :func:`release` — free ONE checkpointed DataFrame's blocks the
   moment an iteration supersedes it.  Loop bodies call
@@ -35,9 +35,12 @@ the (eagerly materialized) round *t+1* checkpoint.
 
 from __future__ import annotations
 
+import logging
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+
+logger = logging.getLogger(__name__)
 
 __all__ = ["checkpoint", "release", "release_all", "release_owned", "track"]
 
@@ -86,7 +89,7 @@ def release_owned(owner: object) -> None:
         try:
             df.unpersist()
         except Exception:
-            pass
+            logger.warning("release_owned: unpersist failed", exc_info=True)
         try:
             _TRACKED.remove(df)
         except ValueError:
@@ -105,16 +108,21 @@ def checkpoint(df: DataFrame, replacing: DataFrame | None = None) -> DataFrame:
 def release(df: DataFrame | None) -> None:
     """Free the BlockManager storage behind a ``localCheckpoint``-ed
     DataFrame immediately (instead of waiting for py4j + ContextCleaner
-    garbage collection).  No-op for non-checkpointed frames and on any
-    JVM error."""
+    garbage collection).  No-op for non-checkpointed frames; a JVM
+    error is logged."""
     if df is None:
         return
     try:
         # the plan of a checkpointed Dataset is a LogicalRDD; its rdd()
         # accessor is the materialized RDD[InternalRow] holding the blocks
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        rdd = df._jdf.queryExecution().analyzed().rdd()
     except Exception:
-        pass
+        logger.debug("release: frame is not checkpointed", exc_info=True)
+        return
+    try:
+        rdd.unpersist(False)
+    except Exception:
+        logger.warning("release: unpersist failed", exc_info=True)
 
 
 def release_all(spark: SparkSession) -> None:
@@ -127,13 +135,13 @@ def release_all(spark: SparkSession) -> None:
         try:
             df.unpersist()
         except Exception:
-            pass
+            logger.warning("release_all: unpersist of a tracked frame failed", exc_info=True)
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         for jrdd in list(jmap.values()):
             try:
                 jrdd.unpersist(False)
             except Exception:
-                pass
+                logger.warning("release_all: unpersist of an RDD failed", exc_info=True)
     except Exception:
-        pass
+        logger.warning("release_all: listing persistent RDDs failed", exc_info=True)

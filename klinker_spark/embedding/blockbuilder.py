@@ -5,12 +5,12 @@ blockbuilder.py`` — kNN builders over kiez/Faiss (J8/M18, ``:51-207``)
 and HDBSCAN cluster blocks (M14, ``:286-436``).
 
 Spark-first mapping:
-- exact kNN = broadcast cross-join + per-query window top-k
-  (``functions.vectors.topk_cosine_join``);
+- exact kNN = the broadcast-matmul kernel, queries streamed through
+  ``mapInPandas`` (``functions.vectors.topk_cosine_join``);
 - approximate kNN at scale = MLlib ``BucketedRandomProjectionLSH`` on
   L2-normalized vectors (cosine ≡ euclidean on the unit sphere), an
   ``approxSimilarityJoin`` + window top-k — fully distributed, unlike
-  the reference's driver-side Faiss index;
+  the reference's driver-side Faiss index (``ops.similarity.ann_topk_lsh``);
 - cluster blocks = MLlib ``KMeans`` (scalable stand-in for HDBSCAN,
   which is driver-side in the reference too; the cluster→blocks step is
   the A1 aggregate either way).
@@ -27,23 +27,27 @@ from pyspark.sql import functions as F
 
 from ..data.blocks import BlockManager
 from ..functions.vectors import topk_cosine_join
+from ..ops.similarity import ann_topk_lsh, csls_topk, mutual_rank_topk
 
 __all__ = ["KNNBlockBuilder", "LSHKNNBlockBuilder", "ClusterBlockBuilder"]
 
 
 def _nn_to_blocks(nn: DataFrame, left_name: str, right_name: str) -> BlockManager:
     """``(query_id, neighbor_id, rank)`` → blocks keyed by left id
-    (NN-block normalization, ``blocks.py:466-557``): one key frame per
-    side, arrays only on demand."""
-    lk = nn.select(
-        F.col("query_id").alias("block_key"), F.col("query_id").alias("id")
-    ).dropDuplicates(["block_key"])
-    rk = nn.select(F.col("query_id").alias("block_key"), F.col("neighbor_id").alias("id"))
-    return BlockManager.from_key_assignments(
-        # every key carries its query id on the left and its neighbors
-        # on the right — effective by construction
-        lk, rk, left_name, right_name, assume_distinct=True, keys_effective=True
+    (NN-block normalization, ``blocks.py:466-557``): ONE group-by over
+    the neighbour table; both key frames are ``explode`` projections of
+    it.  Every block keeps a neighbour, so the keys are effective, and
+    the size filter keeps the left frame reading the arrays too: both
+    frames share one exchange and the kNN kernel runs once per action."""
+    arrays = (
+        nn.where(F.col("query_id").isNotNull())
+        .groupBy(F.col("query_id").alias("block_key"))
+        .agg(F.array_sort(F.collect_set("neighbor_id")).alias(right_name))
+        .where(F.size(right_name) > 0)
+        .select("block_key", F.array("block_key").alias(left_name), right_name)
     )
+    lk, rk = (arrays.select("block_key", F.explode(c).alias("id")) for c in (left_name, right_name))
+    return BlockManager(arrays, left_name, right_name, lk, rk, keys_effective=True)
 
 
 class KNNBlockBuilder:
@@ -63,19 +67,9 @@ class KNNBlockBuilder:
     def build_blocks(
         self, left_emb: DataFrame, right_emb: DataFrame, left_name: str, right_name: str
     ) -> BlockManager:
-        # Persist both sides before the O(|L|·|R|) join: encoder outputs
-        # are lazy expression pipelines (hash pooling, AE projections —
-        # interpreted higher-order functions), and project-collapsing
-        # would inline them into the per-pair similarity, recomputing
-        # each vector |other side| times.  Measured 19s → 2s on the
-        # sf0.1 deepblocker query.  Tiny tables: (id, vector) rows.
-        left_emb = left_emb.persist()
-        right_emb = right_emb.persist()
         if self.hubness is None:
             nn = topk_cosine_join(left_emb, right_emb, k=self.k, vec_col="vector")
         else:
-            from ..ops.similarity import csls_topk, mutual_rank_topk
-
             fn = csls_topk if self.hubness == "csls" else mutual_rank_topk
             nn = fn(
                 left_emb,
@@ -115,33 +109,18 @@ class LSHKNNBlockBuilder:
     def build_blocks(
         self, left_emb: DataFrame, right_emb: DataFrame, left_name: str, right_name: str
     ) -> BlockManager:
-        from pyspark.ml.feature import BucketedRandomProjectionLSH, Normalizer
-        from pyspark.ml.functions import array_to_vector
-        from pyspark.sql import Window
-
-        def prep(df: DataFrame) -> DataFrame:
-            v = df.select(
-                "id", array_to_vector(F.col("vector").cast("array<double>")).alias("raw")
-            )
-            return Normalizer(inputCol="raw", outputCol="features", p=2.0).transform(v)
-
-        l, r = prep(left_emb), prep(right_emb)
-        lsh = BucketedRandomProjectionLSH(
-            inputCol="features",
-            outputCol="hashes",
-            bucketLength=self.bucket_length,
-            numHashTables=self.num_hash_tables,
+        nn = ann_topk_lsh(
+            left_emb,
+            right_emb,
+            k=self.k,
+            id_col="id",
+            vec_col="vector",
+            num_hash_tables=self.num_hash_tables,
+            bucket_length=self.bucket_length,
+            distance_threshold=self.distance_threshold,
             seed=self.seed,
-        ).fit(l)
-        joined = lsh.approxSimilarityJoin(l, r, self.distance_threshold, distCol="dist")
-        nn = joined.select(
-            F.col("datasetA.id").alias("query_id"),
-            F.col("datasetB.id").alias("neighbor_id"),
-            F.col("dist"),
         )
-        w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("neighbor_id").asc())
-        topk = nn.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= self.k)
-        return _nn_to_blocks(topk, left_name, right_name)
+        return _nn_to_blocks(nn, left_name, right_name)
 
 
 class ClusterBlockBuilder:

@@ -94,21 +94,6 @@ def propagate(
     measured at dim 32 the positional array accesses leave codegen and
     wide LOSES (see the constant's note), so the crossover is low.
     """
-    # The edge list (plus its degree-normalization joins) appears once
-    # per hop in the lazy plan — persist so the union/distinct/degree
-    # pipeline runs once, not ``depth`` times.  Standard iterative-graph
-    # practice (GraphX does the same); memory is O(|edges|) rows of
-    # (head, tail, w).  r12: the cached copy is pre-partitioned on the
-    # per-hop join key, so every hop's edge join consumes the cached
-    # hash layout exchange-free (a bare persist kept whatever upstream
-    # layout existed and re-shuffled |E| per hop).
-    if depth > 1:
-        spark = edges.sparkSession
-        try:
-            part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            part = spark.sparkContext.defaultParallelism
-        edges = edges.repartition(part, "tail").persist()
     # dim comes from the caller (encoders know it) — probing it with a
     # .first() action would re-execute the whole upstream encoder
     # pipeline once per encode (measured +20 s cold on the sf0.1 gcn
@@ -120,6 +105,7 @@ def propagate(
     if layout == "wide" and not dim:
         row = features.select(F.size("vector").alias("d")).first()
         dim = int(row["d"]) if row and row["d"] is not None else 0
+    # every hop reads this same ``edges`` frame: exchange reuse shuffles it once
     if layout == "wide" and dim:
         feat = features
         for _ in range(depth):
@@ -217,7 +203,9 @@ class GCNFrameEncoder:
     def _edges(self, rels: DataFrame) -> DataFrame:
         return _gcn_edges(rels).select("head", "tail", "w")
 
-    def encode(self, conc: DataFrame, rels: DataFrame) -> DataFrame:
+    def _features0(self, conc: DataFrame, rels: DataFrame) -> DataFrame:
+        """Attribute vectors for every graph node, hash-init where the
+        attribute frame has none (M10)."""
         attr_vec = self.attr_encoder.encode(conc)
         ids = (
             conc.select("id")
@@ -225,7 +213,10 @@ class GCNFrameEncoder:
             .union(rels.select(F.col("tail").alias("id")))
             .distinct()
         )
-        feat0 = initialize_and_fill(ids, attr_vec, self.dim, self.seed, self.hash_fn)
+        return initialize_and_fill(ids, attr_vec, self.dim, self.seed, self.hash_fn)
+
+    def encode(self, conc: DataFrame, rels: DataFrame) -> DataFrame:
+        feat0 = self._features0(conc, rels)
         return propagate(
             feat0, self._edges(rels), depth=self.depth, normalize=False, dim=self.dim
         )
@@ -242,18 +233,9 @@ class RelationAwarePropagationEncoder(GCNFrameEncoder):
     def encode(self, conc: DataFrame, rels: DataFrame) -> DataFrame:
         from .hashing import token_vector_expr
 
-        attr_vec = self.attr_encoder.encode(conc)
-        ids = (
-            conc.select("id")
-            .union(rels.select(F.col("head").alias("id")))
-            .union(rels.select(F.col("tail").alias("id")))
-            .distinct()
-        )
-        feat0 = initialize_and_fill(ids, attr_vec, self.dim, self.seed, self.hash_fn)
+        feat0 = self._features0(conc, rels)
 
         edges = _gcn_edges(rels)  # (head, rel, tail, w)
-        if self.depth > 1:
-            edges = edges.persist()  # reused every hop, same as propagate()
         rel_dims = (
             edges.select("rel")
             .distinct()
@@ -326,14 +308,7 @@ class LightEAEncoder(GCNFrameEncoder):
         self.include_initial = include_initial
 
     def encode(self, conc: DataFrame, rels: DataFrame) -> DataFrame:
-        attr_vec = self.attr_encoder.encode(conc)
-        ids = (
-            conc.select("id")
-            .union(rels.select(F.col("head").alias("id")))
-            .union(rels.select(F.col("tail").alias("id")))
-            .distinct()
-        )
-        feat0 = initialize_and_fill(ids, attr_vec, self.dim, self.seed, self.hash_fn)
+        feat0 = self._features0(conc, rels)
 
         trip = (
             rels.select(
@@ -357,18 +332,6 @@ class LightEAEncoder(GCNFrameEncoder):
         )
         rel_ent = trip.select("r", F.col("head").alias("id")).distinct()
         ent_rel = trip.select(F.col("tail").alias("id"), "r").distinct()
-        if self.depth > 1:
-            # r12: each loop-invariant table caches pre-partitioned on
-            # ITS per-hop join key — exchange-free hop joins (see
-            # propagate())
-            spark = rels.sparkSession
-            try:
-                part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            except Exception:
-                part = spark.sparkContext.defaultParallelism
-            ee = ee.repartition(part, "dst").persist()
-            rel_ent = rel_ent.repartition(part, "id").persist()
-            ent_rel = ent_rel.repartition(part, "r").persist()
 
         def l2(df: DataFrame, key: str) -> DataFrame:
             n = df.groupBy(key).agg(

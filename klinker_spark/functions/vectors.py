@@ -556,21 +556,20 @@ def topk_cosine_join(
     index_id: str = "id",
     vec_col: str = "vector",
     dim: int | None = None,
-    impl: str = "auto",
+    impl: str = "matmul",
 ) -> DataFrame:
     """Exact brute-force top-k cosine neighbors (J8 baseline / W4).
 
     Output: ``(query_id, neighbor_id, sim, rank)`` with rank 1..k,
     deterministic tie-break on neighbor id.
 
-    ``impl``: ``"matmul"`` (Arrow + broadcast numpy matrix, see
-    :func:`topk_cosine_matmul`), ``"sharded"`` (broadcast queries,
-    stream index partitions — exact search for indexes too big to
-    broadcast, see :func:`topk_cosine_sharded`), ``"expr"`` (pure-SQL
-    broadcast cross-join + window — the oracle baseline, keeps
-    everything in Catalyst), or ``"auto"`` (matmul — it wins at every
-    size where the index fits a broadcast; expr remains for oracle
-    parity and NaN/null edge semantics).
+    ``impl``: ``"matmul"`` (default; Arrow + broadcast numpy matrix,
+    see :func:`topk_cosine_matmul` — it wins at every size where the
+    index fits a broadcast), ``"sharded"`` (broadcast queries, stream
+    index partitions — exact search for indexes too big to broadcast,
+    see :func:`topk_cosine_sharded`), or ``"expr"`` (pure-SQL broadcast
+    cross-join + window — the oracle baseline, keeps everything in
+    Catalyst, for oracle parity and NaN/null edge semantics).
 
     Expr plan: broadcast the index side (small-dim embedding tables up
     to a few hundred MB broadcast fine), cross-join, per-query window
@@ -581,15 +580,16 @@ def topk_cosine_join(
     LSH-bucketed path (``ops.similarity.ann_topk_lsh``) or shard the
     index and union per-shard top-k before the final window.
 
-    CALLER NOTE: if either side is an expensive *expression pipeline*
-    (e.g. a projection of higher-order functions), persist it first —
+    CALLER NOTE: only the ``expr`` path needs a persisted input.  If
+    either side is an expensive *expression pipeline* (e.g. a
+    projection of higher-order functions), persist it first —
     Catalyst's project-collapsing inlines lazy projections into the
     per-pair similarity, recomputing them |L|·|R| times instead of
-    |L|+|R| (see ``KNNBlockBuilder.build_blocks``).
+    |L|+|R|.  The matmul and sharded kernels read each side once.
     """
-    if impl not in ("auto", "expr", "matmul", "sharded"):
-        raise ValueError(f"impl must be auto|expr|matmul|sharded, got {impl!r}")
-    if impl in ("auto", "matmul"):
+    if impl not in ("expr", "matmul", "sharded"):
+        raise ValueError(f"impl must be expr|matmul|sharded, got {impl!r}")
+    if impl == "matmul":
         return topk_cosine_matmul(
             queries, index, k=k, query_id=query_id, index_id=index_id, vec_col=vec_col
         )

@@ -47,7 +47,7 @@ def brute_force_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "auto",
+    impl: str = "matmul",
 ) -> DataFrame:
     q = queries.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vector"))
     ix = index.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vector"))
@@ -134,7 +134,7 @@ def csls_topk(
     n_candidates: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "auto",
+    impl: str = "matmul",
 ) -> DataFrame:
     """Hubness-reduced kNN via CSLS (M18 — the reference's kiez
     ``hubness="csls"`` option, ``blockers/embedding/blockbuilder.py:
@@ -182,7 +182,7 @@ def nicdm_topk(
     n_candidates: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "auto",
+    impl: str = "matmul",
 ) -> DataFrame:
     """Hubness-reduced kNN via NICDM local scaling (M18 — kiez's
     ``hubness="nicdm"``; Schnitzer et al. 2012, "Local and Global
@@ -238,7 +238,7 @@ def mutual_rank_topk(
     n_candidates: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "auto",
+    impl: str = "matmul",
 ) -> DataFrame:
     """Hubness-reduced kNN via mutual rank (M18 — the rank-based
     reduction family in kiez, e.g. mutual proximity).
@@ -908,7 +908,7 @@ def margin_bitext_mine(
     k: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "auto",
+    impl: str = "matmul",
 ) -> DataFrame:
     """Margin-based parallel-text / hard-negative mining (Artetxe &
     Schwenk 2019, the LASER bitext miner): for every left vector, the

@@ -99,9 +99,9 @@ def embedding_knn_blocking_md5(spark, sf_dir):
     from ..functions.vectors import topk_cosine_join
 
     enc = HashingWordEmbedder(dim=8, hash_fn="md5")
-    left = enc.encode(
-        _cust_frame(spark, sf_dir).concat_values()
-    ).persist()  # encoder outputs feed the pair join — see KNNBlockBuilder
+    # the expr path inlines lazy encoder projections into the per-pair
+    # similarity — see topk_cosine_join's CALLER NOTE
+    left = enc.encode(_cust_frame(spark, sf_dir).concat_values()).persist()
     right = enc.encode(_supp_frame(spark, sf_dir).concat_values()).persist()
     out = topk_cosine_join(left, right, k=3, impl="expr")
     return out.withColumn("sim", F.round("sim", 6))

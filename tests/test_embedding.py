@@ -51,11 +51,36 @@ def test_topk_cosine_exact(left_emb, right_emb):
 
 
 def test_knn_blocks_shape(left_emb, right_emb):
-    bm = KNNBlockBuilder(k=2).build_blocks(left_emb, right_emb, "A", "B")
-    rows = bm.df.collect()
-    assert len(rows) == 4  # one block per left entity
-    for r in rows:
-        assert len(r["A"]) == 1 and len(r["B"]) == 2  # (1, k) shape
+    for builder in (
+        KNNBlockBuilder(k=2),
+        KNNBlockBuilder(k=2, hubness="csls"),
+        LSHKNNBlockBuilder(k=2),
+    ):
+        bm = builder.build_blocks(left_emb, right_emb, "A", "B")
+        rows = bm.df.collect()
+        if isinstance(builder, KNNBlockBuilder):
+            assert len(rows) == 4  # one block per left entity
+            for r in rows:
+                assert len(r["A"]) == 1 and len(r["B"]) == 2  # (1, k) shape
+        # the array layout and the key-frame pairs describe the same blocks
+        exploded = {(a, b) for r in rows for a in r["A"] for b in r["B"]}
+        assert exploded and exploded == {tuple(r) for r in bm.pairs().collect()}
+
+
+@pytest.mark.parametrize(
+    "query", ["embedding_knn_blocking", "gcn_embedding_blocking", "lightea_embedding_blocking"]
+)
+def test_embedding_blocking_queries_are_cache_free(spark, query):
+    """The embedding block path persists nothing: a full write of the
+    query adds no persistent RDD, without any release_all.  (Compared
+    as id sets: earlier tests' caches may be cleaned up meanwhile.)"""
+    from conftest import SF_DIR
+
+    from klinker_spark.queries import QUERIES
+
+    before = set(spark.sparkContext._jsc.getPersistentRDDs())
+    QUERIES[query](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    assert set(spark.sparkContext._jsc.getPersistentRDDs()) - before == set()
 
 
 def test_lsh_knn_matches_same_cluster(left_emb, right_emb):

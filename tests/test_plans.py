@@ -74,6 +74,26 @@ def test_knn_broadcasts_index(spark, sf_dir):
     assert "PushedFilters: [IsNotNull(vec_id)]" in eplan
 
 
+def test_knn_blocks_run_the_kernel_once(spark):
+    """Both key frames of a kNN block manager are projections of one
+    group-by over the neighbour table, so exchange reuse runs the
+    matmul kernel once per action."""
+    from klinker_spark.embedding.blockbuilder import KNNBlockBuilder
+
+    left = spark.createDataFrame(
+        [(f"l{i}", [float(i), 1.0]) for i in range(6)], ["id", "vector"]
+    )
+    right = spark.createDataFrame(
+        [(f"r{i}", [1.0, float(i)]) for i in range(6)], ["id", "vector"]
+    )
+    out = KNNBlockBuilder(k=2).build_blocks(left, right, "A", "B").pairs()
+    assert len(out.collect()) == 12
+    final = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final
+    final = final.split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas") == 1, final
+
+
 def test_windowed_counts_partial_aggregation(spark, sf_dir):
     from klinker_spark.queries import QUERIES
 
