@@ -68,12 +68,20 @@ def test_knn_blocks_shape(left_emb, right_emb):
 
 
 @pytest.mark.parametrize(
-    "query", ["embedding_knn_blocking", "gcn_embedding_blocking", "lightea_embedding_blocking"]
+    "query",
+    [
+        "embedding_knn_blocking",
+        "gcn_embedding_blocking",
+        "lightea_embedding_blocking",
+        "lightea_propagation_md5",
+    ],
 )
 def test_embedding_blocking_queries_are_cache_free(spark, query):
-    """The embedding block path persists nothing: a full write of the
-    query adds no persistent RDD, without any release_all.  (Compared
-    as id sets: earlier tests' caches may be cleaned up meanwhile.)"""
+    """The embedding block path and the propagation encoders
+    (``lightea_propagation_md5`` runs LightEAEncoder alone) persist
+    nothing: a full write of the query adds no persistent RDD, without
+    any release_all.  (Compared as id sets: earlier tests' caches may
+    be cleaned up meanwhile.)"""
     from conftest import SF_DIR
 
     from klinker_spark.queries import QUERIES
