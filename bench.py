@@ -491,7 +491,7 @@ def _bucketed_events() -> dict:
 
 def main() -> None:
     from klinker_spark.queries import QUERIES
-    from klinker_spark.session import get_spark
+    from klinker_spark.session import codegen_compiles, get_spark
 
     spark = get_spark("bench")
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
@@ -530,6 +530,7 @@ def main() -> None:
     load_start = os.getloadavg()
     timings: dict[str, float] = {}
     warm: dict[str, float] = {}
+    last_compiles = codegen_compiles(spark)
     # Between queries: clear caches AND force a JVM GC.  A 50-query
     # session accumulates broadcasts/codegen classes until GC pressure
     # inflates later queries (~2x measured on contamination_check:
@@ -538,6 +539,7 @@ def main() -> None:
     # pipeline never sees this, so timing WITH the hygiene reflects
     # real per-query cost.  The gc happens outside the timed window.
     def _reset():
+        nonlocal last_compiles
         spark.catalog.clearCache()
         # EXPLICITLY drop every persistent RDD (localCheckpoint blocks
         # + leaked persists).  The r7 gc.collect() approach was not
@@ -575,8 +577,13 @@ def main() -> None:
                 for f in fs
             ) >> 20
             n_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
+            # generated-code compiles since the previous reset
+            compiles = codegen_compiles(spark)
+            n_cg, cg_ms = (now - last for now, last in zip(compiles, last_compiles))
+            last_compiles = compiles
             print(
-                f"## diag heap={heap_mb}MB shuffle={shuffle_mb}MB rdds={n_rdds}",
+                f"## diag heap={heap_mb}MB shuffle={shuffle_mb}MB rdds={n_rdds} "
+                f"codegen={n_cg} codegen_ms={cg_ms}",
                 file=sys.stderr,
             )
 

@@ -31,10 +31,14 @@ use it for RANKING, not for a probability distribution.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..ckpt import release as _free
+
+logger = logging.getLogger(__name__)
 
 __all__ = [
     "pagerank",
@@ -69,6 +73,14 @@ ITER_PARTITIONED_EDGE_MIN = 2_000_000
 #: single-shuffle window wins (measured 4.5 s → 1.6 s at sf0.1).
 OUTDEG_WINDOW_MAX_TASK_ROWS = 5_000_000
 _OUTDEG_PROBE_FRACTION = 0.01
+
+
+def _unpersist(df: DataFrame) -> None:
+    """Best-effort unpersist of a cached (not checkpointed) frame."""
+    try:
+        df.unpersist()
+    except Exception:
+        logger.debug("unpersist failed", exc_info=True)
 
 
 def pagerank(
@@ -189,14 +201,8 @@ def pagerank(
         # empty graph: the |V| literal would constant-fold into an
         # ANSI divide-by-zero at PLANNING time (unlike the old
         # column-based division, which no row ever evaluated)
-        try:
-            nodes.unpersist()
-        except Exception:
-            pass
-        try:
-            edges_w.unpersist()
-        except Exception:
-            pass
+        _unpersist(nodes)
+        _unpersist(edges_w)
         return nodes.select(
             "node",
             F.lit(None).cast("bigint").alias("rank_micro"),
@@ -310,10 +316,7 @@ def pagerank(
         # the final ranks materialize
         if prev is not None:
             _free(prev)
-            try:
-                prev.unpersist()
-            except Exception:
-                pass
+            _unpersist(prev)
     tele_n, init_n = _tele_init_for("node")
     if summed is None:  # iters == 0: the init vector is the answer
         ranks = nodes.select("node", init_n.alias("rank_micro"))
@@ -341,18 +344,9 @@ def pagerank(
     ranks = ranks.localCheckpoint(eager=True)
     if summed is not None:
         _free(summed)  # broadcast path: checkpoint blocks
-        try:
-            summed.unpersist()  # shuffle path: cached blocks
-        except Exception:
-            pass
-    try:
-        edges_w.unpersist()  # cached, not checkpointed — plain unpersist
-    except Exception:
-        pass
-    try:
-        nodes.unpersist()  # cached, not checkpointed (r13)
-    except Exception:
-        pass
+        _unpersist(summed)  # shuffle path: cached blocks
+    _unpersist(edges_w)
+    _unpersist(nodes)
     return ranks.select(
         "node", "rank_micro", F.round(F.col("rank_micro") / 1e6, 6).alias("rank")
     )
@@ -623,10 +617,7 @@ def label_propagation(
         )
         _free(prev)
     if adj is not adj0:
-        try:
-            adj.unpersist()  # cached, not checkpointed — plain unpersist
-        except Exception:
-            pass
+        _unpersist(adj)
     _free(adj0)
     return labels.select("node", F.col("lab").alias("community"))
 
@@ -767,10 +758,7 @@ def bfs_distances(
         _free(dist)
         dist, frontier = new_dist, nxt
     if e is not e0:
-        try:
-            e.unpersist()  # cached, not checkpointed — plain unpersist
-        except Exception:
-            pass
+        _unpersist(e)
     _free(e0)
     return dist
 
@@ -863,10 +851,7 @@ def hits(
         _free(e0)
     else:
         for cached in (e_by_p, e_by_c):
-            try:
-                cached.unpersist()
-            except Exception:
-                pass
+            _unpersist(cached)
     return hn.select(
         F.col("c").alias("node"), F.lit("hub").alias("kind"), F.col("score").alias("score_ppm")
     ).unionAll(

@@ -12,11 +12,39 @@ raised to ~2-3x total cores; AQE coalesces the excess at runtime.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "local_df", "warm_python_workers", "widen_for_kernel"]
+__all__ = [
+    "CODEGEN_CACHE_ENTRIES",
+    "codegen_compiles",
+    "get_spark",
+    "local_df",
+    "warm_python_workers",
+    "widen_for_kernel",
+]
+
+logger = logging.getLogger(__name__)
+
+#: Entries in Spark's generated-class cache
+#: (``spark.sql.codegen.cache.maxEntries``, default 100).
+CODEGEN_CACHE_ENTRIES = 4096
+
+
+def codegen_compiles(spark) -> tuple[int, int]:
+    """(count, total ms) of generated-code compiles in this JVM, from
+    Spark's ``CodegenMetrics`` compile-time histogram.  Its reservoir
+    keeps ~1,000 samples: the total is exact up to there and scaled
+    from the sample mean beyond."""
+    jvm = spark.sparkContext._jvm
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    count = int(hist.getCount())
+    snap = hist.getSnapshot()
+    kept = int(snap.size())
+    kept_ms = int(jvm.java.util.Arrays.stream(snap.getValues()).sum())
+    return count, kept_ms * count // kept if kept else 0
 
 
 def warm_python_workers(spark) -> None:
@@ -52,7 +80,7 @@ def warm_python_workers(spark) -> None:
         # (one boot task per worker slot); widening would be circular
         spark.range(0, cores, 1, cores).mapInPandas(boot, "n long").count()
     except Exception:
-        pass
+        logger.warning("warm_python_workers: warm-up failed", exc_info=True)
 
 
 #: Logical-plan node heads that never introduce an exchange and keep a
@@ -310,6 +338,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # one relational-token iteration generates ~165 classes; an LRU
+        # smaller than a repeating working set (default 100) misses on
+        # every entry, so each warm iteration compiled them all again
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # RocksDB state store: required by transformWithState, and the
         # at-scale choice anyway (state off-heap + incremental snapshots
         # instead of full in-heap HDFS-backed maps)

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import SparkSession
 
 from klinker_spark.data.frames import EntityFrame
+from klinker_spark.session import CODEGEN_CACHE_ENTRIES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -26,6 +27,7 @@ def spark():
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     session.sparkContext.setLogLevel("ERROR")

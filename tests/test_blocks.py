@@ -288,6 +288,40 @@ def test_composite_assign_is_lazy_and_cache_free(spark):
     assert set(sc._jsc.getPersistentRDDs()) - before == set()
 
 
+def test_composite_pipeline_rerun_compiles_no_new_code(spark, tmp_path):
+    """A rerun of the relational blocking pipeline (assign → write →
+    read → evaluate) reuses the generated classes of the first run:
+    Spark's codegen cache must hold one run's ~165 classes, or every
+    rerun compiles all of them again (the default 100-entry LRU does).
+    AQE re-plans a few stages differently depending on which stage
+    finishes first, so a rerun may still compile 0-16 new variants."""
+    from pyspark.sql import functions as F
+
+    from klinker_spark.blockers.composite import CompositeRelationalTokenBlocker
+    from klinker_spark.eval import Evaluation
+    from klinker_spark.queries.blocking_ml import composite_relational_inputs
+    from klinker_spark.session import codegen_compiles
+
+    def run(path):
+        left, right, left_rel, right_rel = composite_relational_inputs(spark, SF_DIR)
+        cust = spark.read.parquet(f"{SF_DIR}/customer.parquet")
+        supp = spark.read.parquet(f"{SF_DIR}/supplier.parquet")
+        gold = cust.join(supp, cust.c_custkey == 10 * supp.s_suppkey).select(
+            F.concat(F.lit("c"), F.col("c_custkey")), F.concat(F.lit("s"), F.col("s_suppkey"))
+        )
+        CompositeRelationalTokenBlocker().assign(left, right, left_rel, right_rel).to_parquet(path)
+        read = BlockManager.read_parquet(spark, path)
+        return Evaluation.from_blocks(
+            read, gold, left_count=left.ids(), right_count=right.ids()
+        ).to_dict()
+
+    first = run(str(tmp_path / "first"))
+    before, _ = codegen_compiles(spark)
+    assert run(str(tmp_path / "second")) == first
+    after, _ = codegen_compiles(spark)
+    assert after - before <= 30
+
+
 def test_release_caches_per_manager(spark):
     """ADVICE r10: a long-lived library consumer must be able to free
     one dead manager's caches without the harness-wide release_all —
