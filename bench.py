@@ -540,9 +540,8 @@ def main() -> None:
     # real per-query cost.  The gc happens outside the timed window.
     def _reset():
         nonlocal last_compiles
-        spark.catalog.clearCache()
-        # EXPLICITLY drop every persistent RDD (localCheckpoint blocks
-        # + leaked persists).  The r7 gc.collect() approach was not
+        # EXPLICITLY drop every cached relation and persistent RDD
+        # (localCheckpoint blocks + unscoped persists).  The r7 gc.collect() approach was not
         # enough: blocks created inside query closures stay pinned by
         # py4j refs the ContextCleaner never observes dead within the
         # session, and the orphans evict-churned later queries
@@ -592,8 +591,8 @@ def main() -> None:
     # CACHE-WARM steady-state rerun — it runs immediately after the
     # cold lap with NO reset in between, so it sees a hot JVM (JIT,
     # codegen classes), hot parquet footer caches, AND whatever
-    # persisted frames the query itself built in the cold lap (tracked
-    # combine caches, checkpoint blocks) — exactly what a consumer
+    # persisted frames the query itself built in the cold lap (unscoped
+    # caches, checkpoint blocks) — exactly what a consumer
     # re-running the same query in a live session pays.  The cold lap
     # is the post-reset first-run cost.  Under this definition
     # warm <= cold up to noise by construction; a warm row slower than

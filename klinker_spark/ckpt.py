@@ -1,141 +1,156 @@
-"""``localCheckpoint`` lifecycle management.
+"""One cache lifecycle: every ``persist`` and ``localCheckpoint`` in the
+package is made and freed here.
 
-The iterative operators (PageRank, HITS, BFS, k-core, label
-propagation, FPS coreset, Boruvka MST, connected components) truncate
-lineage per round with ``localCheckpoint(eager=True)``.  The blocks
-behind a local checkpoint live in the executor BlockManager and are
-freed only when the JVM ``ContextCleaner`` observes the RDD
-unreachable — which, from PySpark, requires the py4j reference to be
-collected on the Python side first.  In a long session (the 140-query
-bench, the driver's correctness gate) that is far too lazy: orphaned
-blocks from completed queries accumulate until memory pressure
-evict-churns later queries (measured: pagerank sf1 24 s fresh vs
-~50 s behind a session's worth of orphan blocks — the round-7
-headline regression).
+An operator that reuses an intermediate caches it with :func:`persist`
+(``df.persist()``, default level) or :func:`checkpoint` (eager
+``localCheckpoint``, which also truncates lineage).  Either call
+registers the frame with the innermost open :func:`scope`; when that
+scope exits — normally or by an exception — every frame still
+registered with it is freed::
 
-Two eager levers, both best-effort — errors are logged, never raised
-(lifecycle hygiene must never fail a query):
+    @ckpt.scope()
+    def operator(df):
+        base = ckpt.persist(df.select(...))      # freed at exit
+        out = ckpt.checkpoint(base.join(...))     # materialized result
+        return ckpt.keep(out)                     # outlives this scope
 
-- :func:`release` — free ONE checkpointed DataFrame's blocks the
-  moment an iteration supersedes it.  Loop bodies call
-  ``new = checkpoint(plan, replacing=old)`` so at most two versions
-  of the per-round state ever hold storage.
-- :func:`release_all` — drop every persistent RDD in the context;
-  harness-level (between bench queries / gate rows), where by
-  construction nothing from the previous query may be referenced
-  again.
+- :func:`keep` hands a registration to the enclosing scope: an
+  operator that returns a checkpoint keeps it alive for its caller's
+  action.
+- :func:`release` frees one registered frame now.  Iterative loops
+  free the superseded round with it, so at most two rounds of state
+  hold storage.
+- A function that returns a *lazy* plan reading its caches opens no
+  scope: its caches register with the caller's scope and live until
+  the caller's action has run.
 
-Safety: a locally-checkpointed RDD whose blocks are dropped cannot be
-recomputed (lineage is truncated — that is the point of the
-operation), so ``release`` is only correct when the caller guarantees
-the frame is dead.  Inside the iterative loops that holds by
-construction: round *t*'s state is consumed exactly once, to build
-the (eagerly materialized) round *t+1* checkpoint.
+With no scope open, :func:`persist` and :func:`checkpoint` register
+nothing; :func:`release_all` — harness-level, between independent
+queries — frees such frames along with everything else.
+
+Why free eagerly: a local checkpoint's blocks live in the executor
+BlockManager and are otherwise freed only when the JVM
+``ContextCleaner`` sees the RDD unreachable, which from PySpark needs
+the py4j reference collected first.  In a long session that is far too
+lazy: orphaned blocks accumulate until memory pressure evict-churns
+later queries (pagerank at sf1: 24 s fresh vs ~50 s behind a session's
+worth of orphan blocks).  A freed checkpoint cannot be recomputed (its
+lineage is gone), so a frame must not be released while a plan that
+still runs reads it.
+
+Freeing is best-effort: a JVM error is logged, never raised — cache
+hygiene must not fail a query.
 """
 
 from __future__ import annotations
 
+import contextlib
 import logging
-import weakref
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
 logger = logging.getLogger(__name__)
 
-__all__ = ["checkpoint", "release", "release_all", "release_owned", "track"]
+__all__ = ["scope", "persist", "checkpoint", "release", "keep", "release_all"]
 
-#: persist()-ed frames registered by library code whose cache must
-#: outlive the registering call (e.g. ``BlockManager.persisted``'s key
-#: frames, alive until the caller's last action) — released at the
-#: next harness-level :func:`release_all`.  DataFrame-level unpersist (not
-#: just the backing RDD) so the CacheManager entry goes too and later
-#: plans stop substituting the dropped InMemoryRelation.
-_TRACKED: list[DataFrame] = []
-
-#: per-owner view of ``_TRACKED`` (``id(owner)`` → frames), enabling
-#: :func:`release_owned` — the lighter per-manager lever (r10 ADVICE:
-#: a long-lived library consumer composing many managers must not
-#: depend on the harness-level release_all for cleanup).  Keyed by id
-#: with a ``weakref.finalize`` dropping the entry when the owner is
-#: collected, so the map itself never grows unboundedly; the frames of
-#: a collected-but-unreleased owner stay in ``_TRACKED`` for the next
-#: harness boundary, exactly as before.
-_OWNED: dict[int, list[DataFrame]] = {}
+#: per thread, the open scopes, innermost last; each holds its
+#: registered ``(frame, is_checkpoint)`` pairs in registration order
+_local = threading.local()
 
 
-def track(df: DataFrame, owner: object | None = None) -> DataFrame:
-    """Register a persisted frame for the next :func:`release_all`.
+def _scopes() -> list[list[tuple[DataFrame, bool]]]:
+    if not hasattr(_local, "scopes"):
+        _local.scopes = []
+    return _local.scopes
 
-    Returns the frame for call-site chaining.  Use for caches created
-    inside operator graph construction, where the creator cannot know
-    when the terminal action has consumed them.  Pass ``owner`` (the
-    object whose lifetime bounds the cache, e.g. the BlockManager the
-    frame backs) to additionally enable :func:`release_owned`."""
-    _TRACKED.append(df)
-    if owner is not None:
-        key = id(owner)
-        if key not in _OWNED:
-            _OWNED[key] = []
-            weakref.finalize(owner, _OWNED.pop, key, None)
-        _OWNED[key].append(df)
+
+def _free(df: DataFrame, is_checkpoint: bool) -> None:
+    try:
+        if is_checkpoint:
+            # a checkpointed frame's plan is a LogicalRDD; its rdd()
+            # accessor is the materialized RDD[InternalRow] holding the
+            # blocks
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        else:
+            df.unpersist()
+    except Exception:
+        logger.warning("freeing a cached frame failed", exc_info=True)
+
+
+def _register(df: DataFrame, is_checkpoint: bool) -> DataFrame:
+    scopes = _scopes()
+    if scopes:
+        scopes[-1].append((df, is_checkpoint))
     return df
 
 
-def release_owned(owner: object) -> None:
-    """Unpersist every frame :func:`track`-ed with this ``owner`` and
-    drop it from the harness registry.  Safe once the owner is dead
-    (its terminal action consumed); idempotent."""
-    for df in _OWNED.pop(id(owner), []) or []:
-        try:
-            df.unpersist()
-        except Exception:
-            logger.warning("release_owned: unpersist failed", exc_info=True)
-        try:
-            _TRACKED.remove(df)
-        except ValueError:
-            pass
+def _unregister(df: DataFrame | None) -> tuple[int, tuple[DataFrame, bool]] | None:
+    """Remove ``df``'s registration from the innermost scope holding
+    it; returns that scope's depth and the entry, or None."""
+    scopes = _scopes()
+    for depth in range(len(scopes) - 1, -1, -1):
+        for i, (frame, _) in enumerate(scopes[depth]):
+            if frame is df:
+                return depth, scopes[depth].pop(i)
+    return None
 
 
-def checkpoint(df: DataFrame, replacing: DataFrame | None = None) -> DataFrame:
-    """Eager ``localCheckpoint``; optionally free the superseded round's
-    blocks once the new ones are materialized."""
-    out = df.localCheckpoint(eager=True)
-    if replacing is not None:
-        release(replacing)
-    return out
+@contextlib.contextmanager
+def scope():
+    """Own the caches made while open; free them on exit, errors
+    included.  Usable as ``with ckpt.scope():`` or ``@ckpt.scope()``."""
+    frames: list[tuple[DataFrame, bool]] = []
+    scopes = _scopes()
+    scopes.append(frames)
+    try:
+        yield
+    finally:
+        # by identity: two scopes' lists may compare equal
+        scopes[:] = [s for s in scopes if s is not frames]
+        while frames:
+            _free(*frames.pop())
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()`` at the default level, registered with the
+    innermost open scope."""
+    return _register(df.persist(), False)
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eager ``localCheckpoint``, registered with the innermost open
+    scope."""
+    return _register(df.localCheckpoint(eager=True), True)
 
 
 def release(df: DataFrame | None) -> None:
-    """Free the BlockManager storage behind a ``localCheckpoint``-ed
-    DataFrame immediately (instead of waiting for py4j + ContextCleaner
-    garbage collection).  No-op for non-checkpointed frames; a JVM
-    error is logged."""
-    if df is None:
-        return
-    try:
-        # the plan of a checkpointed Dataset is a LogicalRDD; its rdd()
-        # accessor is the materialized RDD[InternalRow] holding the blocks
-        rdd = df._jdf.queryExecution().analyzed().rdd()
-    except Exception:
-        logger.debug("release: frame is not checkpointed", exc_info=True)
-        return
-    try:
-        rdd.unpersist(False)
-    except Exception:
-        logger.warning("release: unpersist failed", exc_info=True)
+    """Free one registered frame now.  No-op for None or a frame no
+    open scope holds."""
+    found = _unregister(df)
+    if found is not None:
+        _free(*found[1])
+
+
+def keep(df: DataFrame) -> DataFrame:
+    """Move ``df``'s registration to the scope enclosing the one that
+    holds it (with none, the frame is left for :func:`release_all`).
+    Returns ``df`` for ``return ckpt.keep(out)``."""
+    found = _unregister(df)
+    if found is not None and found[0] > 0:
+        _scopes()[found[0] - 1].append(found[1])
+    return df
 
 
 def release_all(spark: SparkSession) -> None:
-    """Unpersist EVERY persistent RDD in the context — localCheckpoint
-    blocks and leaked ``persist()``s alike.  Only safe between
-    independent units of work (bench queries, gate rows): afterwards,
-    any still-held checkpointed frame is unusable."""
-    while _TRACKED:
-        df = _TRACKED.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            logger.warning("release_all: unpersist of a tracked frame failed", exc_info=True)
+    """Drop every cached relation and unpersist EVERY persistent RDD in
+    the context — local-checkpoint blocks and unscoped persists alike.
+    Only safe between independent units of work (bench queries, gate
+    rows): afterwards, any still-held checkpointed frame is unusable."""
+    try:
+        spark.catalog.clearCache()
+    except Exception:
+        logger.warning("release_all: clearing the cache failed", exc_info=True)
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         for jrdd in list(jmap.values()):

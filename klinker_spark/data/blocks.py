@@ -270,55 +270,6 @@ class BlockManager:
             return kf.select("id")
         return self.df.select(F.explode(F.col(side)).alias("id"))
 
-    def persisted(self, effective: bool = False) -> "BlockManager":
-        """Cache + materialize the manager's backing frames NOW — for a
-        caller that runs several actions on one manager.  Key-frame
-        managers persist the two assignment tables (never building the
-        array cells at all); df-layout managers persist the block table.
-
-        ``effective=True`` persists the block-filtered frames instead of
-        the raw assignments.  Both frames materialize in a single job
-        (union-count) rather than two serial actions.
-
-        The persisted frames register with
-        :func:`klinker_spark.ckpt.release_all`; :meth:`release_caches`
-        frees them per manager.
-        """
-        from ..ckpt import track
-
-        if self.left_keys is not None:
-            lk, rk = self.effective_keys() if effective else (self.left_keys, self.right_keys)
-            lk, rk = lk.persist(), rk.persist()
-            out = BlockManager(
-                None,
-                self.left_name,
-                self.right_name,
-                lk,
-                rk,
-                keys_effective=effective or self.keys_effective,
-            )
-            track(lk, owner=out)
-            track(rk, owner=out)
-            lk.unionByName(rk).count()
-            return out
-        df = self.df.persist()
-        out = BlockManager(df, self.left_name, self.right_name)
-        track(df, owner=out)
-        df.count()
-        return out
-
-    def release_caches(self) -> None:
-        """Unpersist the cached frames THIS manager registered
-        (:meth:`persisted`) and drop them from the harness registry —
-        the per-manager cleanup lever: a long-lived library consumer
-        composing many managers calls this when a manager is dead
-        instead of relying on the harness-level
-        :func:`klinker_spark.ckpt.release_all`.  Safe only after the
-        manager's last action; idempotent."""
-        from ..ckpt import release_owned
-
-        release_owned(self)
-
     # ---------------------------------------------------------------- combine
     @classmethod
     def combine_all(cls, managers: list["BlockManager"]) -> "BlockManager":
@@ -334,8 +285,9 @@ class BlockManager:
         join sees two co-partitioned sides.  Both sides read the same
         exchange, so exchange reuse computes the stacked frame once in
         the terminal action — nothing is cached and no job runs here.
-        A caller running several actions on the result calls
-        :meth:`persisted` on it.
+        A caller running several actions on the result caches its
+        frames with :func:`klinker_spark.ckpt.persist` inside a
+        :func:`klinker_spark.ckpt.scope`.
 
         Semantics == chained array combines: a key's members are the
         union of its members from every branch where it is two-sided,

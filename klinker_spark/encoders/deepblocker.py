@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import ckpt
 from .hashing import HashingWordEmbedder
 
 __all__ = [
@@ -85,8 +86,8 @@ class AutoencoderFrameEncoder:
     def fit_encode(self, left_conc: DataFrame, right_conc: DataFrame):
         # each side feeds both the SVD sample and the final projection —
         # persist so the encode pipeline runs once per side
-        left_emb = self.attr_encoder.encode(left_conc).persist()
-        right_emb = self.attr_encoder.encode(right_conc).persist()
+        left_emb = ckpt.persist(self.attr_encoder.encode(left_conc))
+        right_emb = ckpt.persist(self.attr_encoder.encode(right_conc))
         both = left_emb.unionByName(right_emb)
         comps = self._components(both)
         proj = lambda df: df.select("id", _project_expr(F.col("vector"), comps).alias("vector"))

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import ckpt
 from ..functions.text import tokenize
 
 __all__ = [
@@ -156,7 +157,7 @@ def remove_first_pc(embeddings: DataFrame, sample_n: int = 10_000, seed: int = 4
     # Diamond dependency: the embedding pipeline feeds both the SVD
     # sample and the final projection — persist so the (often expensive)
     # encode runs once, as the reference persists reused intermediates.
-    embeddings = embeddings.persist()
+    embeddings = ckpt.persist(embeddings)
     sample = embeddings.orderBy(F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(1 << 31))).limit(
         sample_n
     )

@@ -42,6 +42,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import ckpt
+
 __all__ = [
     "funnel_steps",
     "retention_cohorts",
@@ -51,6 +53,7 @@ __all__ = [
 ]
 
 
+@ckpt.scope()
 def funnel_steps(
     events: DataFrame,
     steps: Sequence[str],
@@ -94,13 +97,10 @@ def funnel_steps(
                 .groupBy(user_col)
                 .agg(F.min(key).alias("_reached"))
             )
-        reached = reached.persist()
+        reached = ckpt.persist(reached)
         counts.append((idx + 1, ev_type, reached.count()))
-        if prev is not None:
-            prev.unpersist()
+        ckpt.release(prev)
         prev = reached
-    if prev is not None:
-        prev.unpersist()
     base = counts[0][2]
     spark = events.sparkSession
     # integer half-up ppm: (2e6·n + base) // (2·base) — no float round,

@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import ckpt
 from ..functions.text import tokenize
 
 #: symbol separator inside the padded symbol string (two spaces).
@@ -111,6 +112,7 @@ def _pair_counts(rep: DataFrame) -> DataFrame:
     )
 
 
+@ckpt.scope()
 def bpe_train(
     docs: DataFrame, text_col: str = "text", iters: int = 8
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
@@ -128,7 +130,7 @@ def bpe_train(
     oracle (``queries.py``) bit-exact.
     """
     vocab = word_vocab(docs, text_col)
-    rep_base = vocab.withColumn("syms", _initial_syms("w")).persist()
+    rep_base = ckpt.persist(vocab.withColumn("syms", _initial_syms("w")))
     rep_base.count()  # materialize once; iterations rebuild only the replace tower
     rep = rep_base
 
@@ -147,14 +149,11 @@ def bpe_train(
         pat = f" {a}{SEP}{b} "
         repl = f" {a}{b} "
         rep = rep.withColumn("syms", F.replace("syms", F.lit(pat), F.lit(repl)))
-    # Materialize the final (vocab-sized) segmentation and release the
-    # training cache HERE: consumers hold only a checkpoint-backed frame,
-    # so no corpus-derived cache block outlives training.  (Calling
-    # .unpersist() on the returned derived frame is a no-op — the cache
-    # lives on the pre-loop base.)
-    rep = rep.localCheckpoint(eager=True)
-    rep_base.unpersist()
-    return merges, rep
+    # Materialize the final (vocab-sized) segmentation; the training
+    # cache frees when this scope exits, so consumers hold only a
+    # checkpoint-backed frame and no corpus-derived cache block
+    # outlives training.
+    return merges, ckpt.keep(ckpt.checkpoint(rep))
 
 
 def apply_merges(vocab_syms: DataFrame) -> DataFrame:

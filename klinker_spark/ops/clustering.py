@@ -35,12 +35,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ckpt import release as _free
+from .. import ckpt
 from ..functions.vectors import cosine
 
 __all__ = ["dbscan_labels", "hdbscan_labels", "mutual_reachability_edges", "boruvka_mst"]
 
 
+@ckpt.scope()
 def dbscan_labels(
     emb: DataFrame,
     min_sim: float = 0.9,
@@ -67,20 +68,18 @@ def dbscan_labels(
         .select("id", "nid")
     )
     # ε-graph reused by degree count, propagation, and border attach
-    edges = edges.persist()
+    edges = ckpt.persist(edges)
 
     deg = edges.groupBy("id").agg((F.count("*") + 1).alias("deg"))
-    core = (
+    core = ckpt.persist(
         pts.select("id")
         .join(deg, "id", "left")
         .where(F.coalesce(F.col("deg"), F.lit(1)) >= min_pts)
         .select("id")
     )
-    core = core.persist()
-    core_edges = (
+    core_edges = ckpt.persist(
         edges.join(core, "id", "left_semi")
         .join(core.withColumnRenamed("id", "nid"), "nid", "left_semi")
-        .persist()
     )
 
     # cluster = connected components of the core-core subgraph; the
@@ -102,7 +101,7 @@ def dbscan_labels(
     )
     # materialize before dropping the cached ε-graph — the result is
     # |V| scalar rows, while a lazy return would re-run the ε-join
-    out = (
+    out = ckpt.checkpoint(
         labels.unionByName(border)
         .unionByName(
             pts.select("id")
@@ -110,11 +109,8 @@ def dbscan_labels(
             .join(border.select("id"), "id", "left_anti")
             .select("id", F.lit("-1").alias("label"))
         )
-        .localCheckpoint(eager=True)
     )
-    for cached in (edges, core, core_edges):
-        cached.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
 # ------------------------------------------------------------------ HDBSCAN
@@ -133,6 +129,7 @@ def dbscan_labels(
 #      matrix!); the O(n²) distance work stays distributed.
 
 
+@ckpt.scope()
 def mutual_reachability_edges(
     emb: DataFrame,
     min_samples: int = 5,
@@ -173,7 +170,7 @@ def mutual_reachability_edges(
             lambda acc, x: acc + x,
         )
     )
-    pairs = (
+    pairs = ckpt.persist(
         pts.join(F.broadcast(other), F.col("id") != F.col("nid"))
         .select("id", "nid", dist.alias("d"))
         .withColumn(
@@ -182,7 +179,7 @@ def mutual_reachability_edges(
                 Window.partitionBy("id").orderBy(F.col("d").asc(), F.col("nid").asc())
             ),
         )
-    ).persist()
+    )
     # core distance: (min_samples-1)-th OTHER neighbor = min_samples-th
     # including self (d(self)=0)
     if min_samples <= 1:
@@ -201,14 +198,12 @@ def mutual_reachability_edges(
             F.least("id", "nid").alias("a"), F.greatest("id", "nid").alias("b"), "d"
         ).distinct()
     )
-    out = (
+    out = ckpt.checkpoint(
         canon.join(cores.select(F.col("id").alias("a"), F.col("core").alias("core_a")), "a")
         .join(cores.select(F.col("id").alias("b"), F.col("core").alias("core_b")), "b")
         .select("a", "b", F.greatest("d", "core_a", "core_b").alias("w"))
-        .localCheckpoint(eager=True)
     )
-    pairs.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
 #: Below this many selected contraction edges per Borůvka round, the
@@ -220,6 +215,7 @@ def mutual_reachability_edges(
 BORUVKA_DRIVER_CONTRACT_MAX = 100_000
 
 
+@ckpt.scope()
 def boruvka_mst(
     edges: DataFrame, vertices: DataFrame, max_iter: int = 30
 ) -> DataFrame:
@@ -240,42 +236,40 @@ def boruvka_mst(
     from ..session import local_df
     from .curation import connected_components
 
-    comp = vertices.select(
-        F.col(vertices.columns[0]).alias("id")
-    ).withColumn("comp", F.col("id")).localCheckpoint(eager=True)
-    ed = edges.localCheckpoint(eager=True)
+    comp = ckpt.checkpoint(
+        vertices.select(F.col(vertices.columns[0]).alias("id")).withColumn("comp", F.col("id"))
+    )
+    ed = ckpt.checkpoint(edges)
     spark = edges.sparkSession
     mst = None
     for _ in range(max_iter):
         lab_a = comp.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
         lab_b = comp.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
-        cross = (
+        cross = ckpt.checkpoint(
             ed.join(lab_a, "a").join(lab_b, "b").where(F.col("ca") != F.col("cb"))
-        ).localCheckpoint(eager=True)
+        )
         if cross.isEmpty():
-            _free(cross)
             break
         wnd = Window.partitionBy("comp").orderBy(
             F.col("w").asc(), F.col("a").asc(), F.col("b").asc()
         )
-        sel = (
+        sel = ckpt.checkpoint(
             cross.select(F.col("ca").alias("comp"), "a", "b", "w", "ca", "cb")
             .unionByName(cross.select(F.col("cb").alias("comp"), "a", "b", "w", "ca", "cb"))
             .withColumn("rn", F.row_number().over(wnd))
             .where(F.col("rn") == 1)
             .select("a", "b", "w", "ca", "cb")
             .distinct()
-            .localCheckpoint(eager=True)
         )
         prev_mst = mst
         # first round checkpoints too: the forest must be self-contained
         # so each round's sel blocks can free at round end
-        mst = (
-            sel.select("a", "b", "w").localCheckpoint(eager=True)
+        mst = ckpt.checkpoint(
+            sel.select("a", "b", "w")
             if mst is None
-            else mst.unionByName(sel.select("a", "b", "w")).localCheckpoint(eager=True)
+            else mst.unionByName(sel.select("a", "b", "w"))
         )
-        _free(prev_mst)
+        ckpt.release(prev_mst)
         n_sel = sel.count()
         if n_sel <= BORUVKA_DRIVER_CONTRACT_MAX:
             # driver union-find over the selected component pairs
@@ -297,10 +291,9 @@ def boruvka_mst(
             ctype = comp.schema["comp"].dataType.simpleString()
             relabel = local_df(spark, mapping, f"comp {ctype}, label {ctype}")
             prev_comp = comp
-            comp = (
+            comp = ckpt.checkpoint(
                 comp.join(F.broadcast(relabel), "comp", "left")
                 .select("id", F.coalesce("label", "comp").alias("comp"))
-                .localCheckpoint(eager=True)
             )
         else:
             contract = sel.select(F.col("ca").alias("src"), F.col("cb").alias("dst"))
@@ -308,24 +301,21 @@ def boruvka_mst(
                 contract, "src", "dst", vertices=comp.select("comp").distinct()
             )
             prev_comp = comp
-            comp = (
+            comp = ckpt.checkpoint(
                 comp.join(relabel_df.withColumnRenamed("id", "comp"), "comp")
                 .select("id", F.col("label").alias("comp"))
-                .localCheckpoint(eager=True)
             )
-            _free(relabel_df)
+            ckpt.release(relabel_df)
         # round teardown: the contracted labels supersede prev_comp; the
         # selected-edge and crossing tables are folded into mst/comp
-        _free(prev_comp)
-        _free(sel)
-        _free(cross)
+        ckpt.release(prev_comp)
+        ckpt.release(sel)
+        ckpt.release(cross)
     else:
         raise RuntimeError(f"boruvka_mst did not converge in {max_iter} rounds")
-    _free(comp)
-    _free(ed)
     if mst is None:
         return spark.createDataFrame([], "a string, b string, w double")
-    return mst
+    return ckpt.keep(mst)
 
 
 #: λ cap standing in for 1/0 when points coincide (w = 0): finite so
@@ -501,6 +491,7 @@ def _condense_and_select(
     return labels, probs
 
 
+@ckpt.scope()
 def hdbscan_labels(
     emb: DataFrame,
     min_cluster_size: int = 5,

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ckpt import release as _free
+from .. import ckpt
 from ..functions.text import tokenize, word_shingles
 
 __all__ = [
@@ -201,6 +201,7 @@ def repetition_stats(
     )
 
 
+@ckpt.scope()
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -258,7 +259,7 @@ def connected_components(
         # per consumer (measured 2x the whole query at sf0.1).  With an
         # explicit vertices= the edge frame is consumed once and the
         # caller (e.g. DBSCAN) typically persists it already — no copy.
-        pairs = pairs.localCheckpoint(eager=True)
+        pairs = ckpt.checkpoint(pairs)
         # vertex set BEFORE dropping self-loops: a vertex whose only
         # edge is (v, v) is still incident to an edge
         ids = pairs.select("id").unionByName(pairs.select(F.col("nid").alias("id"))).distinct()
@@ -271,8 +272,10 @@ def connected_components(
         # edge frame
         probe = pairs.limit(local_threshold + 1).collect()
         if len(probe) <= local_threshold:
+            ckpt.keep(pairs)  # the lazy labels read ids, derived from pairs
             return _local_components(probe, ids)
     if algorithm == "star":
+        ckpt.keep(pairs)  # as above
         return _star_components(pairs, ids, max_iter)
     if algorithm != "propagation":
         raise ValueError(f"unknown algorithm: {algorithm!r}")
@@ -286,22 +289,20 @@ def connected_components(
         part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
         part = spark.sparkContext.defaultParallelism
-    und = (
+    und = ckpt.persist(
         pairs.unionByName(pairs.select(F.col("nid").alias("id"), F.col("id").alias("nid")))
         .where(F.col("id") != F.col("nid"))
         .distinct()
         .repartition(part, "nid")
-        .persist()
     )
     labels = ids.withColumn("label", F.col("id"))
     converged = False
     for _ in range(max_iter):
         neigh = und.join(labels.withColumnRenamed("id", "nid"), "nid").select("id", "label")
-        new_labels = (
+        new_labels = ckpt.checkpoint(
             labels.unionByName(neigh)
             .groupBy("id")
             .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.alias("n")
@@ -309,20 +310,18 @@ def connected_components(
             .where(F.col("n.label") != F.col("o.label"))
             .count()
         )
-        _free(labels)
+        ckpt.release(labels)
         labels = new_labels
         if changed == 0:
             converged = True
             break
-    und.unpersist()
-    _free(pairs)
     if not converged:
         raise RuntimeError(
             f"connected_components: min-label propagation did not converge "
             f"within max_iter={max_iter} rounds; raise max_iter (component "
             f"diameter exceeds the bound)"
         )
-    return labels
+    return ckpt.keep(labels)
 
 
 def _local_components(rows, ids: DataFrame) -> DataFrame:
@@ -385,11 +384,10 @@ def _star_components(pairs: DataFrame, ids: DataFrame, max_iter: int) -> DataFra
     minimum vertex, reached in O(log n) rounds.  Edges are kept
     canonical ``(hi, lo)`` so set-equality is the convergence test.
     """
-    e = (
+    e = ckpt.checkpoint(
         pairs.where(F.col("id") != F.col("nid"))
         .select(F.greatest("id", "nid").alias("hi"), F.least("id", "nid").alias("lo"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     converged = False
     for _ in range(max_iter):
@@ -416,14 +414,13 @@ def _star_components(pairs: DataFrame, ids: DataFrame, max_iter: int) -> DataFra
             .select(F.col("lo").alias("a"), F.col("m").alias("b"))
             .unionByName(m2.select(F.col("hi").alias("a"), F.col("m").alias("b")))
         )
-        new_e = (
+        new_e = ckpt.checkpoint(
             emit.where(F.col("a") != F.col("b"))
             .select(F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         same = new_e.count() == e.count() and new_e.subtract(e).count() == 0
-        _free(e)
+        ckpt.release(e)
         e = new_e
         if same:
             converged = True
@@ -433,7 +430,7 @@ def _star_components(pairs: DataFrame, ids: DataFrame, max_iter: int) -> DataFra
             f"connected_components(star): did not converge within "
             f"max_iter={max_iter} rounds; raise max_iter"
         )
-    star = e.select(F.col("hi").alias("id"), F.col("lo").alias("label"))
+    star = ckpt.keep(e).select(F.col("hi").alias("id"), F.col("lo").alias("label"))
     return ids.join(star, "id", "left").select(
         "id", F.coalesce("label", F.col("id")).alias("label")
     )
@@ -660,7 +657,7 @@ def contamination_check(
     broadcast and the corpus-side semi-join is map-side — the only
     shuffle is the per-doc hit count on ``doc_id``.
     """
-    sh = (
+    sh = ckpt.persist(
         docs.select(
             F.col(id_col).alias("doc_id"),
             benchmark_filter.alias("is_bench"),
@@ -676,9 +673,8 @@ def contamination_check(
         # (array transform + slice-concat per doc; measured 4-5x the
         # rest at sf0.1) — a LAZY persist materializes it once at
         # first execution with no construction-time job; blocks are
-        # MEMORY_AND_DISK (disk-backed at corpus scale) and released
-        # by the ContextCleaner when the returned plan is dropped
-        .persist()
+        # MEMORY_AND_DISK (disk-backed at corpus scale) and freed by
+        # the caller's scope
     )
     # one pass per side: benchmark rows shingle once into the broadcast
     # set; eval rows shingle once, carrying their set size through the
@@ -738,6 +734,7 @@ def pii_scrub(
     )
 
 
+@ckpt.scope()
 def unigram_logprob_quality(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -759,9 +756,11 @@ def unigram_logprob_quality(
     """
     # persist: toks feeds the total count, the frequency table, and the
     # probe side of the join — three scans of the explode otherwise
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(F.split(F.col(text_col), " ")).alias("token")
-    ).where(F.col("token") != "").persist()
+    toks = ckpt.persist(
+        docs.select(
+            F.col(id_col).alias("doc_id"), F.explode(F.split(F.col(text_col), " ")).alias("token")
+        ).where(F.col("token") != "")
+    )
     freq = toks.groupBy("token").agg(F.count("*").alias("c"))
     total = toks.count()
     lp = freq.select(
@@ -770,7 +769,7 @@ def unigram_logprob_quality(
         .cast("bigint")
         .alias("lp_micro"),
     )
-    out = (
+    out = ckpt.checkpoint(
         toks.join(F.broadcast(lp), "token")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_tokens"), F.sum("lp_micro").alias("s"))
@@ -779,12 +778,11 @@ def unigram_logprob_quality(
             "n_tokens",
             F.round(F.col("s") / (F.lit(1e6) * F.col("n_tokens")), 6).alias("avg_logprob"),
         )
-        .localCheckpoint(eager=True)
     )
-    toks.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
+@ckpt.scope()
 def dsir_importance(
     docs: DataFrame,
     target_filter,
@@ -811,7 +809,7 @@ def dsir_importance(
         target_filter.alias("is_target"),
         F.explode(F.split(F.col(text_col), " ")).alias("token"),
     ).where(F.col("token") != "")
-    toks = toks.persist()
+    toks = ckpt.persist(toks)
     all_freq = toks.groupBy("token").agg(
         F.count("*").alias("c_all"),
         F.sum(F.col("is_target").cast("bigint")).alias("c_tgt"),
@@ -825,7 +823,6 @@ def dsir_importance(
     if not n_all:
         # empty / all-whitespace corpus: the aggregate returns NULL
         # totals — return an empty frame instead of a TypeError
-        toks.unpersist()
         return (
             docs.select(F.col(id_col).alias("doc_id"))
             .where(F.lit(False))
@@ -844,7 +841,7 @@ def dsir_importance(
         .cast("bigint")
         .alias("w_micro"),
     )
-    out = (
+    out = ckpt.checkpoint(
         toks.where(~F.col("is_target"))
         .join(F.broadcast(w), "token")
         .groupBy("doc_id")
@@ -854,10 +851,8 @@ def dsir_importance(
             "n_tokens",
             F.round(F.col("s") / F.lit(1e6), 6).alias("log_ratio"),
         )
-        .localCheckpoint(eager=True)
     )
-    toks.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
 def pack_sequences(
@@ -907,6 +902,7 @@ def pack_sequences(
     ).withColumn("bin_id", F.floor(F.col("start_offset") / budget))
 
 
+@ckpt.scope()
 def vocab_coverage(
     docs: DataFrame,
     vocab_size: int = 100,
@@ -924,9 +920,11 @@ def vocab_coverage(
     membership marker; one shuffle on ``doc_id`` for the counts.
     """
     # persist: toks feeds the frequency build AND the probe side
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(F.split(F.col(text_col), " ")).alias("token")
-    ).where(F.col("token") != "").persist()
+    toks = ckpt.persist(
+        docs.select(
+            F.col(id_col).alias("doc_id"), F.explode(F.split(F.col(text_col), " ")).alias("token")
+        ).where(F.col("token") != "")
+    )
     freq = toks.groupBy("token").agg(F.count("*").alias("c"))
     # orderBy().limit() compiles to TakeOrderedAndProject — distributed
     # partial top-k per partition, never a single-partition window sort
@@ -937,7 +935,7 @@ def vocab_coverage(
         .limit(vocab_size)
         .select("token", F.lit(1).alias("in_vocab"))
     )
-    out = (
+    out = ckpt.checkpoint(
         toks.join(F.broadcast(vocab), "token", "left")
         .groupBy("doc_id")
         .agg(
@@ -950,10 +948,8 @@ def vocab_coverage(
             "n_oov",
             F.round(F.col("n_oov") / F.col("n_tokens"), 6).alias("oov_rate"),
         )
-        .localCheckpoint(eager=True)
     )
-    toks.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
 def corpus_rollup(
@@ -993,6 +989,7 @@ def corpus_rollup(
     )
 
 
+@ckpt.scope()
 def duplicated_span_stats(
     docs: DataFrame,
     span_k: int = 10,
@@ -1047,13 +1044,12 @@ def duplicated_span_stats(
     # explode chain executes twice (r12 A/B at sf0.1: 6.0-6.6 s →
     # 4.3-4.7 s warm).  Released after the result materializes (the
     # dedup cache contract).
-    spans = (
+    spans = ckpt.persist(
         sh.select("doc_id", F.explode("sh").alias("span"))
         .where(F.col("span") != "")
-        .persist()
     )
     span_df = spans.groupBy("span").agg(F.count("*").alias("df"))
-    out = (
+    out = ckpt.checkpoint(
         spans.join(span_df, "span")
         .groupBy("doc_id")
         .agg(
@@ -1066,10 +1062,8 @@ def duplicated_span_stats(
             "n_dup_spans",
             F.round(F.col("n_dup_spans") / F.col("n_spans"), 6).alias("dup_span_frac"),
         )
-        .localCheckpoint(eager=True)
     )
-    spans.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
 def remove_duplicated_spans(
@@ -1463,6 +1457,7 @@ def gopher_rules(
     )
 
 
+@ckpt.scope()
 def bigram_logprob_quality(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -1497,17 +1492,19 @@ def bigram_logprob_quality(
     )
     # one explode carries both roles: pos 0 rows score by unigram,
     # pos>0 rows carry their predecessor for the bigram term
-    occ = arr.select(
-        "doc_id",
-        F.size("tk").alias("n_tokens"),
-        F.posexplode("tk").alias("pos", "b"),
-        F.col("tk").alias("_tk"),
-    ).select(
-        "doc_id",
-        "n_tokens",
-        "b",
-        F.when(F.col("pos") > 0, F.element_at("_tk", F.col("pos"))).alias("a"),
-    ).persist()
+    occ = ckpt.persist(
+        arr.select(
+            "doc_id",
+            F.size("tk").alias("n_tokens"),
+            F.posexplode("tk").alias("pos", "b"),
+            F.col("tk").alias("_tk"),
+        ).select(
+            "doc_id",
+            "n_tokens",
+            "b",
+            F.when(F.col("pos") > 0, F.element_at("_tk", F.col("pos"))).alias("a"),
+        )
+    )
 
     uni = occ.groupBy("b").agg(F.count("*").alias("cb"))
     n_total = occ.count()
@@ -1530,7 +1527,7 @@ def bigram_logprob_quality(
             F.round(lp * 1e6).cast("bigint").alias("lp_micro"),
         )
     )
-    out = (
+    out = ckpt.checkpoint(
         scored.groupBy("doc_id")
         .agg(
             F.first("n_tokens").alias("n_tokens"),
@@ -1541,10 +1538,8 @@ def bigram_logprob_quality(
             "n_tokens",
             F.round(F.col("s") / (F.lit(1e6) * F.col("n_tokens")), 6).alias("avg_logprob"),
         )
-        .localCheckpoint(eager=True)
     )
-    occ.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
 def per_key_reservoir(

@@ -18,11 +18,10 @@ so 100 TB = more partitions:
 
 Cache contract: ops that persist a self-join diamond internally
 (minhash banding, simhash chunks, jaccard shingles/prefix, edit-
-distance base) materialize their scalar-pair result with
-``localCheckpoint(eager=True)`` and release the persist before
-returning — the cache manager is empty after every call, and the
-checkpoint blocks are freed when the caller drops the returned
-DataFrame (ContextCleaner), so long sessions accumulate no storage.
+distance base) run in a :func:`klinker_spark.ckpt.scope` and
+materialize their scalar-pair result with ``ckpt.checkpoint`` — the
+internal caches are freed on return, and the result checkpoint passes
+to the caller's scope, so long sessions accumulate no storage.
 """
 
 from __future__ import annotations
@@ -34,7 +33,7 @@ from pyspark.sql import functions as F
 
 logger = logging.getLogger(__name__)
 
-from ..ckpt import release as _free
+from .. import ckpt
 from ..functions.text import minhash_signatures, simhash, tokenize, word_shingles
 from ..functions.vectors import cosine, topk_cosine_join
 
@@ -100,6 +99,7 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
+@ckpt.scope()
 def minhash_lsh_dedup(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -191,14 +191,13 @@ def minhash_lsh_dedup(
     )
     # persist: both sides of the band self-join derive from the same
     # signature pipeline — without it signatures compute twice
-    banded = sigs.select("doc_id", F.explode(band_keys).alias("band_key")).persist()
+    banded = ckpt.persist(sigs.select("doc_id", F.explode(band_keys).alias("band_key")))
     if max_bucket is not None:
-        oversized = (
+        oversized = ckpt.persist(
             banded.groupBy("band_key")
             .agg(F.count("*").alias("_n"))
             .where(F.col("_n") > max_bucket)
             .select("band_key", "_n")
-            .persist()
         )
         # no silent caps: surface how much the skew cap discarded so
         # recall loss is observable (banded is persisted — this extra
@@ -223,19 +222,16 @@ def minhash_lsh_dedup(
         oversized = None
         banded_joinable = banded
     other = banded_joinable.select(F.col("band_key"), F.col("doc_id").alias("doc_b"))
-    out = (
+    out = ckpt.checkpoint(
         banded_joinable.join(other, "band_key")
         .where(F.col("doc_id") < F.col("doc_b"))
         .select(F.col("doc_id").alias("doc_a"), "doc_b")
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    banded.unpersist()
-    if oversized is not None:
-        oversized.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
+@ckpt.scope()
 def simhash_dedup(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -279,9 +275,9 @@ def simhash_dedup(
     )
     # persist: self-join diamond, same rationale as minhash banding;
     # released after the (scalar-pair) result is checkpointed
-    chunked = fp.select("doc_id", "fp", F.explode(chunks).alias("chunk_key")).persist()
+    chunked = ckpt.persist(fp.select("doc_id", "fp", F.explode(chunks).alias("chunk_key")))
     other = chunked.select("chunk_key", F.col("doc_id").alias("doc_b"), F.col("fp").alias("fp_b"))
-    out = (
+    out = ckpt.checkpoint(
         chunked.join(other, "chunk_key")
         .where(F.col("doc_id") < F.col("doc_b"))
         .select(
@@ -291,12 +287,11 @@ def simhash_dedup(
         )
         .where(F.col("hamming") <= max_hamming)  # filter before the dedup shuffle
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    chunked.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
+@ckpt.scope()
 def ngram_jaccard_dedup(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -328,11 +323,11 @@ def ngram_jaccard_dedup(
 
     # widen the narrow-scan input before the per-row tokenize+shingle
     # pipeline (r12 — see minhash_lsh_dedup)
-    shingles = widen_for_kernel(docs.select(id_col, text_col)).select(
-        F.col(id_col).alias("doc_id"), tokenize(text_col, 1, []).alias("tk")
-    ).select(
-        "doc_id", F.array_distinct(word_shingles(F.col("tk"), shingle_k)).alias("sh")
-    ).persist()
+    shingles = ckpt.persist(
+        widen_for_kernel(docs.select(id_col, text_col))
+        .select(F.col(id_col).alias("doc_id"), tokenize(text_col, 1, []).alias("tk"))
+        .select("doc_id", F.array_distinct(word_shingles(F.col("tk"), shingle_k)).alias("sh"))
+    )
     ex = shingles.select("doc_id", F.size("sh").alias("n"), F.explode("sh").alias("shingle"))
     freq = ex.groupBy("shingle").agg(F.count("*").alias("df"))
     ranked = ex.join(freq, "shingle").withColumn(
@@ -341,9 +336,9 @@ def ngram_jaccard_dedup(
             Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("shingle").asc())
         ),
     )
-    prefix = ranked.where(
-        F.col("r") <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
-    ).persist()  # both sides of the candidate self-join
+    prefix = ckpt.persist(  # both sides of the candidate self-join
+        ranked.where(F.col("r") <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1)
+    )
     # Size filter rides along with candidate generation: J ≥ t forces
     # t·|A| ≤ |B| ≤ |A|/t, so length-mismatched pairs die before the
     # array join (and n_a/n_b never need a second lookup join).
@@ -391,7 +386,7 @@ def ngram_jaccard_dedup(
         .join(sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")), "doc_b")
         .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
     )
-    out = (
+    out = ckpt.checkpoint(
         verified.select(
             "doc_a",
             "doc_b",
@@ -400,13 +395,11 @@ def ngram_jaccard_dedup(
             ).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
-        .localCheckpoint(eager=True)
     )
-    prefix.unpersist()
-    shingles.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
+@ckpt.scope()
 def ngram_containment_dedup(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -438,11 +431,11 @@ def ngram_containment_dedup(
 
     # widen the narrow-scan input before the per-row tokenize+shingle
     # pipeline (r12 — see minhash_lsh_dedup)
-    shingles = widen_for_kernel(docs.select(id_col, text_col)).select(
-        F.col(id_col).alias("doc_id"), tokenize(text_col, 1, []).alias("tk")
-    ).select(
-        "doc_id", F.array_distinct(word_shingles(F.col("tk"), shingle_k)).alias("sh")
-    ).persist()
+    shingles = ckpt.persist(
+        widen_for_kernel(docs.select(id_col, text_col))
+        .select(F.col(id_col).alias("doc_id"), tokenize(text_col, 1, []).alias("tk"))
+        .select("doc_id", F.array_distinct(word_shingles(F.col("tk"), shingle_k)).alias("sh"))
+    )
     ex = shingles.select(
         "doc_id", F.size("sh").alias("n"), F.explode("sh").alias("shingle")
     )
@@ -488,13 +481,11 @@ def ngram_containment_dedup(
             F.size(F.array_intersect("sh_a", "sh_b")) / F.col("n_a"),
         )
     )
-    out = (
+    out = ckpt.checkpoint(
         verified.where(F.col("containment") >= threshold)
         .select("doc_a", "doc_b", F.round("containment", 6).alias("containment"))
-        .localCheckpoint(eager=True)
     )
-    shingles.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
 def tfidf_cosine_join(
@@ -594,6 +585,7 @@ def tfidf_cosine_join(
     )
 
 
+@ckpt.scope()
 def cosine_signlsh_dedup(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -646,7 +638,7 @@ def cosine_signlsh_dedup(
         ]
     )
     # persist: self-join diamond (same rationale as minhash banding)
-    banded = emb.select("doc_id", "vector", F.explode(band_keys).alias("band_key")).persist()
+    banded = ckpt.persist(emb.select("doc_id", "vector", F.explode(band_keys).alias("band_key")))
     other = banded.select(
         "band_key", F.col("doc_id").alias("doc_b"), F.col("vector").alias("vec_b")
     )
@@ -666,17 +658,15 @@ def cosine_signlsh_dedup(
     # scalar (id, id, sim) rows, never the dim-d vectors; a pair hit in
     # several bands recomputes one dim-d dot — cheaper than shuffling
     # the vectors.
-    out = (
+    out = ckpt.checkpoint(
         banded.join(other, "band_key")
         .where(F.col("doc_id") < F.col("doc_b"))
         .withColumn("sim", F.round(dot / (norm("vector") * norm("vec_b")), 6))
         .where(F.col("sim") >= threshold)
         .select(F.col("doc_id").alias("doc_a"), "doc_b", "sim")
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    banded.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
 def embedding_cosine_dedup(
@@ -714,6 +704,7 @@ def embedding_cosine_dedup(
     )
 
 
+@ckpt.scope()
 def semdedup(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -841,12 +832,11 @@ def semdedup(
     # consume it — without this the probe re-evaluates per consumer
     # (measured 2× ~10 s per extra evaluation at sf1 before the exact
     # Arrow probe kernel; still the single biggest subplan after it)
-    assigned = (
+    assigned = ckpt.checkpoint(
         _probe_centroids(
             ix.select(F.col("id").alias("query_id"), F.col("vector").alias("qv")), centroids, 1
         )
         .select(F.col("centroid_id").alias("cluster_id"), F.col("query_id").alias("id"), "qv")
-        .localCheckpoint(eager=True)
     )
 
     def _expr_rounded(src):
@@ -937,7 +927,7 @@ def semdedup(
     else:
         raise ValueError(f"impl must be matmul|expr, got {impl!r}")
 
-    out = (
+    out = ckpt.checkpoint(
         rounded.select(
             F.col("id").alias(id_col),
             "cluster_id",
@@ -947,15 +937,11 @@ def semdedup(
             ).alias("keep"),
         )
         .unionByName(malformed)
-        # scalar-row result materializes, then the assignment cache
-        # frees — the module's cache contract (nothing persists past
-        # return)
-        .localCheckpoint(eager=True)
     )
-    _free(assigned)
-    return out
+    return ckpt.keep(out)
 
 
+@ckpt.scope()
 def edit_distance_dedup(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -1019,9 +1005,13 @@ def edit_distance_dedup(
     # widen the narrow-scan input: the deletion-neighborhood /
     # q-gram-prefix generation is per-row CPU (r12 — see
     # minhash_lsh_dedup)
-    base = widen_for_kernel(docs.select(id_col, text_col)).select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("s"), F.length(text_col).alias("ln")
-    ).where(F.col("s").isNotNull()).persist()
+    base = ckpt.persist(
+        widen_for_kernel(docs.select(id_col, text_col))
+        .select(
+            F.col(id_col).alias("id"), F.col(text_col).alias("s"), F.length(text_col).alias("ln")
+        )
+        .where(F.col("s").isNotNull())
+    )
     if impl == "auto":
         impl = "deletion" if max_dist <= 2 else "prefix"
     if impl == "deletion":
@@ -1063,7 +1053,7 @@ def edit_distance_dedup(
             .select("doc_a", "doc_b")
             .distinct()
         )
-        out = (
+        out = ckpt.checkpoint(
             cand.join(
                 base.select(F.col("id").alias("doc_a"), F.col("s").alias("s_a"), F.col("ln").alias("ln_a")),
                 "doc_a",
@@ -1076,10 +1066,8 @@ def edit_distance_dedup(
             .withColumn("dist", F.levenshtein("s_a", "s_b"))
             .where(F.col("dist") <= max_dist)
             .select("doc_a", "doc_b", "dist")
-            .localCheckpoint(eager=True)
         )
-        base.unpersist()
-        return out
+        return ckpt.keep(out)
     if impl != "prefix":
         raise ValueError(f"impl must be auto|deletion|prefix, got {impl!r}")
     from ..functions.text import qgrams
@@ -1095,7 +1083,7 @@ def edit_distance_dedup(
     # For a gram-deficient doc (≤ d·q distinct grams) this keeps ALL
     # its grams, which is what makes deficient×sufficient pairs safe
     # without a bucket (see docstring).
-    pre = rk.where(F.col("r") <= max_dist * q + 1).persist()
+    pre = ckpt.persist(rk.where(F.col("r") <= max_dist * q + 1))
     cand = (
         pre.select("gram", F.col("id").alias("doc_a"))
         .join(pre.select("gram", F.col("id").alias("doc_b")), "gram")
@@ -1128,7 +1116,7 @@ def edit_distance_dedup(
         )
     )
     all_cand = cand.unionByName(short_cand).distinct()
-    out = (
+    out = ckpt.checkpoint(
         all_cand.join(
             base.select(F.col("id").alias("doc_a"), F.col("s").alias("s_a"), F.col("ln").alias("ln_a")),
             "doc_a",
@@ -1141,11 +1129,8 @@ def edit_distance_dedup(
         .withColumn("dist", F.levenshtein("s_a", "s_b"))
         .where(F.col("dist") <= max_dist)
         .select("doc_a", "doc_b", "dist")
-        .localCheckpoint(eager=True)
     )
-    pre.unpersist()
-    base.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
 def cdc_chunk_stats(

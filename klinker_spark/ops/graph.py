@@ -31,14 +31,10 @@ use it for RANKING, not for a probability distribution.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import release as _free
-
-logger = logging.getLogger(__name__)
+from .. import ckpt
 
 __all__ = [
     "pagerank",
@@ -75,14 +71,7 @@ OUTDEG_WINDOW_MAX_TASK_ROWS = 5_000_000
 _OUTDEG_PROBE_FRACTION = 0.01
 
 
-def _unpersist(df: DataFrame) -> None:
-    """Best-effort unpersist of a cached (not checkpointed) frame."""
-    try:
-        df.unpersist()
-    except Exception:
-        logger.debug("unpersist failed", exc_info=True)
-
-
+@ckpt.scope()
 def pagerank(
     edges: DataFrame,
     iters: int = 5,
@@ -108,9 +97,8 @@ def pagerank(
     with T = sources (or all nodes when unpersonalized).
     """
     tele = (1.0 - damping) * 1e6
-    # loop-invariant tables materialize ONCE (eager localCheckpoint —
-    # the dedup-family cache contract: nothing stays persisted, blocks
-    # free when the returned plan is dropped).  Without this every
+    # loop-invariant tables materialize ONCE (cached; freed when the
+    # ranks are checkpointed and this scope exits).  Without this every
     # iteration re-executes the distinct-union node build and the edge
     # scan (5 iterations = 5 node shuffles instead of 1); pre-joining
     # outdeg INTO the edge table drops the second per-iteration join —
@@ -173,11 +161,11 @@ def pagerank(
         # here with a null outdeg, and contribute no mass in either
         # form (the per-iteration rank join is an inner equi-join on
         # head, which both shapes route null heads out of).
-        edges_w = e.join(deg, "head", "left").persist()
+        edges_w = ckpt.persist(e.join(deg, "head", "left"))
     else:
-        edges_w = e.withColumn(
-            "outdeg", F.count("*").over(Window.partitionBy("head"))
-        ).persist()
+        edges_w = ckpt.persist(
+            e.withColumn("outdeg", F.count("*").over(Window.partitionBy("head")))
+        )
     edges_w.count()  # materialize eagerly, like the checkpoint it replaces
     # PERSISTED, not checkpointed (r13): the distinct's
     # hashpartitioning(node) survives inside the cached relation (the
@@ -186,11 +174,10 @@ def pagerank(
     # exchange-free on this side — checkpointed nodes paid one full |V|
     # re-shuffle + sort there (plan-verified: SMJ over two
     # UnknownPartitioning leaves, 2 Exchanges + 2 Sorts).
-    nodes = (
+    nodes = ckpt.persist(
         edges_w.select(F.col("head").alias("node"))
         .union(edges_w.select("tail"))
         .distinct()
-        .persist()
     )
     # |V| counted ONCE driver-side (one count job) and folded into the
     # iteration expressions as a literal — the previous shape recounted
@@ -201,8 +188,6 @@ def pagerank(
         # empty graph: the |V| literal would constant-fold into an
         # ANSI divide-by-zero at PLANNING time (unlike the old
         # column-based division, which no row ever evaluated)
-        _unpersist(nodes)
-        _unpersist(edges_w)
         return nodes.select(
             "node",
             F.lit(None).cast("bigint").alias("rank_micro"),
@@ -307,16 +292,13 @@ def pagerank(
         # each round anyway, so partitioning buys nothing — keep the
         # r11 checkpoint shape (measured equal; no churn at toy scale).
         if broadcast_ranks:
-            summed = _spread(spread_in).localCheckpoint(eager=True)
+            summed = ckpt.checkpoint(_spread(spread_in))
         else:
-            summed = _spread(spread_in).persist()
+            summed = ckpt.persist(_spread(spread_in))
             summed.count()  # eager, like the checkpoint it replaces
         # superseded round's blocks free NOW: at most two mass versions
-        # ever hold storage, and nothing leaks into the session once
-        # the final ranks materialize
-        if prev is not None:
-            _free(prev)
-            _unpersist(prev)
+        # ever hold storage
+        ckpt.release(prev)
     tele_n, init_n = _tele_init_for("node")
     if summed is None:  # iters == 0: the init vector is the answer
         ranks = nodes.select("node", init_n.alias("rank_micro"))
@@ -341,17 +323,13 @@ def pagerank(
                 ).cast("bigint")
             ).alias("rank_micro"),
         )
-    ranks = ranks.localCheckpoint(eager=True)
-    if summed is not None:
-        _free(summed)  # broadcast path: checkpoint blocks
-        _unpersist(summed)  # shuffle path: cached blocks
-    _unpersist(edges_w)
-    _unpersist(nodes)
+    ranks = ckpt.keep(ckpt.checkpoint(ranks))
     return ranks.select(
         "node", "rank_micro", F.round(F.col("rank_micro") / 1e6, 6).alias("rank")
     )
 
 
+@ckpt.scope()
 def triangle_count(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> DataFrame:
     """Exact per-node triangle counts + local clustering coefficient.
 
@@ -383,21 +361,19 @@ def triangle_count(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> Data
     # deg collapses the plan to one edge build + the three triangle
     # shuffles; both caches release before return (result checkpointed
     # per the dedup cache contract).
-    e = (
+    e = ckpt.persist(
         edges.select(F.col(a_col).cast("string").alias("x"), F.col(b_col).cast("string").alias("y"))
         .where(F.col("x") != F.col("y"))
         .select(
             F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v")
         )
         .distinct()
-        .persist()
     )
-    deg = (
+    deg = ckpt.persist(
         e.select(F.col("u").alias("node"))
         .unionAll(e.select("v"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("degree"))
-        .persist()
     )
     # orient by (degree, node) rank
     du = deg.select(F.col("node").alias("u"), F.col("degree").alias("du"))
@@ -423,7 +399,7 @@ def triangle_count(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> Data
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
-    out = (
+    out = ckpt.checkpoint(
         deg.join(per_node, "node", "left")
         .select(
             "node",
@@ -439,13 +415,11 @@ def triangle_count(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> Data
             )
             .alias("clustering_ppm"),
         )
-        .localCheckpoint(eager=True)
     )
-    e.unpersist()
-    deg.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
+@ckpt.scope()
 def neighbor_jaccard_join(
     left: DataFrame,
     right: DataFrame,
@@ -483,29 +457,24 @@ def neighbor_jaccard_join(
     # candidate shuffle is |pairs|-sized (12 M at sf0.1) and hashing /
     # comparing bigints beats strings ~2×; only the final projection
     # casts to string (the op's type-stable output contract).
-    l = (
+    l = ckpt.persist(
         left.select(
             F.col(left.columns[0]).alias("lid"),
             F.col(left.columns[1]).alias("nbr"),
-        )
-        .distinct()
-        .persist()
+        ).distinct()
     )
-    r = (
+    r = ckpt.persist(
         right.select(
             F.col(right.columns[0]).alias("rid"),
             F.col(right.columns[1]).alias("nbr"),
-        )
-        .distinct()
-        .persist()
+        ).distinct()
     )
-    base_l, base_r = l, r
     if max_df is not None:
         hot_l = l.groupBy("nbr").agg(F.count(F.lit(1)).alias("_n")).where(F.col("_n") > max_df)
         hot_r = r.groupBy("nbr").agg(F.count(F.lit(1)).alias("_n")).where(F.col("_n") > max_df)
         hot = hot_l.select("nbr").unionAll(hot_r.select("nbr")).distinct()
-        l = l.join(F.broadcast(hot), "nbr", "left_anti").persist()
-        r = r.join(F.broadcast(hot), "nbr", "left_anti").persist()
+        l = ckpt.persist(l.join(F.broadcast(hot), "nbr", "left_anti"))
+        r = ckpt.persist(r.join(F.broadcast(hot), "nbr", "left_anti"))
     nl = l.groupBy("lid").agg(F.count(F.lit(1)).alias("na"))
     nr = r.groupBy("rid").agg(F.count(F.lit(1)).alias("nb"))
     common = (
@@ -537,7 +506,7 @@ def neighbor_jaccard_join(
     w = Window.partitionBy("lid").orderBy(
         F.col("jaccard_ppm").desc(), F.col("rid").cast("string")
     )
-    out = (
+    out = ckpt.checkpoint(
         scored.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
         .select(
@@ -546,13 +515,11 @@ def neighbor_jaccard_join(
             "jaccard_ppm",
             F.col("rk").cast("int").alias("rk"),
         )
-        .localCheckpoint(eager=True)
     )
-    for cached in {base_l, base_r, l, r}:
-        cached.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
+@ckpt.scope()
 def label_propagation(
     edges: DataFrame, a_col: str = "a", b_col: str = "b", iters: int = 4
 ) -> DataFrame:
@@ -587,10 +554,9 @@ def label_propagation(
     # Spark 4, which re-shuffled |adj| on nbr every round at SMJ scale;
     # below the gate the label table broadcasts and the checkpoint's
     # truncated lineage wins — see ITER_PARTITIONED_EDGE_MIN's A/B)
-    adj0 = (
+    adj0 = ckpt.checkpoint(
         e.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
         .unionAll(e.select(F.col("v"), F.col("u")))
-        .localCheckpoint(eager=True)
     )
     adj = adj0
     if adj0.count() > ITER_PARTITIONED_EDGE_MIN:
@@ -599,29 +565,26 @@ def label_propagation(
             part = int(spark.conf.get("spark.sql.shuffle.partitions"))
         except Exception:
             part = spark.sparkContext.defaultParallelism
-        adj = adj0.repartition(part, "nbr").persist()
+        adj = ckpt.persist(adj0.repartition(part, "nbr"))
         adj.count()
     labels = adj.select("node").distinct().withColumn("lab", F.col("node"))
     w = Window.partitionBy("node").orderBy(F.col("c").desc(), "lab")
     for _ in range(iters):
         nbr_lab = labels.select(F.col("node").alias("nbr"), "lab")
         prev = labels
-        labels = (
+        labels = ckpt.checkpoint(
             adj.join(nbr_lab, "nbr")
             .groupBy("node", "lab")
             .agg(F.count(F.lit(1)).alias("c"))
             .withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select("node", "lab")
-            .localCheckpoint(eager=True)
         )
-        _free(prev)
-    if adj is not adj0:
-        _unpersist(adj)
-    _free(adj0)
-    return labels.select("node", F.col("lab").alias("community"))
+        ckpt.release(prev)
+    return ckpt.keep(labels).select("node", F.col("lab").alias("community"))
 
 
+@ckpt.scope()
 def k_core(
     edges: DataFrame, k: int, rounds: int = 6, a_col: str = "a", b_col: str = "b"
 ) -> DataFrame:
@@ -657,12 +620,11 @@ def k_core(
             F.col(b_col).cast("string").alias(b_col),
             *[c for c in edges.columns if c not in (a_col, b_col)],
         )
-    e = (
+    e = ckpt.checkpoint(
         edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
         .where(F.col("x") != F.col("y"))
         .select(F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     for _ in range(rounds):
         deg = (
@@ -673,13 +635,13 @@ def k_core(
         )
         keep = deg.where(F.col("deg") >= k).select("node")
         prev = e
-        e = (
+        e = ckpt.checkpoint(
             e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
-        _free(prev)
+        ckpt.release(prev)
+    ckpt.keep(e)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select("v"))
@@ -689,6 +651,7 @@ def k_core(
     return deg.where(F.col("core_degree") >= k)
 
 
+@ckpt.scope()
 def bfs_distances(
     edges: DataFrame,
     sources: list[str],
@@ -724,45 +687,41 @@ def bfs_distances(
     # the cached layout exchange-free instead of re-shuffling |E| per
     # level, while below the gate the frontier broadcasts and the
     # checkpoint's truncated lineage wins (ITER_PARTITIONED_EDGE_MIN)
-    e0 = e.localCheckpoint(eager=True)
+    e0 = ckpt.checkpoint(e)
     e = e0
     if e0.count() > ITER_PARTITIONED_EDGE_MIN:
         try:
             part = int(spark.conf.get("spark.sql.shuffle.partitions"))
         except Exception:
             part = spark.sparkContext.defaultParallelism
-        e = e0.repartition(part, "u").persist()
+        e = ckpt.persist(e0.repartition(part, "u"))
         e.count()
     node_type = e.schema["u"].dataType.simpleString()
-    dist = spark.createDataFrame(
-        [(s, 0) for s in sources], f"node {node_type}, dist INT"
-    ).localCheckpoint(eager=True)
+    dist = ckpt.checkpoint(
+        spark.createDataFrame([(s, 0) for s in sources], f"node {node_type}, dist INT")
+    )
     frontier = dist
     for d in range(1, max_depth + 1):
-        nxt = (
+        nxt = ckpt.checkpoint(
             frontier.join(e, frontier["node"] == e["u"])
             .select(F.col("v").alias("node"))
             .distinct()
             .join(dist, "node", "left_anti")
             .withColumn("dist", F.lit(d))
-            .localCheckpoint(eager=True)
         )
         if nxt.isEmpty():
-            _free(nxt)
             break
-        new_dist = dist.unionAll(nxt).localCheckpoint(eager=True)
+        new_dist = ckpt.checkpoint(dist.unionAll(nxt))
         # the consumed frontier (last level's nxt) and the superseded
         # settled set free now; in round 1 they are the same frame
         if frontier is not dist:
-            _free(frontier)
-        _free(dist)
+            ckpt.release(frontier)
+        ckpt.release(dist)
         dist, frontier = new_dist, nxt
-    if e is not e0:
-        _unpersist(e)
-    _free(e0)
-    return dist
+    return ckpt.keep(dist)
 
 
+@ckpt.scope()
 def hits(
     edges: DataFrame,
     iters: int = 2,
@@ -803,10 +762,8 @@ def hits(
     # lineage truncated, per-round plans stay tiny (see the gate
     # constant's A/B — a plain cached copy was measured strictly worse
     # than the checkpoint at toy scale).
-    e0 = (
-        edges.select(F.col(a_col).alias("c"), F.col(b_col).alias("p"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    e0 = ckpt.checkpoint(
+        edges.select(F.col(a_col).alias("c"), F.col(b_col).alias("p")).distinct()
     )
     n_edges = e0.count()
     if n_edges > ITER_PARTITIONED_EDGE_MIN:
@@ -815,11 +772,11 @@ def hits(
             part = int(spark.conf.get("spark.sql.shuffle.partitions"))
         except Exception:
             part = spark.sparkContext.defaultParallelism
-        e_by_p = e0.repartition(part, "p").persist()
+        e_by_p = ckpt.persist(e0.repartition(part, "p"))
         e_by_p.count()
-        e_by_c = e0.repartition(part, "c").persist()
+        e_by_c = ckpt.persist(e0.repartition(part, "c"))
         e_by_c.count()
-        _free(e0)
+        ckpt.release(e0)
     else:
         e_by_p = e_by_c = e0
     a = (
@@ -832,26 +789,21 @@ def hits(
         h = e_by_p.join(a, "p").groupBy("c").agg(F.sum("score").alias("s"))
         tot_h = h.agg(F.sum("s").alias("tot"))
         prev_h = hn
-        hn = (
+        hn = ckpt.checkpoint(
             h.crossJoin(F.broadcast(tot_h))
             .select("c", F.expr("(2000000 * s + tot) div (2 * tot)").alias("score"))
-            .localCheckpoint(eager=True)
         )
-        _free(prev_h)
+        ckpt.release(prev_h)
         a2 = e_by_c.join(hn, "c").groupBy("p").agg(F.sum("score").alias("s"))
         tot_a = a2.agg(F.sum("s").alias("tot"))
         prev_a = a
-        a = (
+        a = ckpt.checkpoint(
             a2.crossJoin(F.broadcast(tot_a))
             .select("p", F.expr("(2000000 * s + tot) div (2 * tot)").alias("score"))
-            .localCheckpoint(eager=True)
         )
-        _free(prev_a)
-    if e_by_p is e0:
-        _free(e0)
-    else:
-        for cached in (e_by_p, e_by_c):
-            _unpersist(cached)
+        ckpt.release(prev_a)
+    ckpt.keep(hn)
+    ckpt.keep(a)
     return hn.select(
         F.col("c").alias("node"), F.lit("hub").alias("kind"), F.col("score").alias("score_ppm")
     ).unionAll(

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import ckpt
+
 __all__ = [
     "pq_train",
     "pq_encode",
@@ -94,18 +96,16 @@ def pq_train(
     from pyspark.ml.functions import array_to_vector
 
     books = []
-    sliced = ix.select(
-        *[F.slice("vector", s * ds + 1, ds).alias(f"s{s}") for s in range(m)]
-    ).persist()
-    try:
+    with ckpt.scope():
+        sliced = ckpt.persist(
+            ix.select(*[F.slice("vector", s * ds + 1, ds).alias(f"s{s}") for s in range(m)])
+        )
         for s in range(m):
             feat = sliced.select(array_to_vector(F.col(f"s{s}")).alias("features"))
             model = KMeans(
                 k=k_codes, seed=seed + s, featuresCol="features", maxIter=10
             ).fit(feat)
             books.append([[float(x) for x in c] for c in model.clusterCenters()])
-    finally:
-        sliced.unpersist()
     return books
 
 
@@ -339,13 +339,11 @@ def build_ivfpq_index(
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
-        feat = ix.withColumn("features", array_to_vector("vector")).persist()
-        try:
+        with ckpt.scope():
+            feat = ckpt.persist(ix.withColumn("features", array_to_vector("vector")))
             model = KMeans(
                 k=n_centroids, seed=seed, featuresCol="features", maxIter=10
             ).fit(feat)
-        finally:
-            feat.unpersist()
         centroids = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
     else:
         raise ValueError(f"quantizer must be hash_sample|kmeans, got {quantizer!r}")

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import ckpt
 from ..functions.text import tokenize
 
 __all__ = [
@@ -65,6 +66,7 @@ def sequential_logistic_gd(
     return w
 
 
+@ckpt.scope()
 def train_quality_scores(
     docs: DataFrame,
     positive_filter,
@@ -94,7 +96,7 @@ def train_quality_scores(
         ).alias("toks"),
     )
     tf = HashingTF(inputCol="toks", outputCol="features", numFeatures=n_features)
-    feat = tf.transform(base).persist()
+    feat = ckpt.persist(tf.transform(base))
     lr = LogisticRegression(
         maxIter=max_iter,
         regParam=reg_param,
@@ -102,19 +104,18 @@ def train_quality_scores(
         labelCol="label",
     )
     model = lr.fit(feat)
-    out = (
+    out = ckpt.checkpoint(
         model.transform(feat)
         .select(
             "doc_id",
             F.col("label").cast("int").alias("label"),
             F.round(vector_to_array("probability")[1], 6).alias("prob"),
         )
-        .localCheckpoint(eager=True)
     )
-    feat.unpersist()
-    return out
+    return ckpt.keep(out)
 
 
+@ckpt.scope()
 def train_quality_scores_deterministic(
     docs: DataFrame,
     positive_filter,
@@ -186,11 +187,10 @@ def train_quality_scores_deterministic(
         ).otherwise(F.lit(0.0))
         for jj in range(D)
     ] + [F.lit(1.0)]
-    fx = feats.select("doc_id", "y", "h", F.array(*x_cols).alias("x")).persist()
+    fx = ckpt.persist(feats.select("doc_id", "y", "h", F.array(*x_cols).alias("x")))
 
     train_rows = fx.orderBy("h", "doc_id").limit(n_train).collect()
     if not train_rows:
-        fx.unpersist()
         raise ValueError("train_quality_scores_deterministic: empty corpus")
     # md5 order — matches the oracle's ORDER BY
     w = sequential_logistic_gd(
@@ -202,10 +202,11 @@ def train_quality_scores_deterministic(
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    out = fx.select(
-        "doc_id",
-        F.col("y").cast("int").alias("label"),
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-dot)), 6).alias("prob"),
-    ).localCheckpoint(eager=True)
-    fx.unpersist()
-    return out
+    out = ckpt.checkpoint(
+        fx.select(
+            "doc_id",
+            F.col("y").cast("int").alias("label"),
+            F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-dot)), 6).alias("prob"),
+        )
+    )
+    return ckpt.keep(out)

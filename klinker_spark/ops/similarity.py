@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ckpt import release as _free
+from .. import ckpt
 from ..functions.vectors import cosine, dot, l2_norm, topk_cosine_join
 
 __all__ = [
@@ -371,13 +371,11 @@ def build_ivf_index(
         fit_on = feat.sample(fit_fraction, seed=seed) if fit_fraction < 1.0 else feat
         # KMeans is iterative: an uncached input re-runs the sample scan +
         # array_to_vector projection every iteration (maxIter=20 default)
-        fit_on = fit_on.persist()
-        try:
+        with ckpt.scope():
+            fit_on = ckpt.persist(fit_on)
             # maxIter=10 == Faiss's IVF training default; a coarse
             # quantizer needs balanced cells, not converged centroids
             model = KMeans(k=n_centroids, seed=seed, featuresCol="features", maxIter=10).fit(fit_on)
-        finally:
-            fit_on.unpersist()
         assigned = model.transform(feat).select(
             F.col("prediction").alias("centroid_id"), "id", "vector"
         )
@@ -418,8 +416,8 @@ def ivf_index_append(
     :func:`~klinker_spark.ops.layout.compact_small_files` over
     ``{path}/lists`` on the same cadence.
 
-    The probe kernel follows the same literal-vs-matmul switch as the
-    query path (``PROBE_LITERAL_MAX_CENTROIDS``).
+    The probe is the query path's :func:`_probe_centroids` (its
+    literal-vs-matmul switch included).
     """
     spark = new.sparkSession
     cents = sorted(
@@ -430,12 +428,7 @@ def ivf_index_append(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     )
-    probe = (
-        _probe_centroids
-        if len(cents) <= PROBE_LITERAL_MAX_CENTROIDS
-        else _probe_centroids_matmul
-    )
-    assigned = probe(ix, cents, 1).select(
+    assigned = _probe_centroids(ix, cents, 1).select(
         "centroid_id", F.col("query_id").alias("id"), F.col("qv").alias("vector")
     )
     (
@@ -964,6 +957,7 @@ def margin_bitext_mine(
         .drop("_rk")
     )
 
+@ckpt.scope()
 def kcenter_sample(
     emb: DataFrame,
     k: int = 6,
@@ -1018,17 +1012,14 @@ def kcenter_sample(
         raise ValueError("kcenter_sample: empty input — no seed point to start FPS from")
     seed = seeds[0]
     rows = [(0, seed["id"], None)]
-    state = pts.withColumn("mind", d2_to(seed["v"])).localCheckpoint(eager=True)
+    state = ckpt.checkpoint(pts.withColumn("mind", d2_to(seed["v"])))
     for r in range(1, k):
         nxt = state.orderBy(F.col("mind").desc(), "id").limit(1).collect()[0]
         rows.append((r, nxt["id"], int(nxt["mind"])))
         if r < k - 1:
             prev = state
-            state = state.withColumn(
-                "mind", F.least("mind", d2_to(nxt["v"]))
-            ).localCheckpoint(eager=True)
-            _free(prev)
-    _free(state)
+            state = ckpt.checkpoint(state.withColumn("mind", F.least("mind", d2_to(nxt["v"]))))
+            ckpt.release(prev)
     spark = emb.sparkSession
     return spark.createDataFrame(
         rows, f"sel_round int, vec_id {id_type}, mind_micro bigint"

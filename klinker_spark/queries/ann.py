@@ -1,5 +1,6 @@
 """Query registrations: ann family (split from the original single-file registry; registration order preserved by package import order in __init__)."""
 from __future__ import annotations
+from .. import ckpt
 from ._core import F, ORACLES, Window, _STOP_SQL, _cust_frame, _supp_frame, _t, ann_topk_ivf, brute_force_topk, register, tokenize
 from .relational import _TOKENS_SQL
 
@@ -101,8 +102,8 @@ def embedding_knn_blocking_md5(spark, sf_dir):
     enc = HashingWordEmbedder(dim=8, hash_fn="md5")
     # the expr path inlines lazy encoder projections into the per-pair
     # similarity — see topk_cosine_join's CALLER NOTE
-    left = enc.encode(_cust_frame(spark, sf_dir).concat_values()).persist()
-    right = enc.encode(_supp_frame(spark, sf_dir).concat_values()).persist()
+    left = ckpt.persist(enc.encode(_cust_frame(spark, sf_dir).concat_values()))
+    right = ckpt.persist(enc.encode(_supp_frame(spark, sf_dir).concat_values()))
     out = topk_cosine_join(left, right, k=3, impl="expr")
     return out.withColumn("sim", F.round("sim", 6))
 
@@ -212,8 +213,8 @@ def deepblocker_knn_blocking_md5_q(spark, sf_dir):
     from ..functions.vectors import topk_cosine_join
 
     enc = HashingWordEmbedder(dim=8, hash_fn="md5")
-    left = enc.encode(_cust_frame(spark, sf_dir).concat_values()).persist()
-    right = enc.encode(_supp_frame(spark, sf_dir).concat_values()).persist()
+    left = ckpt.persist(enc.encode(_cust_frame(spark, sf_dir).concat_values()))
+    right = ckpt.persist(enc.encode(_supp_frame(spark, sf_dir).concat_values()))
     both = left.select(
         F.concat(F.lit("L:"), F.col("id").cast("string")).alias("id"), "vector"
     ).unionByName(
@@ -226,8 +227,6 @@ def deepblocker_knn_blocking_md5_q(spark, sf_dir):
         "id", _project_expr(F.col("vector"), comps).alias("vector")
     )
     out = topk_cosine_join(proj(left), proj(right), k=3, impl="expr")
-    left.unpersist()
-    right.unpersist()
     return out.withColumn("sim", F.round("sim", 6))
 
 
@@ -381,8 +380,8 @@ def deepblocker_ctt_knn_md5_q(spark, sf_dir):
     lconc = _cust_frame(spark, sf_dir).concat_values()
     rconc = _supp_frame(spark, sf_dir).concat_values()
     perturbed = _ctt_perturbed
-    left = enc.encode(lconc).persist()
-    right = enc.encode(rconc).persist()
+    left = ckpt.persist(enc.encode(lconc))
+    right = ckpt.persist(enc.encode(rconc))
     lpert = enc.encode(perturbed(lconc, "L:"))
     rpert = enc.encode(perturbed(rconc, "R:"))
 
@@ -402,11 +401,13 @@ def deepblocker_ctt_knn_md5_q(spark, sf_dir):
         F.lit(1.0).alias("y"),
         absdiff(F.col("o.vector"), F.col("p.vector")).alias("x"),
     )
-    rk = orig.select(
-        "uid", "vector", F.row_number().over(
-            Window.orderBy(F.md5("uid"), F.col("uid"))
-        ).alias("rn"),
-    ).persist()
+    rk = ckpt.persist(
+        orig.select(
+            "uid", "vector", F.row_number().over(
+                Window.orderBy(F.md5("uid"), F.col("uid"))
+            ).alias("rn"),
+        )
+    )
     n_ent = rk.count()
     partner = rk.select(
         F.col("rn").alias("prn"), F.col("vector").alias("pv")
@@ -429,9 +430,6 @@ def deepblocker_ctt_knn_md5_q(spark, sf_dir):
         "id", F.zip_with("vector", aw, lambda x, a: x * a).alias("vector")
     )
     out = topk_cosine_join(rewt(left), rewt(right), k=3, impl="expr")
-    left.unpersist()
-    right.unpersist()
-    rk.unpersist()
     return out.withColumn("sim", F.round("sim", 5))
 
 
@@ -557,8 +555,8 @@ def deepblocker_hybrid_knn_md5_q(spark, sf_dir):
     enc = HashingWordEmbedder(dim=8, hash_fn="md5")
     lconc = _cust_frame(spark, sf_dir).concat_values()
     rconc = _supp_frame(spark, sf_dir).concat_values()
-    left = enc.encode(lconc).persist()
-    right = enc.encode(rconc).persist()
+    left = ckpt.persist(enc.encode(lconc))
+    right = ckpt.persist(enc.encode(rconc))
     lpert = enc.encode(_ctt_perturbed(lconc, "L:"))
     rpert = enc.encode(_ctt_perturbed(rconc, "R:"))
 
@@ -568,14 +566,14 @@ def deepblocker_hybrid_knn_md5_q(spark, sf_dir):
             F.col("vector"),
         )
 
-    both = u(left, "L:").unionByName(u(right, "R:")).persist()
+    both = ckpt.persist(u(left, "L:").unionByName(u(right, "R:")))
     comps = topk_pc_power(
         both.select(F.col("uid").alias("id"), "vector"), k=2, sample_n=2000, iters=20
     )
     proj = lambda df: df.select(
         "uid", _project_expr(F.col("vector"), comps).alias("p")
     )
-    po = proj(both).persist()
+    po = ckpt.persist(proj(both))
     pp = proj(u(lpert, "L:").unionByName(u(rpert, "R:")))
     absdiff = lambda a, b: F.concat(
         F.zip_with(a, b, lambda x, y: F.abs(x - y)), F.array(F.lit(1.0))
@@ -585,10 +583,12 @@ def deepblocker_hybrid_knn_md5_q(spark, sf_dir):
         F.lit(1.0).alias("y"),
         absdiff(F.col("o.p"), F.col("q.p")).alias("x"),
     )
-    rk = po.select(
-        "uid", "p",
-        F.row_number().over(Window.orderBy(F.md5("uid"), F.col("uid"))).alias("rn"),
-    ).persist()
+    rk = ckpt.persist(
+        po.select(
+            "uid", "p",
+            F.row_number().over(Window.orderBy(F.md5("uid"), F.col("uid"))).alias("rn"),
+        )
+    )
     n_ent = rk.count()
     partner = rk.select(F.col("rn").alias("prn"), F.col("p").alias("pb"))
     neg = rk.join(
@@ -613,8 +613,6 @@ def deepblocker_hybrid_knn_md5_q(spark, sf_dir):
         )
 
     out = topk_cosine_join(rewt("L:"), rewt("R:"), k=3, impl="expr")
-    for df in (left, right, both, po, rk):
-        df.unpersist()
     return out.withColumn("sim", F.round("sim", 5))
 
 

@@ -1,5 +1,6 @@
 """Query registrations: audits family (split from the original single-file registry; registration order preserved by package import order in __init__)."""
 from __future__ import annotations
+from .. import ckpt
 from ._core import F, ORACLES, Window, _shingle_cte, _t, minhash_lsh_dedup, quality_score, register, tokenize
 
 # ------------------------------------------------------------------ OLAP: grouping sets / cube
@@ -337,6 +338,7 @@ def hll_accuracy_audit_q(spark, sf_dir):
     FROM prec, sdocs, rec
     """,
 )
+@ckpt.scope()
 def lsh_precision_recall_audit_q(spark, sf_dir):
     """MEASURED banding quality on the actual corpus — the empirical
     companion to ``lsh_parameter_plan``'s closed-form curve: every
@@ -362,14 +364,13 @@ def lsh_precision_recall_audit_q(spark, sf_dir):
     # duplicated_span_stats serialization class, r12).  Signatures from
     # a within-row-distinct shingle set are value-identical (MinHash is
     # set-semantics; minhash_signatures array_distincts internally).
-    sh_all = (
+    sh_all = ckpt.persist(
         widen_for_kernel(docs.select("doc_id", "text"))
         .select("doc_id", tokenize("text", 1, []).alias("tk"))
         .select(
             "doc_id",
             F.array_distinct(word_shingles(F.col("tk"), 3)).alias("sh"),
         )
-        .persist()
     )
     # Zero-shingle (empty/short) docs carry no Jaccard evidence; the
     # oracle drops them via its inner join on the exploded-shingle
@@ -429,7 +430,7 @@ def lsh_precision_recall_audit_q(spark, sf_dir):
         f"CAST(CASE WHEN {den} = 0 THEN 1000000"
         f" ELSE {num} * 1000000 DIV {den} END AS BIGINT)"
     )
-    out = (
+    out = ckpt.checkpoint(
         prec.crossJoin(F.broadcast(sdocs))
         .crossJoin(F.broadcast(rec))
         .select(
@@ -443,9 +444,7 @@ def lsh_precision_recall_audit_q(spark, sf_dir):
             "n_caught",
             ppm("n_caught", "n_sample_true").alias("recall_ppm"),
         )
-        .localCheckpoint(eager=True)
     )
-    sh_all.unpersist()
-    return out
+    return ckpt.keep(out)
 
 

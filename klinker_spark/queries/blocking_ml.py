@@ -1,5 +1,6 @@
 """Query registrations: blocking_ml family (split from the original single-file registry; registration order preserved by package import order in __init__)."""
 from __future__ import annotations
+from .. import ckpt
 from ._core import BlockManager, EntityFrame, F, TokenBlocker, UniqueNameBlocker, _STOP_SQL, _cust_frame, _explode_blocks, _supp_frame, _t, brute_force_topk, load_events, melt, quality_score, register
 from .relational import _TOKENS_SQL
 from .ann import _md5_component_sql
@@ -962,12 +963,8 @@ def sif_pc_removal_md5_q(spark, sf_dir):
 
     conc = _cust_frame(spark, sf_dir).concat_values()
     # diamond: the embedding pipeline feeds the PC sample AND the final
-    # projection — materialize once, nothing left persisted
-    emb = (
-        SIFHashingWordEmbedder(dim=8, hash_fn="md5")
-        .encode(conc)
-        .localCheckpoint(eager=True)
-    )
+    # projection — materialize once; the caller's scope frees it
+    emb = ckpt.checkpoint(SIFHashingWordEmbedder(dim=8, hash_fn="md5").encode(conc))
     u = first_pc_power(emb, sample_n=2000, iters=30)
     u_col = F.array(*[F.lit(float(x)) for x in u])
     dot = F.aggregate(

@@ -1,5 +1,6 @@
 """Query registrations: curation family (split from the original single-file registry; registration order preserved by package import order in __init__)."""
 from __future__ import annotations
+from .. import ckpt
 from ._core import F, ORACLES, _shingle_cte, _t, _toks_cte, load_events, ngram_jaccard_dedup, register, tokenize
 from .ann import _COS_SQL, _gd_iter_ctes, _index_current, _write_index_manifest
 
@@ -882,7 +883,7 @@ def cm_token_freq_q(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(F.explode(tokenize("text", 1, [])).alias("token"))
-    true = toks.groupBy("token").agg(F.count("*").alias("true_count")).persist()
+    true = ckpt.persist(toks.groupBy("token").agg(F.count("*").alias("true_count")))
     true.count()
     sketch = cm_build(
         true, "token", width=1024, depth=4, hash_fn="md5", weight_col="true_count"
@@ -1240,7 +1241,7 @@ def ann_topk_ivfpq_md5_q(spark, sf_dir):
         out = ann_topk_ivfpq(
             emb.where(F.col("vec_id") % 10 == 0), path, k=10, n_probe=4, impl="expr"
         )
-        return out.withColumn("dist", F.round("dist", 6)).localCheckpoint(eager=True)
+        return ckpt.checkpoint(out.withColumn("dist", F.round("dist", 6)))
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -1302,7 +1303,7 @@ def ann_topk_ivfpq_q(spark, sf_dir):
         build_ivfpq_index(emb, path, n_centroids=16, m=8, k_codes=16,
                           quantizer="kmeans")
         out = ann_topk_ivfpq(emb.where(F.col("vec_id") % 10 == 0), path, k=10, n_probe=4)
-        return out.withColumn("dist", F.round("dist", 6)).localCheckpoint(eager=True)
+        return ckpt.checkpoint(out.withColumn("dist", F.round("dist", 6)))
     finally:
         shutil.rmtree(path, ignore_errors=True)
 

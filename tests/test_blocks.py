@@ -196,14 +196,18 @@ def test_covered_ids_excludes_one_sided_assignments(spark):
     assert {r["id"] for r in arr.covered_ids("A").collect()} == {"a1"}
 
 
-def test_persisted_key_manager_keeps_semantics(spark):
-    raw = _km(spark, [("k", "a1"), ("x", "a9")], [("k", "b1")])
-    bm = raw.persisted()  # raw cache: one-sided keys stay in the frames
-    assert not bm.keys_effective
+def test_effective_key_manager_keeps_semantics(spark):
+    """Raw key frames keep one-sided keys; ``effective_keys()`` filters
+    them out, and a manager built on the filtered frames with
+    ``keys_effective=True`` describes the same blocks."""
+    bm = _km(spark, [("k", "a1"), ("x", "a9")], [("k", "b1")])
+    assert not bm.keys_effective  # raw frames: one-sided keys stay in
     assert {tuple(r) for r in bm.block_pairs().collect()} == {("k", "a1", "b1")}
     assert blocks_as_dict(bm) == {"k": ({"a1"}, {"b1"})}
-    eff = raw.persisted(effective=True)  # block-filtered cache
+    lk, rk = bm.effective_keys()
+    eff = BlockManager(None, "A", "B", lk, rk, keys_effective=True)
     assert eff.keys_effective
+    assert all(a is b for a, b in zip(eff.effective_keys(), (lk, rk)))  # no second filter
     assert {r["id"] for r in eff.left_keys.collect()} == {"a1"}
     assert {tuple(r) for r in eff.block_pairs().collect()} == {("k", "a1", "b1")}
 
@@ -321,28 +325,3 @@ def test_composite_pipeline_rerun_compiles_no_new_code(spark, tmp_path):
     after, _ = codegen_compiles(spark)
     assert after - before <= 30
 
-
-def test_release_caches_per_manager(spark):
-    """ADVICE r10: a long-lived library consumer must be able to free
-    one dead manager's caches without the harness-wide release_all —
-    release_caches unpersists exactly that manager's tracked frames
-    and leaves other managers' caches alive."""
-    from klinker_spark import ckpt
-
-    ckpt.release_all(spark)
-    bm1 = _km(spark, [("k", "a1")], [("k", "b1")]).combine(
-        _km(spark, [("k", "a2")], [("k", "b2")])
-    ).persisted()
-    bm2 = _km(spark, [("j", "a9")], [("j", "b9")]).persisted()
-    n_tracked = len(ckpt._TRACKED)
-    assert n_tracked == 4  # two key frames per manager
-    bm1.pairs().collect()
-    bm1.release_caches()
-    # bm1's caches gone, bm2's still registered and usable
-    assert len(ckpt._TRACKED) == n_tracked - 2
-    assert {tuple(r) for r in bm2.pairs().collect()} == {("a9", "b9")}
-    bm1.release_caches()  # idempotent
-    assert len(ckpt._TRACKED) == n_tracked - 2
-    bm2.release_caches()
-    assert ckpt._TRACKED == []
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0

@@ -9,6 +9,9 @@ import contextlib
 import pytest
 from pyspark.sql import functions as F
 
+from klinker_spark import ckpt
+from klinker_spark.queries import QUERIES
+
 
 def plan_of(df) -> str:
     buf = io.StringIO()
@@ -680,29 +683,51 @@ def test_phonetic_key_stays_codegen(spark):
     assert "ArrowEvalPython" not in plan
 
 
-def test_no_nested_output_columns(spark, sf_dir):
-    """Every registered query must emit SCALAR output columns only.
-    The driver's correctness canonicalizer (pandas sort_values over
-    object cells) cannot sort/hash Python lists — the r6
-    hll_distinct_sketch ERR — so array/map/struct outputs must be
-    reshaped (array_join / explode / micro-int CSV) in query AND
-    oracle.  scripts/check_oracle.py enforces the same refusal at
-    gate time; this test pins it for every NEW registration.
-    Schema-only: each query DataFrame is built (eager driver work
-    included) but never executed."""
-    from klinker_spark.queries import QUERIES
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_registered_query_contract(spark, sf_dir, name):
+    """Every registered query, built and written (noop) inside one
+    ``ckpt.scope()``:
 
-    offenders = {}
-    for name, fn in QUERIES.items():
-        df = fn(spark, sf_dir)
-        nested = [
-            f.name
-            for f in df.schema.fields
-            if f.dataType.typeName() in ("array", "map", "struct")
-        ]
-        if nested:
-            offenders[name] = nested
-    assert not offenders, f"nested (driver-unhashable) output columns: {offenders}"
+    - emits SCALAR output columns only.  The correctness gate's
+      canonicalizer (pandas sort_values over object cells) cannot
+      sort/hash Python lists — the r6 hll_distinct_sketch ERR — so
+      array/map/struct outputs must be reshaped (array_join / explode /
+      micro-int CSV) in query AND oracle; scripts/check_oracle.py
+      enforces the same refusal at gate time;
+    - leaves no cache behind once the scope exits: every persist and
+      checkpoint it made, in its operators or handed to the caller,
+      is freed without any release_all.  (Compared as id sets: earlier
+      tests' caches may be cleaned up meanwhile.)"""
+    before = set(spark.sparkContext._jsc.getPersistentRDDs())
+    with ckpt.scope():
+        df = QUERIES[name](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+    nested = [
+        f.name for f in df.schema.fields if f.dataType.typeName() in ("array", "map", "struct")
+    ]
+    assert not nested, f"nested (unhashable by the correctness gate) output columns: {nested}"
+    assert set(spark.sparkContext._jsc.getPersistentRDDs()) - before == set()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "embedding_knn_blocking_md5",
+        "deepblocker_knn_blocking_md5",
+        "deepblocker_ctt_knn_md5",
+        "deepblocker_hybrid_knn_md5",
+    ],
+)
+def test_md5_knn_twins_read_their_caches(spark, sf_dir, name):
+    """The md5 kNN twins return a lazy ``topk_cosine_join(impl="expr")``
+    plan whose inputs they persist (its CALLER NOTE): the caches must
+    outlive the return — they belong to the caller's scope — so the
+    plan the write ran reads them instead of re-running the encoders
+    inside the per-pair similarity."""
+    with ckpt.scope():
+        df = QUERIES[name](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        assert "InMemoryTableScan" in plan_of(df)
 
 
 def test_purge_no_corpus_single_partition_window(spark, sf_dir):

@@ -110,13 +110,16 @@ def test_nicdm_reduces_hub_dominance(spark):
     assert scaled.groupBy("query_id").count().where("count != 3").count() == 0
 
 
-def test_ivf_index_append(spark, tmp_path):
+def test_ivf_index_append(spark, tmp_path, monkeypatch):
     """Append = Faiss add(): new vectors land in existing centroid
     partitions, are findable (self-query returns self at sim 1), and
-    no rows are lost or duplicated."""
+    no rows are lost or duplicated — with the literal probe kernel (8
+    centroids) and, with PROBE_LITERAL_MAX_CENTROIDS patched to 2, the
+    matmul kernel."""
     from pyspark.sql import functions as F
 
     from conftest import SF_DIR
+    from klinker_spark.ops import similarity
     from klinker_spark.ops.similarity import (
         ann_topk_ivf_indexed,
         build_ivf_index,
@@ -126,16 +129,18 @@ def test_ivf_index_append(spark, tmp_path):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     first = emb.where(F.col("vec_id") % 2 == 0)
     second = emb.where(F.col("vec_id") % 2 == 1)
-    path = str(tmp_path / "ivf_app")
-    build_ivf_index(first, path, n_centroids=8)
-    ivf_index_append(second, path)
+    for literal_max in (similarity.PROBE_LITERAL_MAX_CENTROIDS, 2):
+        monkeypatch.setattr(similarity, "PROBE_LITERAL_MAX_CENTROIDS", literal_max)
+        path = str(tmp_path / f"ivf_app_{literal_max}")
+        build_ivf_index(first, path, n_centroids=8)
+        ivf_index_append(second, path)
 
-    lists = spark.read.parquet(f"{path}/lists")
-    assert lists.count() == emb.count()
-    assert lists.select("id").distinct().count() == emb.count()
+        lists = spark.read.parquet(f"{path}/lists")
+        assert lists.count() == emb.count()
+        assert lists.select("id").distinct().count() == emb.count()
 
-    q = second.limit(3)
-    got = ann_topk_ivf_indexed(q, path, k=1, n_probe=8).collect()
-    assert {r["query_id"] for r in got} == {r["vec_id"] for r in q.collect()}
-    for r in got:
-        assert r["neighbor_id"] == r["query_id"] and r["sim"] >= 0.999999
+        q = second.limit(3)
+        got = ann_topk_ivf_indexed(q, path, k=1, n_probe=8).collect()
+        assert {r["query_id"] for r in got} == {r["vec_id"] for r in q.collect()}
+        for r in got:
+            assert r["neighbor_id"] == r["query_id"] and r["sim"] >= 0.999999
