@@ -47,10 +47,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def _with_hygiene(fn: Callable[[SparkSession, str], DataFrame]):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # the driver runs hundreds of rows in one session; free the
-            # previous row's localCheckpoint blocks before each query so
-            # orphaned storage never evict-churns later rows (the same
-            # contract as bench.py::_reset)
+            # the gate runs hundreds of rows in one session and acts on
+            # each returned lazy frame after this call returns, so a row
+            # cannot run inside a ckpt.scope(): caches a query hands to
+            # its caller must outlive the call.  Free the previous row's
+            # caches here instead, before they evict-churn later rows.
             release_all(spark)
             return fn(spark, sf_dir)
 

@@ -5,9 +5,9 @@ One quirk: ``events.parquet`` has stored ``ts`` either as parquet
 the latter Spark's vectorized reader rejects (`PARQUET_TYPE_ILLEGAL`)
 unless ``spark.sql.legacy.parquet.nanosAsLong`` is set (done once in
 ``session.get_spark``), in which case the column arrives as ``bigint``
-nanos.  ``load_events`` normalizes either form to a proper
-microsecond timestamp column so downstream window/watermark code is
-storage-agnostic.
+nanos.  ``event_ts`` (applied by ``load_events``) normalizes either
+form to a microsecond timestamp column, batch or streaming, so
+downstream window/watermark code is storage-agnostic.
 """
 
 from __future__ import annotations
@@ -28,11 +28,14 @@ TABLES = [
     "embeddings",
 ]
 
-__all__ = ["TABLES", "load_table", "load_tables", "load_events", "load_text_corpus"]
+__all__ = ["TABLES", "load_table", "load_tables", "load_events", "event_ts", "load_text_corpus"]
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+
+
+def event_ts(df: DataFrame) -> DataFrame:
     dt = dict(df.dtypes)["ts"]
     if dt == "bigint":
         # Integer division: ts ~1.7e18 exceeds double's exact range, so

@@ -917,6 +917,16 @@ def _index_current(path: str, src_path: str) -> bool:
         return False
 
 
+def _derived_path(name: str) -> str:
+    """Where a query keeps a table it derives from its input (a
+    persisted index, a bucketed copy): under the system temp directory,
+    never under the package, which may be read-only."""
+    import os
+    import tempfile
+
+    return os.path.join(tempfile.gettempdir(), f"klinker_{name}")
+
+
 def _write_index_manifest(path: str, src_path: str, **meta) -> None:
     import json as _json
     import os
@@ -938,7 +948,7 @@ def ann_topk_ivf_indexed_q(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "spark-warehouse", f"ivf_{sf_tag}")
+    path = _derived_path(f"ivf_{sf_tag}")
     src = os.path.join(sf_dir, "embeddings.parquet")
     if not _index_current(path, src):
         build_ivf_index(emb, path, n_centroids=16)
@@ -957,13 +967,12 @@ def ann_topk_ivf_indexed_md5_q(spark, sf_dir):
     quantizer, then probe it — partition pruning, cogroup list
     search, and merge all value-checked."""
     import os
-    import tempfile
 
     from ..ops.similarity import ann_topk_ivf_indexed, build_ivf_index
 
     emb = _t(spark, sf_dir, "embeddings")
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(tempfile.gettempdir(), f"klinker_ivf_md5_{sf_tag}")
+    path = _derived_path(f"ivf_md5_{sf_tag}")
     src = os.path.join(sf_dir, "embeddings.parquet")
     if not _index_current(path, src):
         build_ivf_index(emb, path, n_centroids=16, quantizer="hash_sample")

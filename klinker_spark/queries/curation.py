@@ -2,7 +2,7 @@
 from __future__ import annotations
 from .. import ckpt
 from ._core import F, ORACLES, _shingle_cte, _t, _toks_cte, load_events, ngram_jaccard_dedup, register, tokenize
-from .ann import _COS_SQL, _gd_iter_ctes, _index_current, _write_index_manifest
+from .ann import _COS_SQL, _derived_path, _gd_iter_ctes, _index_current, _write_index_manifest
 
 # ------------------------------------------------------------------ corpus curation (training-data pipeline)
 @register(
@@ -1316,13 +1316,13 @@ def ann_topk_ivfpq_q(spark, sf_dir):
     ),
 )
 def ann_topk_ivfpq_indexed_md5_q(spark, sf_dir):
-    """SEARCH-ONLY IVF-PQ (r4 verdict #5): probes a PREBUILT persisted
-    index under spark-warehouse — built on first call (deterministic
-    hash-sample quantizers), reused afterwards, so the measured cost is
-    the search kernel (static partition prune → cogrouped numpy ADC →
-    scalar merge), not the build, exactly as ``ann_topk_ivf_indexed``
-    already does for plain IVF.  The production ``matmul`` kernel runs
-    under the same exact oracle as the expr twin (bit-parity tested in
+    """SEARCH-ONLY IVF-PQ: probes a PREBUILT persisted index under the
+    temp directory — built on first call (deterministic hash-sample
+    quantizers), reused afterwards, so the measured cost is the search
+    kernel (static partition prune → cogrouped numpy ADC → scalar
+    merge), not the build, as ``ann_topk_ivf_indexed`` does for IVF.
+    The production ``matmul`` kernel runs under the same exact oracle as
+    the expr twin (bit-parity tested in
     tests/test_pq.py::test_ivfpq_build_search_parity_and_pruning)."""
     import os
 
@@ -1330,12 +1330,7 @@ def ann_topk_ivfpq_indexed_md5_q(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "..",
-        "spark-warehouse",
-        f"ivfpq_{sf_tag}",
-    )
+    path = _derived_path(f"ivfpq_{sf_tag}")
     src = os.path.join(sf_dir, "embeddings.parquet")
     if not _index_current(path, src):
         build_ivfpq_index(

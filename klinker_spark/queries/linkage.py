@@ -2,7 +2,7 @@
 from __future__ import annotations
 from .. import ckpt
 from ._core import F, Window, _STOP_SQL, _t, ann_topk_ivf, brute_force_topk, qgrams, quality_score, register
-from .ann import _COS_SQL, _IVF_MD5_ORACLE, _KNN_ORACLE, _index_current, _write_index_manifest
+from .ann import _COS_SQL, _IVF_MD5_ORACLE, _KNN_ORACLE, _derived_path, _index_current, _write_index_manifest
 from .events import _NODE_TAG_SHIFT, _tag_node
 
 # ------------------------------------------------------------------ JL projection
@@ -550,10 +550,8 @@ def personalized_pagerank_q(spark, sf_dir):
 
     Node ids ride the iterative shuffles as tagged BIGINTS and decode
     to the oracle's "c:/o:/p:" strings only in the final projection —
-    the ``pagerank_importance`` scheme (r12: this was the last
-    string-keyed pagerank lane; the rank arithmetic is
-    representation-independent, so the string-node oracle is
-    unchanged)."""
+    the ``pagerank_importance`` scheme; the rank arithmetic is
+    representation-independent, so the oracle keeps string nodes."""
     from ..ops.graph import pagerank
     from .events import _NODE_TAG_SHIFT, _tag_node
 
@@ -958,10 +956,8 @@ def ivf_append_audit_q(spark, sf_dir):
         shutil.rmtree(path, ignore_errors=True)
 
 
-#: build-vs-reuse record per bucketed catalog table, stamped into the
-#: bench artifact (r10 verdict #2: a first-touch 8 s bucketing build
-#: counted inside bucketed_join_revenue's timed window is
-#: indistinguishable from a host flap without this marker).
+#: build-vs-reuse record per bucketed catalog table, for the bench
+#: artifact: a first-touch build runs inside the first consuming query.
 BUCKETED_EVENTS: dict[str, str] = {}
 
 
@@ -986,10 +982,7 @@ def _ensure_bucketed_table(spark, sf_dir: str, table: str, key: str, n_buckets: 
         BUCKETED_EVENTS.setdefault(name, "reused-catalog")
         return name
     src_path = os.path.join(sf_dir, f"{table}.parquet")
-    warehouse = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "..", "spark-warehouse"
-    )
-    path = os.path.abspath(os.path.join(warehouse, f"bkt_{table}_{sf_tag}"))
+    path = _derived_path(f"bkt_{table}_{sf_tag}")
     src = spark.read.parquet(src_path)
     if _index_current(path, src_path):
         cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in src.schema)

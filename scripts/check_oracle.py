@@ -105,15 +105,6 @@ def main():
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
             continue
-        # free the previous query's checkpoint/broadcast blocks
-        # EXPLICITLY (see bench.py::_reset — gc.collect alone leaves
-        # closure-pinned blocks behind)
-        import gc
-
-        from klinker_spark.ckpt import release_all
-
-        release_all(spark)
-        gc.collect()
         t0 = time.time()
         try:
             sdf = fn(spark, SF_DIR)

@@ -1,13 +1,44 @@
-"""Regenerate PLANS.md — formatted physical plans of headline queries
-with scale annotations.  Companion to tests/test_plans.py."""
+"""Dump formatted physical plans (``explain("formatted")``).
+
+With no arguments, regenerate PLANS.md: the plans of the headline
+queries at sf0.001 with notes, guarded by tests/test_plans.py.
+
+With ``OUTDIR SUFFIX [SF_DIR] [query ...]``, write one
+``OUTDIR/<query>_<SUFFIX>.txt`` per query (default: the bench's
+``SF_DIR`` and ``DEFAULT_QUERIES``): run it at the base commit with suffix ``before``
+and at the change with ``after``.
+
+A query whose result is a checkpoint explains as a one-line
+``Scan ExistingRDD``, which shows nothing of the computation.  While a
+query builds, ``klinker_spark.ckpt.checkpoint`` — the package's only
+caller of ``localCheckpoint`` — is wrapped to record the plan of every
+frame entering a checkpoint; when the final plan has an ``ExistingRDD``
+leaf, the plan that entered the last checkpoint is appended.
+
+Usage: python scripts/dump_plans.py [OUTDIR SUFFIX [SF_DIR] [query ...]]
+"""
 
 from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
 sys.path.insert(0, ".")
+
+#: per-query dump default: the iterative and dedup operators whose
+#: plans a change most often moves
+DEFAULT_QUERIES = [
+    "pagerank_importance",
+    "personalized_pagerank",
+    "duplicated_span_stats",
+    "minhash_dedup",
+    "ngram_containment_dedup",
+    "edit_distance_dedup",
+    "bpe_train_merges",
+    "lsh_precision_recall_audit",
+]
 
 NOTES = {
     "token_blocking": "Both scans pruned to (id, name); per-side partial+final ObjectHashAggregate (collect_set); supplier side broadcast — zero shuffle joins.",
@@ -42,11 +73,16 @@ NOTES = {
 }
 
 
-def main() -> None:
-    from klinker_spark.queries import QUERIES
-    from klinker_spark.session import get_spark
+def _fmt_plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
-    spark = get_spark("plansdoc")
+
+def plans_md(spark) -> None:
+    from klinker_spark.queries import QUERIES
+
     sf = "/root/testdata/sf0.001"
     out = [
         "# PLANS — captured physical plans of headline queries (sf0.001)",
@@ -56,14 +92,59 @@ def main() -> None:
         "",
     ]
     for name, note in NOTES.items():
-        df = QUERIES[name](spark, sf)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        tree = buf.getvalue().split("\n\n")[0]
+        tree = _fmt_plan(QUERIES[name](spark, sf)).split("\n\n")[0]
         out.append(f"## {name}\n\n{note}\n\n```\n{tree}\n```\n")
     with open("PLANS.md", "w") as f:
         f.write("\n".join(out))
+
+
+def per_query(spark, outdir: str, suffix: str, sf: str, names: list[str]) -> None:
+    from klinker_spark import ckpt
+    from klinker_spark.queries import QUERIES
+
+    os.makedirs(outdir, exist_ok=True)
+    entering: list[str] = []
+    checkpoint = ckpt.checkpoint
+
+    def recording_checkpoint(df):
+        entering.append(_fmt_plan(df))
+        return checkpoint(df)
+
+    ckpt.checkpoint = recording_checkpoint
+    try:
+        for name in names:
+            entering.clear()
+            try:
+                with ckpt.scope():
+                    text = _fmt_plan(QUERIES[name](spark, sf))
+                if "ExistingRDD" in text and entering:
+                    text += (
+                        f"\n# --- checkpoint-transparent addendum: the final frame is a"
+                        f"\n# --- checkpoint leaf; below is the plan of the frame that"
+                        f"\n# --- ENTERED the last checkpoint ({len(entering)} recorded"
+                        f"\n# --- while building this query) ---\n" + entering[-1]
+                    )
+            except Exception as exc:  # noqa: BLE001 - record, keep dumping
+                text = f"ERROR dumping plan: {exc!r}\n"
+            path = os.path.join(outdir, f"{name}_{suffix}.txt")
+            with open(path, "w") as f:
+                f.write(f"# {name} — explain('formatted') @ {sf} [{suffix}]\n")
+                f.write(text)
+            print(f"wrote {path}")
+    finally:
+        ckpt.checkpoint = checkpoint
+
+
+def main() -> None:
+    import bench
+    from klinker_spark.session import get_spark
+
+    if len(sys.argv) == 1:
+        plans_md(get_spark("plansdump"))
+        return
+    outdir, suffix, *rest = sys.argv[1:]
+    sf = rest[0] if rest else bench.SF_DIR
+    per_query(get_spark("plansdump"), outdir, suffix, sf, rest[1:] or DEFAULT_QUERIES)
 
 
 if __name__ == "__main__":

@@ -1,8 +1,10 @@
 """Scaling probe beyond the bench's 10x: time a set of queries at two
 scale factors and report the per-query scaling exponent
-``log(t_hi/t_lo) / log(sf_hi/sf_lo)`` from WARM runs (second
-invocation in the same session), so codegen/scan cold costs don't
-masquerade as scaling.
+``log(t_hi/t_lo) / log(sf_hi/sf_lo)``.  Each point is the faster of two
+runs through ``bench.run_lane`` in one session, so codegen and scan
+first-touch costs don't masquerade as scaling; each side's executor
+CPU seconds (``cpu_s``) are reported next to its wall time, so a wall
+ratio the CPU ratio does not share is host noise, not scaling.
 
 Usage: python scripts/scale_probe.py <lo_dir> <hi_dir> <ratio> [query ...]
 
@@ -16,7 +18,6 @@ from __future__ import annotations
 import json
 import math
 import sys
-import time
 
 sys.path.insert(0, ".")
 
@@ -38,55 +39,34 @@ def main() -> None:
     lo_dir, hi_dir, ratio = sys.argv[1], sys.argv[2], float(sys.argv[3])
     names = sys.argv[4:] or DEFAULT_QUERIES
 
+    import bench
     import klinker_spark as ks
-    from klinker_spark.ckpt import release_all
-    from klinker_spark.queries import QUERIES
 
     spark = ks.get_spark("scale_probe")
     ks.session.warm_python_workers(spark)  # once-per-worker BLAS/tile boot, untimed
 
-    def warm_time(name: str, sf_dir: str) -> float:
-        best = float("inf")
+    def best_of_two(name: str, sf_dir: str) -> dict:
+        runs = []
         for _ in range(2):
-            release_all(spark)
-            t0 = time.time()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.time() - t0)
-        return best
-
-    def host_probe() -> float:
-        # same busy-loop as bench.py's section probes: an exponent is
-        # only a code property if the host's per-core throughput was
-        # the SAME for the lo and hi measurements — a probe delta
-        # within a row flags the row as flap-corrupted (this box has
-        # produced NEGATIVE exponents mid-flap: sf3 "faster" than sf1)
-        t0 = time.time()
-        x = 0
-        for i in range(20_000_000):
-            x ^= i * i
-        return round(time.time() - t0, 2)
+            bench._reset(spark)
+            runs.append(bench.run_lane(spark, name, sf_dir))
+        return min(runs, key=lambda r: r["wall"])
 
     out = {}
     for name in names:
-        p_lo = host_probe()
-        t_lo = warm_time(name, lo_dir)
-        p_hi = host_probe()
-        t_hi = warm_time(name, hi_dir)
+        lo, hi = best_of_two(name, lo_dir), best_of_two(name, hi_dir)
+        t_lo, t_hi = lo["wall"], hi["wall"]
         exp = round(math.log(t_hi / t_lo) / math.log(ratio), 2) if t_lo > 0 else None
-        flagged = max(p_lo, p_hi) / min(p_lo, p_hi) > 1.3
         out[name] = {
             "t_lo": round(t_lo, 2),
             "t_hi": round(t_hi, 2),
+            "cpu_lo": round(lo["cpu_s"], 2),
+            "cpu_hi": round(hi["cpu_s"], 2),
             "exponent": exp,
-            "probe_lo": p_lo,
-            "probe_hi": p_hi,
-            "host_flap": flagged,
         }
         print(
             f"# {name}: {t_lo:.2f}s -> {t_hi:.2f}s exp={exp} "
-            f"(probes {p_lo}/{p_hi}{' FLAP' if flagged else ''})",
+            f"(cpu {lo['cpu_s']:.2f}s -> {hi['cpu_s']:.2f}s)",
             file=sys.stderr,
         )
     print(json.dumps({"ratio": ratio, "lo": lo_dir, "hi": hi_dir, "queries": out}))

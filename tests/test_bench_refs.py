@@ -1,41 +1,25 @@
-"""Retry-lane reference policy (bench.py): the per-row reference must be
-the MINIMUM across recent committed BENCH_LOCAL.json versions, not the
-single latest artifact — a flap-inflated committed row must not mask a
-real outlier in the next run (r12: golden_records committed at 27.6 s
-hid an 11.5 s sample whose healthy history is ~5 s).
+"""bench.py: the stdout line and the lane runner.
+
+The stdout line must keep the full per-query map within its character
+budget.  ``run_lane`` must return the documented run record, run the
+lane inside a cache scope (nothing left persisted) and leave no job
+group set behind it, also when the query raises.
 """
 
 from __future__ import annotations
 
 import json
-import os
-import subprocess
 
 import pytest
 
 import bench
-
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _head_artifact():
-    try:
-        raw = subprocess.run(
-            ["git", "-C", HERE, "show", "HEAD:BENCH_LOCAL.json"],
-            capture_output=True,
-            text=True,
-            timeout=30,
-        ).stdout
-        return json.loads(raw)
-    except Exception:
-        return None
+from conftest import SF_DIR
 
 
 def test_compact_line_never_drops_the_per_query_map():
-    """r12 verdict #1: the compact stdout line overflowed its budget and
-    fell back to ``{"queries": {"total_only": ...}}`` — the driver got
-    ZERO per-query timings.  The line must carry every headline lane
-    even in the worst case (26 long-named lanes, max retries)."""
+    """The line carries every headline lane even in the worst case (26
+    long-named lanes, all totals at their widest): a fallback to a
+    total alone would leave the reader no per-query timings."""
     timings = {name: 123.456 for name in bench.BENCH_QUERIES}
     assert len(timings) == 26
     full = {
@@ -44,13 +28,13 @@ def test_compact_line_never_drops_the_per_query_map():
         "unit": "sec",
         "queries": timings,
         "sf": 0.1,
-        "warm_lane": "cache-warm-r11",
+        "warm_lane": bench.WARM_LANE,
         "warm_total": 999.999,
         "curation_total": 999.999,
         "sf1_total": 9999.999,
         "sf1": {"total": 9999.999},
     }
-    line = bench._compact_line(full, n_retries=30)
+    line = bench._compact_line(full)
     assert len(line) <= bench._COMPACT_MAX_CHARS
     parsed = json.loads(line)
     assert set(parsed["queries"]) == set(bench.BENCH_QUERIES)
@@ -75,16 +59,16 @@ def test_compact_line_sheds_optional_fields_before_query_precision():
         "unit": "sec",
         "queries": timings,
         "sf": 0.1,
-        "warm_lane": "cache-warm-r11",
+        "warm_lane": bench.WARM_LANE,
         "warm_total": 1.0,
         "curation_total": 1.0,
         "sf1_total": 1.0,
         "sf1": {"total": 1.0},
     }
-    line = bench._compact_line(full, n_retries=30)
+    line = bench._compact_line(full)
     parsed = json.loads(line)
     assert set(parsed["queries"]) == set(timings)
-    assert "retries" not in parsed  # first shed
+    assert "warm_lane" not in parsed  # first shed
     assert all(v == 1234.57 for v in parsed["queries"].values())
 
 
@@ -97,43 +81,41 @@ def test_compact_line_warns_when_still_over_budget(capsys):
         "queries": timings, "sf": 0.1, "warm_lane": "w", "warm_total": 1.0,
         "curation_total": 1.0, "sf1": {"total": 1.0},
     }
-    line = bench._compact_line(full, n_retries=0)
+    line = bench._compact_line(full)
     assert len(line) > bench._COMPACT_MAX_CHARS
     assert set(json.loads(line)["queries"]) == set(timings)
     assert "over the 1900-char budget" in capsys.readouterr().err
-    assert bench._compact_line({**full, "queries": {"q": 1.0}}, n_retries=0)
+    assert bench._compact_line({**full, "queries": {"q": 1.0}})
     assert capsys.readouterr().err == ""
 
 
-def test_retry_lane_prioritizes_biggest_outliers(monkeypatch):
-    """Under the per-lane cap the retries must go to the rows whose
-    cold/ref ratio is largest — r13 run 1 burned all slots on 2-3x rows
-    in dict order while an 8x outlier fell off the cap unretried."""
-    monkeypatch.setattr(bench, "_RETRY_CAP_PER_LANE", 2)
-    bench._RETRY.clear()
-    timings = {"mild_a": 3.0, "huge": 40.0, "mild_b": 2.5, "big": 9.0}
-    refs = {("x", n): 1.0 for n in timings}
-    ran = []
-    bench._retry_outliers("x", timings, refs, lambda n: ran.append(n) or 1.0)
-    assert ran == ["huge", "big"]
-    bench._RETRY.clear()
+RECORD_KEYS = {
+    "wall", "build", "action", "jobs", "stages", "tasks", "run_s", "cpu_s",
+    "gc_s", "shuffle_write_mb", "spill_mb", "codegen", "codegen_ms",
+    "heap_mb", "leaked_rdds",
+}
 
 
-def test_retry_refs_are_min_across_committed_history():
-    head = _head_artifact()
-    if not head:
-        pytest.skip("no committed BENCH_LOCAL.json (gitless checkout)")
-    refs = bench._committed_refs()
-    assert refs, "committed refs must parse"
-    checked = 0
-    for lane, sec in (
-        ("headline", "queries"),
-        ("curation", "queries_curation"),
-        ("extras", "queries_extra"),
-    ):
-        for name, t in (head.get(sec) or {}).items():
-            if isinstance(t, (int, float)) and t > 0:
-                # min over history can only be <= the latest committed row
-                assert refs[(lane, name)] <= float(t) + 1e-9
-                checked += 1
-    assert checked > 20, "expected a populated reference table"
+def test_run_lane_record(spark):
+    """minhash_dedup caches its signatures: the scope must free them."""
+    rec = bench.run_lane(spark, "minhash_dedup", SF_DIR)
+    assert set(rec) == RECORD_KEYS
+    assert rec["jobs"] >= 1 and rec["stages"] >= 1 and rec["tasks"] >= 1
+    assert rec["leaked_rdds"] == 0
+    assert rec["build"] + rec["action"] == pytest.approx(rec["wall"], abs=0.002)
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_run_lane_clears_job_group_when_the_query_raises(spark, monkeypatch):
+    from klinker_spark.queries import QUERIES
+
+    def boom(spark, sf_dir):
+        spark.range(3).count()  # one job under the lane's group
+        raise RuntimeError("boom")
+
+    monkeypatch.setitem(QUERIES, "bench_test_boom", boom)
+    with pytest.raises(RuntimeError, match="boom"):
+        bench.run_lane(spark, "bench_test_boom", SF_DIR)
+    sc = spark.sparkContext
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    assert sc.getLocalProperty("spark.job.description") is None

@@ -144,3 +144,34 @@ def test_ivf_index_append(spark, tmp_path, monkeypatch):
         assert {r["query_id"] for r in got} == {r["vec_id"] for r in q.collect()}
         for r in got:
             assert r["neighbor_id"] == r["query_id"] and r["sim"] >= 0.999999
+
+
+def test_indexed_query_writes_its_index_under_the_temp_dir(spark, tmp_path, monkeypatch):
+    """A registered query's derived tables go under the temp directory,
+    never under the package, which may be read-only."""
+    import os
+    import tempfile
+
+    import klinker_spark
+    from conftest import SF_DIR
+    from klinker_spark import ckpt
+    from klinker_spark.queries import QUERIES
+
+    def package_files():
+        root = os.path.dirname(klinker_spark.__file__)
+        return {
+            os.path.join(d, f)
+            for d, subdirs, fs in os.walk(root)
+            if "__pycache__" not in d
+            for f in fs
+        }
+
+    before = package_files()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    with ckpt.scope():
+        QUERIES["ann_topk_ivf_indexed"](spark, SF_DIR).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    tag = os.path.basename(SF_DIR.rstrip("/"))
+    assert os.path.isfile(tmp_path / f"klinker_ivf_{tag}" / "_MANIFEST.json")
+    assert package_files() == before
