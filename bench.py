@@ -311,11 +311,10 @@ def _lane(spark, name: str, build, action) -> dict:
         for prop in ("spark.jobGroup.id", "spark.job.description",
                      "spark.job.interruptOnCancel"):
             sc.setLocalProperty(prop, None)
-    n_cg, cg_ms = (now - then for then, now in zip(compiles, codegen_compiles(spark)))
     rec = {
         "wall": t2 - t0, "build": t1 - t0, "action": t2 - t1,
         **_stage_counters(sc, group),
-        "codegen": n_cg, "codegen_ms": cg_ms, "heap_mb": heap_mb,
+        "codegen": codegen_compiles(spark) - compiles, "heap_mb": heap_mb,
         "leaked_rdds": len(set(sc._jsc.getPersistentRDDs()) - rdds),
     }
     return {k: round(v, 3) if isinstance(v, float) else v for k, v in rec.items()}

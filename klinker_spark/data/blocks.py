@@ -137,7 +137,7 @@ class BlockManager:
         return cls(local_df(spark, rows, schema), left_name, right_name)
 
     # ---------------------------------------------------------------- views
-    def block_pairs(self, expand_partitions: int | None = None) -> DataFrame:
+    def block_pairs(self) -> DataFrame:
         """Per-block candidate pairs ``(block_key, left_id, right_id)``.
 
         Key-frame path: a plain equi-join of the two assignment tables —
@@ -151,28 +151,17 @@ class BlockManager:
         whole quadratic output lands in ONE coalesced task (measured
         sf1: 10.4 s single-task vs 1.0 s at 32).  An explicit
         round-robin repartition of the left side pins the expansion's
-        parallelism at ``expand_partitions`` (default: the session's
-        defaultParallelism); round-robin cannot be collapsed into the
-        dedup's ENSURE_REQUIREMENTS exchange the way a hash repartition
-        is.  Cost: one linear pass over the left assignment table,
-        amortized by the super-linear output.  Pass 0 to skip (caller
-        manages partitioning, or the key is high-cardinality enough
-        that the join shuffle alone already spreads — at 100 TB the
-        assignment tables are big enough that AQE keeps full
-        parallelism and the extra pass is the only effect).
+        parallelism at the session's defaultParallelism; round-robin
+        cannot be collapsed into the dedup's ENSURE_REQUIREMENTS
+        exchange the way a hash repartition is.  Cost: one linear pass
+        over the left assignment table, amortized by the super-linear
+        output.  A ``keys_partitioned`` manager (``combine_all``'s
+        token-wide key space) skips it.
         """
         if self.left_keys is not None:
             lk = self.left_keys
-            # an EXPLICIT expand_partitions always wins: keys_partitioned
-            # only suppresses the DEFAULT repartition (combine_all's key
-            # space is token-wide for the composite flows, but a caller
-            # combining two low-cardinality managers knows better and
-            # must be able to re-pin the expansion parallelism)
-            if expand_partitions != 0 and (
-                expand_partitions is not None or not self.keys_partitioned
-            ):
-                n = expand_partitions or lk.sparkSession.sparkContext.defaultParallelism
-                lk = lk.repartition(n)
+            if not self.keys_partitioned:
+                lk = lk.repartition(lk.sparkSession.sparkContext.defaultParallelism)
             return (
                 lk.withColumnRenamed("id", "left_id")
                 .join(self.right_keys.withColumnRenamed("id", "right_id"), "block_key")

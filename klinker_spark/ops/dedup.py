@@ -164,7 +164,7 @@ def minhash_lsh_dedup(
     else:
         # the per-row tokenize + shingle + num_perm-hash signature
         # pipeline is CPU-per-row work a byte-sized narrow scan
-        # serializes onto one core (r12 — same class as
+        # serializes onto one core (same class as
         # duplicated_span_stats; A/B: 2.2-3.4 s -> 1.9-2.0 s at
         # sf0.1).  Wide lake scans pass through untouched.
         toks = widen_for_kernel(docs.select(id_col, text_col)).select(
@@ -253,7 +253,7 @@ def simhash_dedup(
 
     width = bits // 4
     # widen the narrow-scan input before the per-row fingerprint
-    # pipeline (r12 — see minhash_lsh_dedup)
+    # pipeline (see minhash_lsh_dedup)
     fp = simhash(
         widen_for_kernel(docs.select(id_col, text_col)).select(
             F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
@@ -322,7 +322,7 @@ def ngram_jaccard_dedup(
     from ..session import widen_for_kernel
 
     # widen the narrow-scan input before the per-row tokenize+shingle
-    # pipeline (r12 — see minhash_lsh_dedup)
+    # pipeline (see minhash_lsh_dedup)
     shingles = ckpt.persist(
         widen_for_kernel(docs.select(id_col, text_col))
         .select(F.col(id_col).alias("doc_id"), tokenize(text_col, 1, []).alias("tk"))
@@ -430,7 +430,7 @@ def ngram_containment_dedup(
     from ..session import widen_for_kernel
 
     # widen the narrow-scan input before the per-row tokenize+shingle
-    # pipeline (r12 — see minhash_lsh_dedup)
+    # pipeline (see minhash_lsh_dedup)
     shingles = ckpt.persist(
         widen_for_kernel(docs.select(id_col, text_col))
         .select(F.col(id_col).alias("doc_id"), tokenize(text_col, 1, []).alias("tk"))
@@ -685,10 +685,10 @@ def embedding_cosine_dedup(
     it appears in EITHER endpoint's top-k list, so canonicalization is
     ``least/greatest + distinct`` AFTER the reflexive join — a plain
     ``query_id < neighbor_id`` filter would drop an above-threshold
-    pair that only shows up in the higher-id row's list (round-2
-    verdict #3).  The distinct shuffles scalar (id, id, sim) rows only.
-    Threshold and distinct both apply to the 6-dp-rounded sim so the
-    two directions of a pair collapse bit-identically."""
+    pair that only shows up in the higher-id row's list.  The distinct
+    shuffles scalar (id, id, sim) rows only.  Threshold and distinct
+    both apply to the 6-dp-rounded sim so the two directions of a pair
+    collapse bit-identically."""
     emb = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vector"))
     nn = topk_cosine_join(emb, emb, k=k)
     return (
@@ -730,10 +730,11 @@ def semdedup(
     vectors yield NULL, never NaN), ``keep`` is false iff
     ``max_sim_lower >= threshold``.
 
-    ``quantizer="hash_sample"`` picks the ``n_centroids`` vectors
-    ranked first by ``md5(id)`` — deterministic across engines, so the
-    whole pipeline carries an exact SQL oracle; ``"kmeans"`` swaps in
-    MLlib centroids (better balance, rows-only checkable).
+    ``quantizer`` is :func:`~.similarity._fit_centroids`'s:
+    ``"hash_sample"`` picks the ``n_centroids`` vectors ranked first by
+    ``md5(id)`` — deterministic across engines, so the whole pipeline
+    carries an exact SQL oracle; ``"kmeans"`` swaps in MLlib centroids
+    (better balance, rows-only checkable).
 
     ``impl``:
 
@@ -769,7 +770,7 @@ def semdedup(
     point; skewed clusters fall to AQE skew-join splitting (expr) or
     a larger n_centroids (matmul).
     """
-    from .similarity import _probe_centroids
+    from .similarity import _assign, _fit_centroids
 
     ix_all = embeddings.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vector")
@@ -786,31 +787,9 @@ def semdedup(
         F.min_by(F.size("vector"), F.md5(F.col("id").cast("string"))).alias("d")
     ).collect()[0]
     dim = int(dim_row["d"]) if dim_row["d"] is not None else 0
-    fit_src = ix_all.where(well_formed & (F.size("vector") == dim))
-    if quantizer == "hash_sample":
-        # bounded collect: n_centroids rows by construction
-        cent_rows = (
-            fit_src.withColumn("_h", F.md5(F.col("id").cast("string")))
-            .orderBy("_h", "id")
-            .limit(n_centroids)
-            .collect()
-        )
-        centroids = [(i, [float(x) for x in r["vector"]]) for i, r in enumerate(cent_rows)]
-    elif quantizer == "kmeans":
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        if dim == 0:
-            centroids = []
-        else:
-            feat = fit_src.withColumn("features", array_to_vector("vector"))
-            model = KMeans(k=n_centroids, seed=seed, featuresCol="features").fit(feat)
-            centroids = [
-                (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-            ]
-    else:
-        raise ValueError(f"quantizer must be kmeans|hash_sample, got {quantizer!r}")
-
+    good = well_formed & (F.size("vector") == dim)
+    ix = ix_all.where(good)
+    centroids = _fit_centroids(ix, n_centroids, quantizer, seed)
     if not centroids:  # empty corpus: nothing to assign or compare
         return ix_all.select(
             F.col("id").alias(id_col),
@@ -818,8 +797,6 @@ def semdedup(
             F.lit(None).cast("double").alias("max_sim_lower"),
             F.lit(True).alias("keep"),
         )
-    good = well_formed & (F.size("vector") == dim)
-    ix = ix_all.where(good)
     malformed = ix_all.where(~good).select(
         F.col("id").alias(id_col),
         F.lit(None).cast("int").alias("cluster_id"),
@@ -833,10 +810,9 @@ def semdedup(
     # (measured 2× ~10 s per extra evaluation at sf1 before the exact
     # Arrow probe kernel; still the single biggest subplan after it)
     assigned = ckpt.checkpoint(
-        _probe_centroids(
-            ix.select(F.col("id").alias("query_id"), F.col("vector").alias("qv")), centroids, 1
+        _assign(ix, centroids).select(
+            F.col("centroid_id").alias("cluster_id"), "id", F.col("vector").alias("qv")
         )
-        .select(F.col("centroid_id").alias("cluster_id"), F.col("query_id").alias("id"), "qv")
     )
 
     def _expr_rounded(src):
@@ -1003,8 +979,7 @@ def edit_distance_dedup(
     from ..session import widen_for_kernel
 
     # widen the narrow-scan input: the deletion-neighborhood /
-    # q-gram-prefix generation is per-row CPU (r12 — see
-    # minhash_lsh_dedup)
+    # q-gram-prefix generation is per-row CPU (see minhash_lsh_dedup)
     base = ckpt.persist(
         widen_for_kernel(docs.select(id_col, text_col))
         .select(

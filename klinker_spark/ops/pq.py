@@ -12,11 +12,12 @@ multiply-adds.
 
 Spark decomposition:
 
-- ``pq_train``  — codebooks, driver-side like every quantizer fit here
-  (``hash_sample``: the ``k_codes`` md5-ranked vectors sliced per
-  subspace — deterministic, any engine reproduces it, giving the whole
-  pipeline an exact DuckDB oracle; ``kmeans``: per-subspace MLlib fits,
-  better codebooks, rows-only checkable);
+- ``pq_train``  — codebooks from the shared coarse quantizer
+  (``similarity._fit_centroids``; ``hash_sample``: the ``k_codes``
+  md5-ranked vectors sliced per subspace — deterministic, any engine
+  reproduces it, giving the whole pipeline an exact DuckDB oracle;
+  ``kmeans``: per-subspace MLlib fits, better codebooks, rows-only
+  checkable);
 - ``pq_encode`` — one stateless projection: per subspace, argmin
   squared-L2 over the literal codebook (Catalyst expressions under
   ``PROJECT_LITERAL_MAX_CELLS``, broadcast-numpy ``mapInPandas``
@@ -60,53 +61,44 @@ def pq_train(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    salt: str = "",
 ) -> list[list[list[float]]]:
     """Train PQ codebooks: ``codebooks[s][c]`` = code ``c`` of subspace
     ``s`` (each a ``dim/m``-float list).  ``dim`` must divide by ``m``.
 
-    ``hash_sample``: codes are the first ``k_codes`` vectors ordered by
-    ``(md5(id), id)``, sliced per subspace — zero fit iterations,
-    deterministic across engines (the exact-oracle mode, same recipe as
-    the IVF ``hash_sample`` quantizer).  ``kmeans``: one MLlib KMeans
-    per subspace over the sliced vectors (m tiny driver-side fits over
-    distributed data).
+    The codes of a subspace are :func:`~.similarity._fit_centroids`
+    over it.  ``hash_sample``: its ``k_codes`` rows ranked by
+    ``(md5(salt || id), id)`` are the same in every subspace, so they
+    are collected once and sliced — zero fit iterations, deterministic
+    across engines (the exact-oracle mode).  ``kmeans``: one MLlib
+    KMeans per subspace (seed ``seed + s``) over the sliced vectors.
     """
+    from .similarity import _fit_centroids
+
+    def subspace_dim(dim: int) -> int:
+        if dim == 0 or dim % m != 0:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+        return dim // m
+
     ix = index.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vector")
     )
-    first = ix.select(F.size("vector").alias("d")).first()
-    dim = int(first["d"]) if first else 0
-    if dim == 0 or dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    ds = dim // m
     if quantizer == "hash_sample":
-        rows = (
-            ix.withColumn("_h", F.md5(F.col("id").cast("string")))
-            .orderBy("_h", "id")
-            .limit(k_codes)
-            .collect()
-        )
-        return [
-            [[float(x) for x in r["vector"][s * ds : (s + 1) * ds]] for r in rows]
-            for s in range(m)
-        ]
-    if quantizer != "kmeans":
-        raise ValueError(f"quantizer must be hash_sample|kmeans, got {quantizer!r}")
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    books = []
+        rows = [v for _, v in _fit_centroids(ix, k_codes, quantizer, seed, salt)]
+        ds = subspace_dim(len(rows[0]) if rows else 0)
+        return [[r[s * ds : (s + 1) * ds] for r in rows] for s in range(m)]
+    first = ix.select(F.size("vector").alias("d")).first()
+    ds = subspace_dim(int(first["d"]) if first else 0)
     with ckpt.scope():
         sliced = ckpt.persist(
-            ix.select(*[F.slice("vector", s * ds + 1, ds).alias(f"s{s}") for s in range(m)])
+            ix.select("id", *[F.slice("vector", s * ds + 1, ds).alias(f"s{s}") for s in range(m)])
         )
-        for s in range(m):
-            feat = sliced.select(array_to_vector(F.col(f"s{s}")).alias("features"))
-            model = KMeans(
-                k=k_codes, seed=seed + s, featuresCol="features", maxIter=10
-            ).fit(feat)
-            books.append([[float(x) for x in c] for c in model.clusterCenters()])
-    return books
+        return [
+            [v for _, v in _fit_centroids(
+                sliced.select("id", F.col(f"s{s}").alias("vector")), k_codes, quantizer, seed + s
+            )]
+            for s in range(m)
+        ]
 
 
 def _sqdist_expr(sub, code: list):
@@ -306,51 +298,34 @@ def build_ivfpq_index(
     ``build_ivf_index`` layout with PQ compression inside the lists).
 
     ``hash_sample``: coarse centroids = the ``n_centroids`` md5-ranked
-    vectors (as the IVF builder), PQ codebooks = the ``k_codes``
-    md5-ranked vectors' residuals sliced per subspace — the whole
-    build is deterministic and exactly reproducible in SQL
-    (``ann_topk_ivfpq_md5``).  ``kmeans``: MLlib coarse fit + per-
-    subspace residual codebooks (rows-only checkable).
+    vectors (as the IVF builder), PQ codebooks = the residuals of the
+    ``k_codes`` vectors ranked by a SALTED md5, sliced per subspace —
+    the whole build is deterministic and exactly reproducible in SQL
+    (``ann_topk_ivfpq_md5``).  The salt matters: the unsalted rank
+    would pick the coarse centroids themselves, whose residuals are
+    exactly zero, and all-zero codebooks collapse ADC to a
+    per-centroid constant.  ``kmeans``: MLlib coarse fit + per-
+    subspace residual codebooks (rows-only checkable).  Both come
+    from the shared quantizer (:func:`~.similarity._fit_centroids`,
+    :func:`pq_train`).
 
     Sibling tables: ``centroids/`` (cid, cv) and ``codebooks/``
     (s, c, cv).
     """
     from ..session import local_df
-    from .similarity import _probe_centroids
+    from .similarity import _assign, _fit_centroids
 
     spark = index.sparkSession
     ix = index.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vector")
     )
-    if quantizer == "hash_sample":
-        cent_rows = (
-            ix.withColumn("_h", F.md5(F.col("id").cast("string")))
-            .orderBy("_h", "id")
-            .limit(n_centroids)
-            .collect()
+    centroids = _fit_centroids(ix, n_centroids, quantizer, seed)
+    if not centroids:
+        raise ValueError(
+            "build_ivfpq_index: empty index DataFrame — cannot fit "
+            "coarse centroids (need at least one vector)"
         )
-        if not cent_rows:
-            raise ValueError(
-                "build_ivfpq_index: empty index DataFrame — cannot sample "
-                "coarse centroids (need at least one vector)"
-            )
-        centroids = [(i, [float(x) for x in r["vector"]]) for i, r in enumerate(cent_rows)]
-    elif quantizer == "kmeans":
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        with ckpt.scope():
-            feat = ckpt.persist(ix.withColumn("features", array_to_vector("vector")))
-            model = KMeans(
-                k=n_centroids, seed=seed, featuresCol="features", maxIter=10
-            ).fit(feat)
-        centroids = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    else:
-        raise ValueError(f"quantizer must be hash_sample|kmeans, got {quantizer!r}")
-
-    assigned = _probe_centroids(
-        ix.select(F.col("id").alias("query_id"), F.col("vector").alias("qv")), centroids, 1
-    ).select(F.col("centroid_id"), F.col("query_id").alias("id"), F.col("qv").alias("vector"))
+    assigned = _assign(ix, centroids)
     cent_lit = F.array(*[F.array(*[F.lit(float(x)) for x in cv]) for _, cv in centroids])
     resid = assigned.select(
         "centroid_id",
@@ -359,39 +334,10 @@ def build_ivfpq_index(
             F.col("vector"), F.element_at(cent_lit, F.col("centroid_id") + 1)
         ).alias("vector"),
     )
-    if quantizer == "hash_sample":
-        # codebooks from a SALTED md5-ranked sample of residuals —
-        # bounded collect, deterministic.  The salt matters: the
-        # unsalted rank would pick the SAME ids as the coarse
-        # centroids, whose residuals are exactly zero (each centroid
-        # vector is its own nearest centroid) — all-zero codebooks
-        # would collapse ADC to a per-centroid constant
-        samp = (
-            resid.withColumn(
-                "_h", F.md5(F.concat(F.lit("pq:"), F.col("id").cast("string")))
-            )
-            .orderBy("_h", "id")
-            .limit(k_codes)
-            .collect()
-        )
-        if not samp:
-            raise ValueError(
-                "build_ivfpq_index: empty index DataFrame — cannot sample "
-                "PQ codebooks (need at least one vector)"
-            )
-        dim = len(samp[0]["vector"])
-        if dim % m != 0:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        ds = dim // m
-        codebooks = [
-            [[float(x) for x in r["vector"][s * ds : (s + 1) * ds]] for r in samp]
-            for s in range(m)
-        ]
-    else:
-        codebooks = pq_train(
-            resid, m=m, k_codes=k_codes, quantizer="kmeans", seed=seed,
-            id_col="id", vec_col="vector",
-        )
+    codebooks = pq_train(
+        resid, m=m, k_codes=k_codes, quantizer=quantizer, seed=seed,
+        id_col="id", vec_col="vector", salt="pq:",
+    )
     codes = pq_encode(resid, codebooks, id_col="id", vec_col="vector").join(
         resid.select("id", "centroid_id"), "id"
     )

@@ -6,7 +6,8 @@ All three return ``(query_id, neighbor_id, sim|dist, rank)``:
 - ``brute_force_topk``: exact; broadcast index + window top-k.  The
   baseline and the correctness oracle for the approximate paths.
 - ``ann_topk_lsh``: MLlib BucketedRandomProjectionLSH on unit vectors.
-- ``ann_topk_ivf``: IVF — KMeans coarse quantizer; queries probe the
+- ``ann_topk_ivf``: IVF — a coarse quantizer (:func:`_fit_centroids`:
+  MLlib KMeans or an md5-ranked sample); queries probe the
   ``n_probe`` nearest centroids and search only those inverted lists.
   This is the 100 TB design: the index is partitioned by centroid id,
   a query touches n_probe/k_centroids of the data, and the probe join
@@ -324,16 +325,15 @@ def build_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    fit_fraction: float = 0.25,
     quantizer: str = "kmeans",
 ) -> None:
     """Persist an IVF index: inverted lists as parquet PARTITIONED BY
     centroid id, centroids as a tiny sibling table.
 
-    ``quantizer="hash_sample"`` uses the deterministic md5-ranked
-    sample quantizer (see :func:`ann_topk_ivf`) — the persisted index
-    then reproduces in any engine, giving the indexed query path an
-    exact oracle (``ann_topk_ivf_indexed_md5``).
+    ``quantizer`` is :func:`_fit_centroids`'s: ``"kmeans"`` (default)
+    or ``"hash_sample"``, whose persisted index reproduces in any
+    engine, giving the indexed query path an exact oracle
+    (``ann_topk_ivf_indexed_md5``).
 
     This is the build half of the at-scale ANN design: build once,
     query many.  Because the lists live in ``centroid_id=N/``
@@ -341,47 +341,16 @@ def build_ivf_index(
     prune* at the parquet scan — a query over a 100 TB index reads
     ``n_probe / n_centroids`` of the files, no shuffle, no index scan.
 
-    The coarse quantizer fits on a ``fit_fraction`` sample (the
-    standard IVF training regime — Faiss trains on ~30-250 points per
-    centroid); assignment of the full index is one KMeans transform.
-    The write repartitions by centroid id first so every list
-    directory gets one file per shuffle partition that holds its key,
-    not one per upstream partition (measured 2x on the write).
+    Every vector is assigned by the query path's probe
+    (:func:`_probe_centroids` with ``n_probe=1``), so it sits in the
+    list a query for it probes first.  The write repartitions by
+    centroid id first so every list directory gets one file per
+    shuffle partition that holds its key, not one per upstream
+    partition (measured 2x on the write).
     """
     ix = index.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vector"))
-    if quantizer == "hash_sample":
-        cent_rows = (
-            ix.withColumn("_h", F.md5(F.col("id").cast("string")))
-            .orderBy("_h", "id")
-            .limit(n_centroids)
-            .collect()
-        )
-        centroids = [(i, [float(x) for x in r["vector"]]) for i, r in enumerate(cent_rows)]
-        assigned = _probe_centroids(
-            ix.select(F.col("id").alias("query_id"), F.col("vector").alias("qv")),
-            centroids,
-            1,
-        ).select("centroid_id", F.col("query_id").alias("id"), F.col("qv").alias("vector"))
-        cents = centroids
-    elif quantizer == "kmeans":
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        feat = ix.withColumn("features", array_to_vector("vector"))
-        fit_on = feat.sample(fit_fraction, seed=seed) if fit_fraction < 1.0 else feat
-        # KMeans is iterative: an uncached input re-runs the sample scan +
-        # array_to_vector projection every iteration (maxIter=20 default)
-        with ckpt.scope():
-            fit_on = ckpt.persist(fit_on)
-            # maxIter=10 == Faiss's IVF training default; a coarse
-            # quantizer needs balanced cells, not converged centroids
-            model = KMeans(k=n_centroids, seed=seed, featuresCol="features", maxIter=10).fit(fit_on)
-        assigned = model.transform(feat).select(
-            F.col("prediction").alias("centroid_id"), "id", "vector"
-        )
-        cents = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    else:
-        raise ValueError(f"quantizer must be kmeans|hash_sample, got {quantizer!r}")
+    cents = _fit_centroids(ix, n_centroids, quantizer, seed)
+    assigned = _assign(ix, cents)
     (
         assigned.repartition("centroid_id")
         .write.mode("overwrite")
@@ -416,21 +385,16 @@ def ivf_index_append(
     :func:`~klinker_spark.ops.layout.compact_small_files` over
     ``{path}/lists`` on the same cadence.
 
-    The probe is the query path's :func:`_probe_centroids` (its
-    literal-vs-matmul switch included).
+    The assignment is the build's (:func:`_assign`, the query path's
+    probe with ``n_probe=1``).
     """
     spark = new.sparkSession
     cents = sorted(
         (int(r["cid"]), [float(x) for x in r["cv"]])
         for r in spark.read.parquet(f"{path}/centroids").collect()
     )
-    ix = new.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    assigned = _probe_centroids(ix, cents, 1).select(
-        "centroid_id", F.col("query_id").alias("id"), F.col("qv").alias("vector")
-    )
+    ix = new.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vector"))
+    assigned = _assign(ix, cents)
     (
         assigned.repartition("centroid_id")
         .write.mode("append")
@@ -439,11 +403,64 @@ def ivf_index_append(
     )
 
 
-#: Above this centroid count the literal-array probe expression is
-#: replaced by the broadcast-matmul kernel: a Catalyst expression tree
-#: of n_centroids × dim literals stops compiling long before the
-#: 10⁵-10⁶ centroids a 100 TB IVF needs (NOTES lesson 7 / ADVICE r2).
+#: Above this centroid count the fold-exact probe kernel gives way to
+#: the broadcast-matmul kernel: sequential folds and a full per-row
+#: sort over every centroid stop scaling long before the 10⁵-10⁶
+#: centroids a 100 TB IVF needs (NOTES lesson 7).
 PROBE_LITERAL_MAX_CENTROIDS = 512
+
+
+def _fit_centroids(
+    ix: DataFrame, n: int, quantizer: str, seed: int, salt: str = ""
+) -> list[tuple[int, list[float]]]:
+    """The one coarse quantizer of the IVF, IVF-PQ, PQ and SemDeDup
+    builds: up to ``n`` centroids ``[(cid, vector)]`` over ``ix`` with
+    columns ``(id, vector array<double>)``; ``[]`` for an empty input.
+
+    - ``"hash_sample"``: the first ``n`` rows ranked by
+      ``(md5(salt || id), id)``, one bounded collect — deterministic
+      in any engine, so the pipelines built on it carry exact SQL
+      oracles.
+    - ``"kmeans"``: MLlib KMeans with ``seed`` over the whole input.
+      ``maxIter=10`` is Faiss's IVF training default: a coarse
+      quantizer needs balanced cells, not converged centroids.  The
+      input is left uncached: MLlib persists its own instances for the
+      fit's iterations when the input is not cached, and a cached
+      input costs one more job per fit.  Repeatable in Spark,
+      rows-only checkable.
+
+    Vectors are assigned to the result with :func:`_assign`.
+    """
+    if quantizer == "hash_sample":
+        key = F.concat(F.lit(salt), F.col("id").cast("string"))
+        rows = ix.orderBy(F.md5(key), "id").limit(n).select("vector").collect()
+        return [(i, [float(x) for x in r["vector"]]) for i, r in enumerate(rows)]
+    if quantizer != "kmeans":
+        raise ValueError(f"quantizer must be kmeans|hash_sample, got {quantizer!r}")
+    from py4j.protocol import Py4JJavaError
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    feat = ix.select(array_to_vector("vector").alias("features"))
+    try:
+        model = KMeans(k=n, seed=seed, maxIter=10).fit(feat)
+    except Py4JJavaError:
+        # MLlib cannot fit an empty input; checked only on failure, so
+        # a fit costs no extra job
+        if feat.isEmpty():
+            return []
+        raise
+    return [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
+
+
+def _assign(ix: DataFrame, centroids: list) -> DataFrame:
+    """``(id, vector)`` → ``(centroid_id, id, vector)``: each vector in
+    the list of its nearest centroid by the query path's probe
+    (:func:`_probe_centroids` with ``n_probe=1``), so a vector sits in
+    the list a query for it probes first."""
+    return _probe_centroids(
+        ix.select(F.col("id").alias("query_id"), F.col("vector").alias("qv")), centroids, 1
+    ).select("centroid_id", F.col("query_id").alias("id"), F.col("qv").alias("vector"))
 
 
 def _probe_centroids(q: DataFrame, centroids: list, n_probe: int) -> DataFrame:
@@ -651,13 +668,13 @@ def ann_topk_ivf_indexed(
 ) -> DataFrame:
     """Query half of :func:`build_ivf_index`.
 
-    Fully distributed probe plan (the round-1 version collected the
-    whole query set via ``toPandas()`` — VERDICT "What's wrong" #2):
+    Fully distributed probe plan:
 
     1. The ONLY driver materialization is the centroid table —
        bounded by ``n_centroids`` by construction, never by |Q|.
-       It becomes a literal array; per-query probe scoring is a
-       Catalyst projection (same recipe as :func:`ann_topk_ivf`).
+       It is broadcast to the probe's Arrow kernel
+       (:func:`_probe_centroids`, as in :func:`ann_topk_ivf`), which
+       scores the queries where they are.
     2. The distinct probed centroid ids (again ≤ ``n_centroids``
        values, from an aggregate) become a static ``isin`` filter on
        the partition column, so the ``lists/`` scan plans with
@@ -674,8 +691,7 @@ def ann_topk_ivf_indexed(
     aggregate and the search), so it is materialized ONCE to a parquet
     scratch (``scratch_dir``, default a fresh tempdir — shared FS on a
     cluster) instead of ``persist()``: |Q|·n_probe rows on disk, no
-    executor cache held for the session lifetime (the round-2 version
-    leaked its ``probed.persist()`` — ADVICE r2 #3).
+    executor cache held for the session lifetime.
     """
     import numpy as np
 
@@ -760,10 +776,11 @@ def ann_topk_ivf(
 ) -> DataFrame:
     """IVF approximate kNN.
 
-    Build: a coarse quantizer over the index; each index vector joins
-    its centroid's inverted list (a partition key).  Query: score the
-    centroid table (tiny, broadcast as a literal array) per query,
-    probe the top ``n_probe`` lists, exact top-k within them.
+    Build: a coarse quantizer over the index (:func:`_fit_centroids`);
+    each index vector joins its centroid's inverted list (a partition
+    key, :func:`_assign`).  Query: score the centroid table (tiny,
+    broadcast) per query, probe the top ``n_probe`` lists, exact top-k
+    within them.
 
     ``quantizer``:
 
@@ -779,47 +796,15 @@ def ann_topk_ivf(
     """
     ix = index.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vector"))
     q = queries.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vector"))
-
-    if quantizer == "hash_sample":
-        # bounded collect: n_centroids rows by construction
-        cent_rows = (
-            ix.withColumn("_h", F.md5(F.col("id").cast("string")))
-            .orderBy("_h", "id")
-            .limit(n_centroids)
-            .collect()
-        )
-        centroids = [(i, [float(x) for x in r["vector"]]) for i, r in enumerate(cent_rows)]
-        if not centroids:  # empty index: no lists, no neighbors
-            return q.select(
-                F.col("id").alias("query_id"),
-                F.col("id").alias("neighbor_id"),
-                F.lit(0.0).alias("sim"),
-                F.lit(1).alias("rank"),
-            ).where(F.lit(False))
-        # assignment = probe with n_probe=1: nearest centroid by
-        # cosine, ties cid ASC — pure Catalyst, oracle-reproducible
-        inv_lists = _probe_centroids(
-            ix.select(F.col("id").alias("query_id"), F.col("vector").alias("qv")),
-            centroids,
-            1,
-        ).select("centroid_id", F.col("query_id").alias("id"), F.col("qv").alias("vector"))
-    elif quantizer == "kmeans":
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        feat = ix.withColumn("features", array_to_vector("vector"))
-        model = KMeans(k=n_centroids, seed=seed, featuresCol="features").fit(feat)
-        inv_lists = model.transform(feat).select(
-            F.col("prediction").alias("centroid_id"), "id", "vector"
-        )
-        # Tiny centroid table as literal arrays -> per-query probe
-        # scoring happens in one projection, no join, no collect of
-        # data rows.
-        centroids = [
-            (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-        ]
-    else:
-        raise ValueError(f"quantizer must be kmeans|hash_sample, got {quantizer!r}")
+    centroids = _fit_centroids(ix, n_centroids, quantizer, seed)
+    if not centroids:  # empty index: no lists, no neighbors
+        return q.select(
+            F.col("id").alias("query_id"),
+            F.col("id").alias("neighbor_id"),
+            F.lit(0.0).alias("sim"),
+            F.lit(1).alias("rank"),
+        ).where(F.lit(False))
+    inv_lists = _assign(ix, centroids)
     probed = _probe_centroids(
         q.select(F.col("id").alias("query_id"), F.col("vector").alias("qv")),
         centroids,

@@ -33,18 +33,13 @@ logger = logging.getLogger(__name__)
 CODEGEN_CACHE_ENTRIES = 4096
 
 
-def codegen_compiles(spark) -> tuple[int, int]:
-    """(count, total ms) of generated-code compiles in this JVM, from
-    Spark's ``CodegenMetrics`` compile-time histogram.  Its reservoir
-    keeps ~1,000 samples: the total is exact up to there and scaled
-    from the sample mean beyond."""
-    jvm = spark.sparkContext._jvm
-    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
-    count = int(hist.getCount())
-    snap = hist.getSnapshot()
-    kept = int(snap.size())
-    kept_ms = int(jvm.java.util.Arrays.stream(snap.getValues()).sum())
-    return count, kept_ms * count // kept if kept else 0
+def codegen_compiles(spark) -> int:
+    """Generated-code compiles in this JVM so far: the count of Spark's
+    ``CodegenMetrics`` compile-time histogram.  The count is exact; the
+    histogram's times are a ~1,000-sample reservoir, so no total is
+    derived from them."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def warm_python_workers(spark) -> None:

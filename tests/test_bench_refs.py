@@ -91,7 +91,7 @@ def test_compact_line_warns_when_still_over_budget(capsys):
 
 RECORD_KEYS = {
     "wall", "build", "action", "jobs", "stages", "tasks", "run_s", "cpu_s",
-    "gc_s", "shuffle_write_mb", "spill_mb", "codegen", "codegen_ms",
+    "gc_s", "shuffle_write_mb", "spill_mb", "codegen",
     "heap_mb", "leaked_rdds",
 }
 

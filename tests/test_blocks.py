@@ -253,19 +253,16 @@ def test_covered_ids_unknown_side_raises(spark):
         BlockManager(bm.df, "A", "B").covered_ids("nope")
 
 
-def test_block_pairs_explicit_expand_partitions_wins(spark):
-    """ADVICE r9: an explicitly passed expand_partitions must be
-    honored even on a combine()-produced (keys_partitioned) manager —
-    combining two low-cardinality managers reintroduces the single-task
-    expansion hazard the repartition guards against."""
-    bm = _km(spark, [("k", "a1"), ("k", "a2")], [("k", "b1")]).combine(
-        _km(spark, [("k", "a3")], [("k", "b2")])
-    )
+def test_block_pairs_repartitions_unless_keys_partitioned(spark):
+    """The expanding key join runs on a round-robin repartitioned left
+    side, except on a combine()-produced (keys_partitioned) manager,
+    whose key space is already spread."""
+    one = _km(spark, [("k", "a1"), ("k", "a2")], [("k", "b1")])
+    n = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({n})" in one.block_pairs()._jdf.queryExecution().toString()
+    bm = one.combine(_km(spark, [("k", "a3")], [("k", "b2")]))
     assert bm.keys_partitioned
-    explicit = bm.block_pairs(expand_partitions=7)._jdf.queryExecution().toString()
-    assert "RoundRobinPartitioning(7)" in explicit
-    default = bm.block_pairs()._jdf.queryExecution().toString()
-    assert "RoundRobinPartitioning" not in default
+    assert "RoundRobinPartitioning" not in bm.block_pairs()._jdf.queryExecution().toString()
 
 
 def test_composite_assign_is_lazy_and_cache_free(spark):
@@ -320,8 +317,8 @@ def test_composite_pipeline_rerun_compiles_no_new_code(spark, tmp_path):
         ).to_dict()
 
     first = run(str(tmp_path / "first"))
-    before, _ = codegen_compiles(spark)
+    before = codegen_compiles(spark)
     assert run(str(tmp_path / "second")) == first
-    after, _ = codegen_compiles(spark)
+    after = codegen_compiles(spark)
     assert after - before <= 30
 

@@ -1,7 +1,8 @@
 """The cache lifecycle (``klinker_spark.ckpt``): a scope frees what was
 persisted or checkpointed inside it — on normal exit and on an error —
 ``keep`` hands a frame to the enclosing scope, ``release`` frees one
-frame early, and no other module creates or frees a cache itself."""
+frame early, and no other module creates or frees a cache itself.
+The same source walk pins the coarse quantizer to one function."""
 
 from __future__ import annotations
 
@@ -105,3 +106,28 @@ def test_only_ckpt_creates_or_frees_caches():
             ):
                 offenders.append(f"{path.relative_to(root)}:{node.lineno} .{node.func.attr}(")
     assert offenders == []
+
+
+def test_only_fit_centroids_holds_the_quantizer_policy():
+    """``similarity._fit_centroids`` is the one coarse quantizer of the
+    IVF, IVF-PQ, PQ and SemDeDup builds: across ``ops/similarity.py``,
+    ``ops/pq.py`` and ``ops/dedup.py`` no other function imports
+    MLlib's ``KMeans`` or raises ``quantizer must be ...``."""
+    ops = pathlib.Path(klinker_spark.__file__).parent / "ops"
+    owners = {"KMeans": [], "raise": []}
+    for name in ("similarity.py", "pq.py", "dedup.py"):
+        for top in ast.parse((ops / name).read_text(), name).body:
+            where = f"{name}:{getattr(top, 'name', top.lineno)}"
+            for node in ast.walk(top):
+                if isinstance(node, ast.ImportFrom) and node.module == "pyspark.ml.clustering":
+                    if any(a.name == "KMeans" for a in node.names):
+                        owners["KMeans"].append(where)
+                elif isinstance(node, ast.Raise) and any(
+                    isinstance(c, ast.Constant) and "quantizer must be" in str(c.value)
+                    for c in ast.walk(node)
+                ):
+                    owners["raise"].append(where)
+    assert owners == {
+        "KMeans": ["similarity.py:_fit_centroids"],
+        "raise": ["similarity.py:_fit_centroids"],
+    }

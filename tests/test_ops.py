@@ -462,9 +462,7 @@ def test_ivf_indexed_build_query(embeddings, tmp_path):
     from klinker_spark.ops.similarity import ann_topk_ivf_indexed, build_ivf_index
 
     path = str(tmp_path / "ivf")
-    # fit_fraction=1: the 500-row test index is smaller than a sane
-    # quantizer sample; the default 0.25 is for at-scale indexes
-    build_ivf_index(embeddings, path, n_centroids=8, fit_fraction=1.0)
+    build_ivf_index(embeddings, path, n_centroids=8)
     queries = embeddings.where(F.col("vec_id") % 100 == 0)
     approx = ann_topk_ivf_indexed(queries, path, k=5, n_probe=3)
     exact = brute_force_topk(queries, embeddings, k=5)
@@ -475,6 +473,49 @@ def test_ivf_indexed_build_query(embeddings, tmp_path):
     import os
 
     assert any(d.startswith("centroid_id=") for d in os.listdir(f"{path}/lists"))
+
+
+def _read_ivf_index(spark, path):
+    cents = sorted(
+        (int(r["cid"]), [float(x) for x in r["cv"]])
+        for r in spark.read.parquet(f"{path}/centroids").collect()
+    )
+    return cents, spark.read.parquet(f"{path}/lists")
+
+
+def test_ivf_kmeans_build_is_reproducible(spark, embeddings, tmp_path):
+    """Three kmeans builds of one frame in one session write the same
+    centroids and the same lists: the fit is seeded and sees the whole
+    input, no sample drawn under a fresh seed."""
+    from klinker_spark.ops.similarity import build_ivf_index
+
+    def build(i):
+        path = str(tmp_path / f"ivf{i}")
+        build_ivf_index(embeddings, path, n_centroids=16, quantizer="kmeans")
+        cents, lists = _read_ivf_index(spark, path)
+        return cents, sorted(tuple(r) for r in lists.select("centroid_id", "id").collect())
+
+    first = build(0)
+    assert build(1) == first
+    assert build(2) == first
+
+
+def test_ivf_kmeans_lists_match_the_query_probe(spark, embeddings, tmp_path):
+    """Every vector of a kmeans-built index sits in the list the query
+    probe picks for it first (cosine, ties cid ASC), so a query for an
+    indexed vector always searches that vector's list."""
+    from klinker_spark.ops.similarity import _probe_centroids, build_ivf_index
+
+    path = str(tmp_path / "ivf")
+    build_ivf_index(embeddings, path, n_centroids=16, quantizer="kmeans")
+    cents, lists = _read_ivf_index(spark, path)
+    probed = _probe_centroids(
+        lists.select(F.col("id").alias("query_id"), F.col("vector").alias("qv")), cents, 1
+    )
+    listed = lists.select(F.col("id").alias("query_id"), F.col("centroid_id").alias("listed"))
+    joined = probed.join(listed, "query_id")
+    assert joined.count() == embeddings.count()
+    assert joined.where(F.col("centroid_id") != F.col("listed")).count() == 0
 
 
 def test_token_count(docs):
@@ -717,16 +758,17 @@ def test_hypertable_rollup_negative_timestamps(spark):
 
 
 def test_ivf_hash_sample_empty_index(spark):
-    """An empty index yields an empty typed result — the hash-sample
-    quantizer must not build an untyped empty centroid literal."""
+    """An empty index yields an empty typed result under either
+    quantizer — no untyped empty centroid literal, no MLlib error."""
     from klinker_spark.ops.similarity import ann_topk_ivf
 
     emb = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])], ["vec_id", "embedding"]
     )
-    out = ann_topk_ivf(emb, emb.where(F.lit(False)), k=2, quantizer="hash_sample")
-    assert out.count() == 0
-    assert [f.name for f in out.schema] == ["query_id", "neighbor_id", "sim", "rank"]
+    for quantizer in ("hash_sample", "kmeans"):
+        out = ann_topk_ivf(emb, emb.where(F.lit(False)), k=2, quantizer=quantizer)
+        assert out.count() == 0
+        assert [f.name for f in out.schema] == ["query_id", "neighbor_id", "sim", "rank"]
 
 
 def test_cm_sketch_never_underestimates_and_is_exact_when_wide(spark):
