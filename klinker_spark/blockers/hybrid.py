@@ -7,7 +7,7 @@ Reference: ``/root/reference/src/klinker/blockers/hybrid.py:15-178``
 can instantiate them by name with the same knobs.
 
 All three parameterize the :class:`~.composite.CompositeUniqueNameBlocker`
-flow — unique pass → anti-join covered → token blocking on attributes →
+flow — unique pass → drop covered → token blocking on attributes →
 relation branch on the remainder → combine — swapping the relation
 branch:
 
@@ -26,8 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..data.blocks import BlockManager
-from ..data.frames import EntityFrame
-from .composite import CompositeUniqueNameBlocker
+from ..data.frames import side_of, tag_sides
+from .composite import CompositeUniqueNameBlocker, _branch_keys
 from .token import TokenBlocker
 
 # NOTE: ..embedding.* is imported lazily inside the constructors —
@@ -142,7 +142,7 @@ class CompositeLightEABlocker(CompositeUniqueNameBlocker):
 
         super().__init__(
             TokenBlocker(min_token_length=attr_min_token_length),
-            # unused: _rel_input / _rel_blocks below replace the relation
+            # unused: _rel_input / _rel_keys below replace the relation
             # branch with the graph encoder + kNN build
             None,
             None,
@@ -154,12 +154,13 @@ class CompositeLightEABlocker(CompositeUniqueNameBlocker):
         )
         self._builder = KNNBlockBuilder(k=k)
 
-    def _rel_input(self, frame: EntityFrame, rels: DataFrame, own_text: DataFrame) -> DataFrame:
-        """Embeddings from propagation over the full relation graph;
-        the composite flow drops unique-covered ids afterwards."""
-        return self._encoder.encode(own_text, rels)
+    def _rel_input(self, attrs: DataFrame, rels: DataFrame, own_text: DataFrame) -> DataFrame:
+        """Side-tagged embeddings from propagation over each side's full
+        relation graph; the composite flow drops unique-covered ids
+        afterwards."""
+        return tag_sides(
+            *(self._encoder.encode(side_of(own_text, s), side_of(rels, s)) for s in (0, 1))
+        )
 
-    def _rel_blocks(
-        self, left: DataFrame, right: DataFrame, left_name: str, right_name: str
-    ) -> BlockManager:
-        return self._builder.build_blocks(left, right, left_name, right_name)
+    def _rel_keys(self, rel_input: DataFrame, names: tuple[str, str]) -> DataFrame:
+        return _branch_keys(self._builder.build_blocks, rel_input, names)

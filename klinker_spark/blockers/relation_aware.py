@@ -19,11 +19,11 @@ join is the scale-critical edge×text join and shuffles on the entity id
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..data.blocks import BlockManager
-from ..data.frames import EntityFrame, concat_frames, reverse_rel
+from ..data.frames import EntityFrame, concat_frames, reverse_rel, side_keys
 from .base import Blocker, SchemaAgnosticBlocker
 from .token import TokenBlocker
 
@@ -57,37 +57,58 @@ def count_entities(attrs: DataFrame, rels: DataFrame) -> int:
     )
 
 
+def _entity_count(attrs: DataFrame, rels: DataFrame) -> "int | Column":
+    """:func:`count_entities`; for side-tagged frames a per-side
+    literal, ``CASE _s WHEN 0 THEN n0 WHEN 1 THEN n1 END``, from one
+    job for both sides."""
+    if not side_keys(rels):
+        return count_entities(attrs, rels)
+    ids = (
+        attrs.select("_s", F.col("id").alias("e"))
+        .unionByName(rels.select("_s", F.col("head").alias("e")))
+        .unionByName(rels.select("_s", F.col("tail").alias("e")))
+    )
+    n = F.lit(None)
+    for row in ids.distinct().groupBy("_s").count().collect():
+        n = F.when(F.col("_s") == row["_s"], F.lit(row["count"])).otherwise(n)
+    return n
+
+
 def _harmonic(support, discriminability):
     return 2 * (support * discriminability) / (support + discriminability)
 
 
-def relation_importance(rels: DataFrame, num_entities: int) -> DataFrame:
+def relation_importance(rels: DataFrame, num_entities: "int | Column") -> DataFrame:
     """Per-relation importance (A4, ``relation_aware.py:85-92``):
     support = count(rel)/n², discriminability = count(tail)/count(rel)
     (non-null count, *not* distinct — pandas named-agg semantics),
-    importance = harmonic mean.  Output: ``(rel, importance)``.
+    importance = harmonic mean.  Output: ``(rel, importance)``, per
+    side for side-tagged ``rels`` (``num_entities`` then a per-side
+    column, see :func:`_entity_count`).
     """
-    counted = rels.groupBy("rel").agg(
+    by = side_keys(rels)
+    counted = rels.groupBy(*by, "rel").agg(
         F.count("rel").alias("rel_count"), F.count("tail").alias("tail_count")
     )
     support = F.col("rel_count") / (num_entities**2)
     disc = F.col("tail_count") / F.col("rel_count")
-    return counted.select("rel", _harmonic(support, disc).alias("importance"))
+    return counted.select(*by, "rel", _harmonic(support, disc).alias("importance"))
 
 
-def name_importance(attrs: DataFrame, num_entities: int) -> DataFrame:
+def name_importance(attrs: DataFrame, num_entities: "int | Column") -> DataFrame:
     """Per-property importance (A5, ``relation_aware.py:95-103``):
     support = count(id)/n, discriminability = count(value)/count(prop).
-    Output: ``(prop, importance)``.
+    Output: ``(prop, importance)``, per side for side-tagged ``attrs``.
     """
-    counted = attrs.groupBy("prop").agg(
+    by = side_keys(attrs)
+    counted = attrs.groupBy(*by, "prop").agg(
         F.count("id").alias("head_count"),
         F.count("prop").alias("rel_count"),
         F.count("value").alias("tail_count"),
     )
     support = F.col("head_count") / num_entities
     disc = F.col("tail_count") / F.col("rel_count")
-    return counted.select("prop", _harmonic(support, disc).alias("importance"))
+    return counted.select(*by, "prop", _harmonic(support, disc).alias("importance"))
 
 
 def graph_statistics(rels: DataFrame, num_entities: int | None = None) -> DataFrame:
@@ -137,10 +158,11 @@ def filter_importance(
     boundary keep all tied keys — deterministic, vs pandas' arbitrary
     keep-first).  The importance table is one row per key: Catalyst
     broadcast-joins it, so the only shuffle is the window's partition
-    by group.
+    by group.  Side-tagged triples rank within ``(_s, group)``.
     """
-    joined = triples.join(F.broadcast(importance), key_col, "left")
-    w = Window.partitionBy(group_col).orderBy(F.col("importance").desc())
+    by = side_keys(triples)
+    joined = triples.join(F.broadcast(importance), [*by, key_col], "left")
+    w = Window.partitionBy(*by, group_col).orderBy(F.col("importance").desc())
     return (
         joined.withColumn("_rank", F.dense_rank().over(w))
         .where(F.col("_rank") <= top_n)
@@ -161,7 +183,10 @@ def concat_neighbor_attributes(
 
     ``own_text``: ``frame.concat_values()`` when the caller already
     holds it; ignored under ``top_n_a``, whose property filter changes
-    the own text.
+    the own text.  Side-tagged inputs (``_s`` on ``frame.attrs``,
+    ``rels`` and ``own_text``, see :func:`~..data.frames.tag_sides`)
+    give ``(_s, id, text)``: every join, aggregate and importance
+    window also keys on ``_s``, so both sides run as one plan.
 
     Steps: add inverse edges (P7+U1) → optional property/relation
     importance filters (A4/A5 + W1) → per-entity attr concat (P3) →
@@ -170,39 +195,35 @@ def concat_neighbor_attributes(
     ``dummy_relation`` pseudo-triples (P8) → re-concat per head (P3).
     """
     attrs = frame.attrs
+    by = side_keys(rels)
     with_inv = concat_frames([rels, reverse_rel(rels)])
 
-    num_entities = None
+    if top_n_a or top_n_r:
+        num_entities = _entity_count(attrs, rels)
     if top_n_a:
-        num_entities = count_entities(attrs, rels)
         attrs = filter_importance(
             attrs, name_importance(attrs, num_entities), top_n_a, "prop", "id"
         )
     if top_n_r:
-        if num_entities is None:
-            num_entities = count_entities(attrs, rels)
         with_inv = filter_importance(
             with_inv, relation_importance(rels, num_entities), top_n_r, "rel", "head"
         )
 
     if own_text is None or top_n_a:
-        own_text = frame.with_attrs(attrs).concat_values()  # (id, text)
-
-    # Own attributes ride along as self-loop edges instead of a second
-    # pass over own_text: one join + one aggregate for the whole blob,
-    # and own_text is consumed exactly once (no recompute of the
-    # concat aggregation across two union branches).
-    if include_own_attributes:
-        self_loops = own_text.select(
-            F.col("id").alias("head"),
-            F.lit("dummy_relation").alias("rel"),
-            F.col("id").alias("tail"),
-        )
-        with_inv = concat_frames([with_inv, self_loops])
+        own_text = frame.with_attrs(attrs).concat_values()  # ([_s,] id, text)
 
     neighbor_triples = with_inv.join(
-        own_text.withColumnRenamed("id", "tail"), "tail", "inner"
-    ).select(F.col("head").alias("id"), F.col("rel").alias("prop"), F.col("text").alias("value"))
+        own_text.withColumnRenamed("id", "tail"), [*by, "tail"], "inner"
+    ).select(*by, F.col("head").alias("id"), F.col("rel").alias("prop"), F.col("text").alias("value"))
+    # Own text enters as rows beside the joined neighbour text, so the
+    # edge join reads real edges only and the re-concat aggregate reads
+    # the own-text aggregate's output directly.
+    if include_own_attributes:
+        neighbor_triples = neighbor_triples.unionByName(
+            own_text.select(
+                *by, "id", F.lit("dummy_relation").alias("prop"), F.col("text").alias("value")
+            )
+        )
 
     # Re-tokenizing consumers make this set-semantics safe; split/flatten
     # dedups tokens across neighbor blobs like the reference's final

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..data.blocks import BlockManager
+from ..data.frames import side_keys
 from ..functions.text import tokenize
 from .base import SchemaAgnosticBlocker
 
@@ -39,7 +40,9 @@ class TokenBlocker(SchemaAgnosticBlocker):
         self.max_block_size = max_block_size
 
     def _tok_keys(self, frame: DataFrame) -> DataFrame:
-        """(id, text) → distinct ``(block_key, id)`` token assignments.
+        """(id, text) → distinct ``(block_key, id)`` token assignments;
+        side-tagged ``(_s, id, text)`` → ``(_s, id, block_key)``, with
+        the dedup and the ``max_block_size`` cap applied per side.
 
         ``tokenize``'s stopword ``array_except`` already dedups tokens
         per row and the input is one row per id, so the assignments are
@@ -63,25 +66,27 @@ class TokenBlocker(SchemaAgnosticBlocker):
         narrow codegen re-scan, cheaper at scale than shuffling the
         full assignment table with a funnel task in it.
         """
+        by = side_keys(frame)
         toks = frame.select(
+            *by,
             "id",
             F.explode(tokenize("text", self.min_token_length, self.stopwords)).alias(
                 "block_key"
             ),
         ).where(F.col("block_key") != "")
         if self.stopwords is not None and len(self.stopwords) == 0:
-            toks = toks.dropDuplicates(["block_key", "id"])
+            toks = toks.dropDuplicates([*by, "block_key", "id"])
         if self.max_block_size is not None:
             oversized = (
-                toks.groupBy("block_key")
+                toks.groupBy(*by, "block_key")
                 .agg(F.count("*").alias("_n"))
                 .where(F.col("_n") > self.max_block_size)
-                .select("block_key")
+                .select(*by, "block_key")
             )
             # no broadcast HINT under AQE: the oversized-key set is
             # bounded by n_assignments / max_block_size, which an
             # aggressive cap on a large corpus can push past the
-            # driver/broadcast limit (r10 ADVICE).  AQE sees the
+            # driver/broadcast limit.  AQE sees the
             # aggregated table's RUNTIME size and converts to
             # broadcast exactly when it is actually tiny; otherwise
             # the anti-join shuffles — correct at any cap, and the hot
@@ -91,8 +96,8 @@ class TokenBlocker(SchemaAgnosticBlocker):
             # as a sort-merge join that shuffles the entire assignment
             # table on block_key — funneling the very hot keys this
             # cap exists to absorb — so the static hint comes back
-            # there (r11 ADVICE); such a caller owns the broadcast
-            # limit via their cap choice.
+            # there; such a caller owns the broadcast limit via their
+            # cap choice.
             aqe_on = (
                 str(
                     toks.sparkSession.conf.get("spark.sql.adaptive.enabled", "true")
@@ -100,7 +105,7 @@ class TokenBlocker(SchemaAgnosticBlocker):
                 == "true"
             )
             right = oversized if aqe_on else F.broadcast(oversized)
-            toks = toks.join(right, "block_key", "left_anti")
+            toks = toks.join(right, [*by, "block_key"], "left_anti")
         return toks
 
     def _assign(

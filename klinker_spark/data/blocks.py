@@ -26,6 +26,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .frames import tag_sides
+
 __all__ = ["BlockManager", "CompositeBlockManager"]
 
 
@@ -145,18 +147,18 @@ class BlockManager:
         double-``explode`` UDTF shape (``blocks.py:131-139``; the
         reference's own ``spark_eval.py:31-35``).
 
-        The key join is EXPANDING — Σ|L_k|·|R_k| output rows from
-        linear inputs — and AQE sizes the probe side's shuffle reader
-        by INPUT bytes, so on a low-cardinality key (25 nations) the
-        whole quadratic output lands in ONE coalesced task (measured
-        sf1: 10.4 s single-task vs 1.0 s at 32).  An explicit
-        round-robin repartition of the left side pins the expansion's
-        parallelism at the session's defaultParallelism; round-robin
-        cannot be collapsed into the dedup's ENSURE_REQUIREMENTS
-        exchange the way a hash repartition is.  Cost: one linear pass
-        over the left assignment table, amortized by the super-linear
-        output.  A ``keys_partitioned`` manager (``combine_all``'s
-        token-wide key space) skips it.
+        Both are EXPANDING — Σ|L_k|·|R_k| output rows from linear
+        inputs — and Spark sizes scan splits and AQE shuffle readers by
+        INPUT bytes, so on a low-cardinality key (25 nations) or a
+        small block file the whole quadratic output lands in ONE task
+        (measured sf1: 10.4 s single-task vs 1.0 s at 32).  An explicit
+        round-robin repartition of the left side (the block table on
+        the array path) pins the expansion's parallelism at the
+        session's defaultParallelism; round-robin cannot be collapsed
+        into the dedup's ENSURE_REQUIREMENTS exchange the way a hash
+        repartition is.  Cost: one linear pass over the left input,
+        amortized by the super-linear output.  A ``keys_partitioned``
+        manager (``combine_all``'s token-wide key space) skips it.
         """
         if self.left_keys is not None:
             lk = self.left_keys
@@ -166,9 +168,10 @@ class BlockManager:
                 lk.withColumnRenamed("id", "left_id")
                 .join(self.right_keys.withColumnRenamed("id", "right_id"), "block_key")
             )
-        return self.df.select(
+        df = self.df.repartition(self.df.sparkSession.sparkContext.defaultParallelism)
+        return df.select(
             "block_key",
-            F.explode(self.df[self.left_name]).alias("left_id"),
+            F.explode(df[self.left_name]).alias("left_id"),
             F.col(self.right_name),
         ).select("block_key", "left_id", F.explode(F.col(self.right_name)).alias("right_id"))
 
@@ -262,21 +265,9 @@ class BlockManager:
     # ---------------------------------------------------------------- combine
     @classmethod
     def combine_all(cls, managers: list["BlockManager"]) -> "BlockManager":
-        """N-way key-level combine, ONE exchange total (lazy).
-
-        Stacks every manager's raw assignment frames into a single
-        tagged frame ``(block_key, id, _b=branch, _s=side)`` and
-        hash-repartitions it on ``block_key`` ONCE.  Everything
-        downstream rides that partitioning with zero further exchanges:
-        two-sidedness per (key, branch) is a window max (hash(key)
-        satisfies the (key, branch) clustering), the per-side dedup is a
-        group-by whose keys start with block_key, and the terminal pair
-        join sees two co-partitioned sides.  Both sides read the same
-        exchange, so exchange reuse computes the stacked frame once in
-        the terminal action — nothing is cached and no job runs here.
-        A caller running several actions on the result caches its
-        frames with :func:`klinker_spark.ckpt.persist` inside a
-        :func:`klinker_spark.ckpt.scope`.
+        """N-way key-level combine, ONE exchange total (lazy): each
+        manager's key frames, side-tagged (:meth:`side_tagged_keys`),
+        are one branch of :meth:`combine_branches`.
 
         Semantics == chained array combines: a key's members are the
         union of its members from every branch where it is two-sided,
@@ -293,17 +284,41 @@ class BlockManager:
         if any(m.left_keys is None for m in managers):
             return functools.reduce(lambda a, b: a._combine_arrays(b), managers)
         first = managers[0]
-        legs = []
-        for b, m in enumerate(managers):
-            for s, kf in ((0, m.left_keys), (1, m.right_keys)):
-                legs.append(
-                    kf.select(
-                        "block_key",
-                        "id",
-                        F.lit(b).alias("_b"),
-                        F.lit(s).alias("_s"),
-                    )
-                )
+        return cls.combine_branches(
+            [m.side_tagged_keys() for m in managers], first.left_name, first.right_name
+        )
+
+    def side_tagged_keys(self) -> DataFrame:
+        """Both key frames as one side-tagged ``(block_key, id, _s)``
+        frame (``_s`` 0 left, 1 right)."""
+        return tag_sides(
+            self.left_keys.select("block_key", "id"), self.right_keys.select("block_key", "id")
+        )
+
+    @classmethod
+    def combine_branches(
+        cls, branches: list[DataFrame], left_name: str, right_name: str
+    ) -> "BlockManager":
+        """Combine side-tagged ``(block_key, id, _s)`` assignment frames,
+        one per branch (blocker), into one manager.
+
+        Stacks the branches into a single tagged frame ``(block_key,
+        id, _b=branch, _s=side)`` and hash-repartitions it on
+        ``block_key`` ONCE.  Everything downstream rides that
+        partitioning with zero further exchanges: two-sidedness per
+        (key, branch) is a window max (hash(key) satisfies the (key,
+        branch) clustering), the per-side dedup is a group-by whose
+        keys start with block_key, and the terminal pair join sees two
+        co-partitioned sides.  Both sides read the same exchange, so
+        exchange reuse computes the stacked frame once in the terminal
+        action — nothing is cached and no job runs here.  A caller
+        running several actions on the result caches its frames with
+        :func:`klinker_spark.ckpt.persist` inside a
+        :func:`klinker_spark.ckpt.scope`."""
+        legs = [
+            kf.select("block_key", "id", F.lit(b).alias("_b"), "_s")
+            for b, kf in enumerate(branches)
+        ]
         stacked = functools.reduce(lambda a, c: a.unionByName(c), legs).repartition(
             F.col("block_key")
         )
@@ -331,12 +346,12 @@ class BlockManager:
         # the other side's nulls); assembling it from the two key frames
         # would plan the whole stacked subtree twice
         arrays = both.groupBy("block_key").agg(
-            members(0).alias(first.left_name), members(1).alias(first.right_name)
+            members(0).alias(left_name), members(1).alias(right_name)
         )
         return cls(
             arrays,
-            first.left_name,
-            first.right_name,
+            left_name,
+            right_name,
             side(0),
             side(1),
             keys_effective=True,

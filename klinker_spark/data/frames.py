@@ -29,7 +29,16 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["EntityFrame", "melt", "clean_rdf_datatype", "reverse_rel", "concat_frames"]
+__all__ = [
+    "EntityFrame",
+    "melt",
+    "clean_rdf_datatype",
+    "reverse_rel",
+    "concat_frames",
+    "tag_sides",
+    "side_keys",
+    "side_of",
+]
 
 
 def melt(
@@ -68,9 +77,10 @@ def reverse_rel(rels: DataFrame, prefix: str = "_inv_") -> DataFrame:
     """Swap head/tail and prefix the relation name (inverse edges).
 
     Reference: ``src/klinker/blockers/relation_aware.py:32-50`` (P7).
-    Pure projection — no shuffle.
+    Pure projection — no shuffle; a side tag carries through.
     """
     return rels.select(
+        *side_keys(rels),
         F.col("tail").alias("head"),
         F.concat(F.lit(prefix), F.col("rel")).alias("rel"),
         F.col("head").alias("tail"),
@@ -83,6 +93,26 @@ def concat_frames(frames: Sequence[DataFrame]) -> DataFrame:
     for f in frames[1:]:
         out = out.unionByName(f)
     return out
+
+
+def tag_sides(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Stack two same-schema frames as one side-tagged frame
+    ``(_s, ...)``, ``_s`` = 0 for ``left`` and 1 for ``right``: the
+    composite flow runs each per-entity step once for both sides."""
+    return left.select(F.lit(0).alias("_s"), "*").unionByName(
+        right.select(F.lit(1).alias("_s"), "*")
+    )
+
+
+def side_keys(df: DataFrame) -> list[str]:
+    """``["_s"]`` for a side-tagged frame, else ``[]``: the extra
+    leading key of every per-entity grouping, join and window."""
+    return ["_s"] if "_s" in df.columns else []
+
+
+def side_of(df: DataFrame, s: int) -> DataFrame:
+    """One side of a side-tagged frame, untagged."""
+    return df.where(F.col("_s") == s).drop("_s")
 
 
 @dataclass(frozen=True)
@@ -147,6 +177,9 @@ class EntityFrame:
         unaffected; sorting only pins determinism for golden tests and
         the DuckDB oracle.
 
+        Side-tagged attrs (the composite flow's ``_s`` column: 0 left,
+        1 right) concat per ``(_s, id)`` → ``(_s, id, text)``.
+
         Plan shape: one hash-aggregate shuffle on ``id``; map-side
         partial ``collect_set`` keeps shuffle volume at O(distinct
         values), and all array ops are codegen'd builtins.
@@ -154,6 +187,7 @@ class EntityFrame:
         collected = (
             F.collect_set(F.col("value")) if remove_duplicates else F.collect_list(F.col("value"))
         )
-        return self.attrs.where(F.col("value").isNotNull()).groupBy("id").agg(
+        keys = [*side_keys(self.attrs), "id"]
+        return self.attrs.where(F.col("value").isNotNull()).groupBy(*keys).agg(
             F.trim(F.array_join(F.array_sort(collected), sep)).alias("text")
         )

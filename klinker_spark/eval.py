@@ -14,6 +14,7 @@ True (the join-based / spark_eval behavior).
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -55,23 +56,30 @@ class Evaluation:
         materialization.
 
         ``left_count`` / ``right_count`` accept the entity DataFrames
-        themselves; their counts and the gold count are single-row
-        aggregates cross-joined into the pair-count action.  The array
-        path is then ONE driver action (a scan of the pairs table with
-        the gold set broadcast onto it), the key path two (the
-        keys-per-entity probe, then the counts).
+        themselves, counted inside the same action.
+
+        One action in general: the candidate pairs and the gold rows
+        are grouped once by ``(left_id, right_id)``, each group yielding
+        its pair count (its duplicates under ``distinct=False``, else 1),
+        its true positives (the same count if the pair is a non-null
+        gold link) and its gold count (1 if it is one); those rows and
+        one row per entity of ``left_count`` / ``right_count`` are legs
+        of one union, summed in one global aggregate.  The key path
+        (``distinct`` and key frames) takes two: the keys-per-entity
+        probe, then the counts.
         """
         lcol, rcol = gold.columns[:2]
         g = gold.select(
             F.col(lcol).cast("string").alias("left_id"),
             F.col(rcol).cast("string").alias("right_id"),
-        ).distinct()  # gold is a set of links; dupes would inflate the left-join
-        small = g.agg(F.count("*").alias("_ng"))
-        if isinstance(left_count, DataFrame):
-            small = small.crossJoin(left_count.agg(F.count("*").alias("_nl")))
-        if isinstance(right_count, DataFrame):
-            small = small.crossJoin(right_count.agg(F.count("*").alias("_nr")))
+        )
         if distinct and blocks.left_keys is not None:
+            g = g.distinct()  # gold is a set of links; dupes would inflate the counts
+            small = g.agg(F.count("*").alias("_ng"))
+            if isinstance(left_count, DataFrame):
+                small = small.crossJoin(left_count.agg(F.count("*").alias("_nl")))
+            if isinstance(right_count, DataFrame):
+                small = small.crossJoin(right_count.agg(F.count("*").alias("_nr")))
             # Assignment-frame fast path (the reference's
             # MinimalEvaluation direction, ``eval.py:22-141``, taken to
             # its join-only conclusion): a gold pair is COVERED iff the
@@ -117,21 +125,12 @@ class Evaluation:
                 n_agg = blocks.pairs(distinct=True).agg(F.count("*").alias("_n"))
             row = tp_agg.crossJoin(n_agg).crossJoin(small).first()
         else:
-            pairs = blocks.pairs(distinct=distinct)
-            # one job for comparisons + TPs: left-join gold (broadcast —
-            # gold is the small side by construction) and count flag hits
-            marked = pairs.join(
-                F.broadcast(g.withColumn("_g", F.lit(1))), ["left_id", "right_id"], "left"
-            )
-            row = marked.agg(
-                F.count("*").alias("_n"),
-                F.sum(F.coalesce(F.col("_g"), F.lit(0))).alias("_tp"),
-            ).crossJoin(small).first()
-        n_pairs, tp, n_gold = int(row["_n"] or 0), int(row["_tp"] or 0), row["_ng"]
+            row = _one_pass_counts(blocks, g, left_count, right_count, distinct)
+        n_pairs, tp, n_gold = int(row["_n"] or 0), int(row["_tp"] or 0), int(row["_ng"] or 0)
         if isinstance(left_count, DataFrame):
-            left_count = row["_nl"]
+            left_count = int(row["_nl"] or 0)
         if isinstance(right_count, DataFrame):
-            right_count = row["_nr"]
+            right_count = int(row["_nr"] or 0)
         return cls(
             true_positives=tp,
             false_positives=n_pairs - tp,
@@ -182,6 +181,36 @@ class Evaluation:
             "false_negatives": self.false_negatives,
             "comparisons": self.comparisons,
         }
+
+
+_COUNTS = ("_n", "_tp", "_ng", "_nl", "_nr")
+
+
+def _one_pass_counts(blocks, gold: DataFrame, left_count, right_count, distinct: bool):
+    """The pair, true-positive, gold and entity counts of
+    :meth:`Evaluation.from_blocks` as one row, from one action.
+    ``gold``: string ``(left_id, right_id)``."""
+
+    def leg(df: DataFrame, **cols) -> DataFrame:
+        return df.select(*(cols.get(c, F.lit(0)).alias(c) for c in _COUNTS))
+
+    ids = [F.col(c).cast("string").alias(c) for c in ("left_id", "right_id")]
+    grouped = (
+        blocks.block_pairs()
+        .select(*ids, F.lit(1).alias("_p"), F.lit(0).alias("_g"))
+        .unionByName(gold.select("*", F.lit(0).alias("_p"), F.lit(1).alias("_g")))
+        .groupBy("left_id", "right_id")
+        .agg(F.sum("_p").alias("_p"), F.max("_g").alias("_g"))
+    )
+    n = F.least(F.col("_p"), F.lit(1)) if distinct else F.col("_p")
+    is_link = (F.col("_g") == 1) & F.col("left_id").isNotNull() & F.col("right_id").isNotNull()
+    legs = [leg(grouped, _n=n, _tp=F.when(is_link, n).otherwise(0), _ng=F.col("_g"))]
+    if isinstance(left_count, DataFrame):
+        legs.append(leg(left_count, _nl=F.lit(1)))
+    if isinstance(right_count, DataFrame):
+        legs.append(leg(right_count, _nr=F.lit(1)))
+    union = functools.reduce(DataFrame.unionByName, legs)
+    return union.agg(*(F.sum(c).alias(c) for c in _COUNTS)).first()
 
 
 def dice(n_a: int, n_b: int, n_common: int) -> float:

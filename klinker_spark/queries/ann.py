@@ -898,12 +898,20 @@ def _src_fingerprint(src_path: str) -> list:
     ]
 
 
-def _index_current(path: str, src_path: str) -> bool:
+#: Version of the index build and list-assignment rules, recorded in
+#: every index manifest.  Bump it whenever a build or assignment rule
+#: changes, so indexes an older build left behind are rebuilt.
+INDEX_BUILD_VERSION = 2
+
+
+def _index_current(path: str, src_path: str, **meta) -> bool:
     """True iff ``path`` holds a COMPLETED index built from the data
-    currently at ``src_path``.  The manifest is written last by
-    :func:`_write_index_manifest`, so a crashed build (no manifest) or
-    an index built from older regenerated data (fingerprint mismatch)
-    both trigger a rebuild instead of silently serving wrong lists."""
+    currently at ``src_path`` by this build version with the same
+    ``meta`` (kind, centroid count, quantizer, ...).  The manifest is
+    written last by :func:`_write_index_manifest`, so a crashed build
+    (no manifest), an index built from older regenerated data
+    (fingerprint mismatch), by an older build or with other settings
+    all trigger a rebuild instead of silently serving wrong lists."""
     import json as _json
     import os
 
@@ -912,9 +920,16 @@ def _index_current(path: str, src_path: str) -> bool:
         return False
     try:
         with open(mf) as fh:
-            return _json.load(fh).get("src_fingerprint") == _src_fingerprint(src_path)
+            got = _json.load(fh)
     except Exception:
         return False
+    return all(got.get(k) == v for k, v in _manifest(src_path, meta).items())
+
+
+def _manifest(src_path: str, meta: dict) -> dict:
+    """The manifest of an index this build makes from ``src_path``."""
+    fingerprint = _src_fingerprint(src_path)
+    return {"src_fingerprint": fingerprint, "build_version": INDEX_BUILD_VERSION, **meta}
 
 
 def _derived_path(name: str) -> str:
@@ -932,7 +947,7 @@ def _write_index_manifest(path: str, src_path: str, **meta) -> None:
     import os
 
     with open(os.path.join(path, "_MANIFEST.json"), "w") as fh:
-        _json.dump({"src_fingerprint": _src_fingerprint(src_path), **meta}, fh)
+        _json.dump(_manifest(src_path, meta), fh)
 
 
 @register("ann_topk_ivf_indexed")
@@ -950,9 +965,10 @@ def ann_topk_ivf_indexed_q(spark, sf_dir):
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     path = _derived_path(f"ivf_{sf_tag}")
     src = os.path.join(sf_dir, "embeddings.parquet")
-    if not _index_current(path, src):
+    meta = dict(kind="ivf", n_centroids=16, quantizer="kmeans")
+    if not _index_current(path, src, **meta):
         build_ivf_index(emb, path, n_centroids=16)
-        _write_index_manifest(path, src, kind="ivf", n_centroids=16, quantizer="kmeans")
+        _write_index_manifest(path, src, **meta)
     out = ann_topk_ivf_indexed(emb.where(F.col("vec_id") % 10 == 0), path, k=10, n_probe=4)
     return out.withColumn("sim", F.round("sim", 6))
 
@@ -974,9 +990,10 @@ def ann_topk_ivf_indexed_md5_q(spark, sf_dir):
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     path = _derived_path(f"ivf_md5_{sf_tag}")
     src = os.path.join(sf_dir, "embeddings.parquet")
-    if not _index_current(path, src):
+    meta = dict(kind="ivf", n_centroids=16, quantizer="hash_sample")
+    if not _index_current(path, src, **meta):
         build_ivf_index(emb, path, n_centroids=16, quantizer="hash_sample")
-        _write_index_manifest(path, src, kind="ivf", n_centroids=16, quantizer="hash_sample")
+        _write_index_manifest(path, src, **meta)
     out = ann_topk_ivf_indexed(
         emb.where(F.col("vec_id") % 10 == 0), path, k=10, n_probe=4
     )

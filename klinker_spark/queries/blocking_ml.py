@@ -224,7 +224,7 @@ _COMPOSITE_SQL = """
     _COMPOSITE_SQL.format(stop=_STOP_SQL),
 )
 def composite_unique_name_blocking(spark, sf_dir):
-    """E5: unique-name pass → anti-join covered entities → token blocker
+    """E5: unique-name pass → drop covered entities → token blocker
     on the remainder → combine.  Left = orders (attr: priority, unique
     key: custkey ref), right = customers (attr: mktsegment, key:
     custkey).  The relation branch is disabled (attr-only composite) so
@@ -342,7 +342,7 @@ _COMPOSITE_REL_SQL = """
 def composite_relational_blocking(spark, sf_dir):
     """E4/E5/E6: the FULL CompositeRelationalTokenBlocker flow —
     unique-name pass (nations, the only values unique on both sides) →
-    anti-join covered entities → token blocker on remaining attrs →
+    drop covered entities → token blocker on remaining attrs →
     token blocker on neighbor-concat text of the remainder → one
     key-level combine.  The oracle models combine exactly: per-side
     assignment sets unioned per block_key across the three branches,

@@ -1332,14 +1332,12 @@ def ann_topk_ivfpq_indexed_md5_q(spark, sf_dir):
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     path = _derived_path(f"ivfpq_{sf_tag}")
     src = os.path.join(sf_dir, "embeddings.parquet")
-    if not _index_current(path, src):
+    meta = dict(kind="ivfpq", n_centroids=16, m=8, k_codes=16, quantizer="hash_sample")
+    if not _index_current(path, src, **meta):
         build_ivfpq_index(
             emb, path, n_centroids=16, m=8, k_codes=16, quantizer="hash_sample"
         )
-        _write_index_manifest(
-            path, src, kind="ivfpq", n_centroids=16, m=8, k_codes=16,
-            quantizer="hash_sample",
-        )
+        _write_index_manifest(path, src, **meta)
     out = ann_topk_ivfpq(emb.where(F.col("vec_id") % 10 == 0), path, k=10, n_probe=4)
     return out.withColumn("dist", F.round("dist", 6))
 

@@ -984,7 +984,8 @@ def _ensure_bucketed_table(spark, sf_dir: str, table: str, key: str, n_buckets: 
     src_path = os.path.join(sf_dir, f"{table}.parquet")
     path = _derived_path(f"bkt_{table}_{sf_tag}")
     src = spark.read.parquet(src_path)
-    if _index_current(path, src_path):
+    meta = dict(kind="bucketed", key=key, n_buckets=n_buckets)
+    if _index_current(path, src_path, **meta):
         cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in src.schema)
         spark.sql(
             f"CREATE TABLE {name} ({cols}) USING PARQUET"
@@ -1001,7 +1002,7 @@ def _ensure_bucketed_table(spark, sf_dir: str, table: str, key: str, n_buckets: 
         .option("path", path)
         .saveAsTable(name)
     )
-    _write_index_manifest(path, src_path, kind="bucketed", key=key, n_buckets=n_buckets)
+    _write_index_manifest(path, src_path, **meta)
     BUCKETED_EVENTS[name] = "built-first-touch"
     return name
 

@@ -337,6 +337,10 @@ def get_spark(
         # smaller than a repeating working set (default 100) misses on
         # every entry, so each warm iteration compiled them all again
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # the cache is keyed by the generated source: with the stage id
+        # in the class name, an AQE re-plan that renumbers a stage
+        # compiles identical code again under a new name
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # RocksDB state store: required by transformWithState, and the
         # at-scale choice anyway (state off-heap + incremental snapshots
         # instead of full in-heap HDFS-backed maps)

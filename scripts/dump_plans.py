@@ -42,11 +42,11 @@ DEFAULT_QUERIES = [
 
 NOTES = {
     "token_blocking": "Both scans pruned to (id, name); per-side partial+final ObjectHashAggregate (collect_set); supplier side broadcast — zero shuffle joins.",
-    "relational_token_blocking": "The headline method: concat aggregates, one inner edge join carrying self-loops, re-concat, token explode, block join. Importance tables would enter as broadcasts.",
+    "relational_token_blocking": "The headline method: concat aggregates, one inner edge join, the own text unioned in as rows after it, re-concat, token explode, block join. Importance tables would enter as broadcasts.",
     "ngram_jaccard_dedup": "PPJoin prefix filter: frequency count -> per-doc window -> prefix self-join -> array_intersect verify; size filter rides the candidate join.",
     "knn_topk": "Index broadcast, deliberate BroadcastNestedLoopJoin cross product, single window for top-k; vec_id filter pushed to the scan.",
     "windowed_event_counts": "Scan pruned to 3 columns; map-side partial aggregate; one exchange on (window, type).",
-    "eval_metrics": "Join-count evaluation: pairs left-join broadcast gold, one aggregate for comparisons+TPs.",
+    "eval_metrics": "Evaluation runs while the query builds, so the plan is its one-row result. Key-framed blocks (this query) count covered gold links through the assignment join; array-layout blocks, or distinct=False, take one action: pairs and gold rows grouped once by (left_id, right_id), then one global aggregate of pair, TP, gold and entity counts.",
     "knn_topk_sharded": "Unbroadcastable-index exact kNN: index scanned IN PLACE through MapInPandas (zero index shuffle — queries arrive via a parquet side-channel read inside the task); WindowGroupLimit prunes partial top-k before the single exchange of the merge window.",
     "ann_topk_ivf_indexed": "Persisted IVF probe: scan shows PartitionFilters on centroid_id (unprobed list directories never open); per-list matmul via FlatMapCoGroupsInPandas; probe projection read from parquet scratch (no session-lifetime cache); tiny final window.",
     "csls_topk": "Hubness-reduced kNN: two MapInPandas exact searches, scalar avg aggregates, two scalar equi-joins, one merge window — the dim-d vectors never enter an exchange after the searches.",

@@ -28,6 +28,7 @@ def spark():
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .getOrCreate()
     )
     session.sparkContext.setLogLevel("ERROR")

@@ -122,3 +122,68 @@ def test_rbo_overlap_fixture(spark):
     # q3: doc30 at (1,2)->m=2, doc31 at (2,1)->m=2; X = (0,2,2)
     exp3 = 0 * w[0] + 2 * w[1] + 2 * w[2] + 2 * tail
     assert out[3]["x_k"] == 2 and out[3]["rbo"] == round(exp3, 6)
+
+
+@pytest.mark.parametrize("distinct", [True, False])
+def test_one_pass_evaluation_matches_pair_counting(spark, distinct):
+    """The one-action evaluation of array-layout blocks equals counting
+    the exploded pairs against the distinct gold set: pairs repeated
+    across blocks (counted once per block under ``distinct=False``),
+    duplicate gold rows, and null ids, which form pairs and gold rows
+    but never match."""
+    blocks = BlockManager.from_dict(
+        spark,
+        {
+            "b1": (["A:1", "A:2"], ["B:1", "B:2"]),
+            "b2": (["A:1", "A:3"], ["B:1"]),  # (A:1, B:1) again
+            "b3": (["A:2"], ["B:2", "B:3"]),  # (A:2, B:2) again
+        },
+    )
+    with_null = spark.createDataFrame(
+        [("b4", [None, "A:4"], ["B:4"])],
+        "block_key string, A array<string>, B array<string>",
+    )
+    blocks = BlockManager(blocks.df.unionByName(with_null), "A", "B")
+    gold_rows = [
+        ("A:1", "B:1"), ("A:1", "B:1"),  # duplicate gold row
+        ("A:2", "B:2"), ("A:4", "B:4"), ("A:9", "B:9"),
+        (None, "B:4"), (None, "B:4"),  # null gold id, also a null pair
+    ]
+    gold = spark.createDataFrame(gold_rows, "l string, r string")
+
+    pairs = [
+        (lid, rid)
+        for _, ls, rs in [
+            ("b1", ["A:1", "A:2"], ["B:1", "B:2"]),
+            ("b2", ["A:1", "A:3"], ["B:1"]),
+            ("b3", ["A:2"], ["B:2", "B:3"]),
+            ("b4", [None, "A:4"], ["B:4"]),
+        ]
+        for lid in ls
+        for rid in rs
+    ]
+    if distinct:
+        pairs = list(set(pairs))
+    links = set(gold_rows)
+    tp = sum(1 for p in pairs if None not in p and p in links)
+
+    left = spark.createDataFrame([(f"A:{i}",) for i in range(6)], ["id"])
+    right = spark.createDataFrame([(f"B:{i}",) for i in range(5)], ["id"])
+    sc = spark.sparkContext
+    group = f"one-pass-eval-{distinct}"
+    sc.setJobGroup(group, group)
+    try:
+        e = Evaluation.from_blocks(
+            blocks, gold, left_count=left, right_count=right, distinct=distinct
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
+    assert (e.comparisons, e.true_positives, e.false_negatives) == (
+        len(pairs),
+        tp,
+        len(links) - tp,
+    )
+    assert (e.left_count, e.right_count) == (6, 5)
+    assert e == Evaluation.from_blocks(blocks, gold, 6, 5, distinct=distinct)

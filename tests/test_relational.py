@@ -87,6 +87,25 @@ def test_concat_neighbor_without_own(frame_a, rels_a):
     assert "Rebecca" in got["a1"] and "John McExample" not in got["a1"]
 
 
+@pytest.mark.parametrize("top_n", [(None, None), (1, 1)])
+def test_side_tagged_neighbor_text_equals_per_side_calls(frame_a, frame_b, rels_a, rels_b, top_n):
+    """Both sides stacked with an ``_s`` tag run as one plan, yet the
+    entity counts, importance ranks and concatenation stay per side."""
+    from klinker_spark.data.frames import EntityFrame, side_of, tag_sides
+
+    tagged = concat_neighbor_attributes(
+        EntityFrame(tag_sides(frame_a.attrs, frame_b.attrs), "AB"),
+        tag_sides(rels_a, rels_b),
+        True,
+        *top_n,
+    )
+    for s, (frame, rels) in enumerate([(frame_a, rels_a), (frame_b, rels_b)]):
+        want = concat_neighbor_attributes(frame, rels, True, *top_n)
+        assert {tuple(r) for r in side_of(tagged, s).collect()} == {
+            tuple(r) for r in want.collect()
+        }
+
+
 def test_simple_relational_token_blocker(frame_a, frame_b, rels_a, rels_b):
     bm = SimpleRelationalTokenBlocker().assign(frame_a, frame_b, rels_a, rels_b)
     got = blocks_as_dict(bm)

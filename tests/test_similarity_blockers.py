@@ -175,3 +175,34 @@ def test_indexed_query_writes_its_index_under_the_temp_dir(spark, tmp_path, monk
     tag = os.path.basename(SF_DIR.rstrip("/"))
     assert os.path.isfile(tmp_path / f"klinker_ivf_{tag}" / "_MANIFEST.json")
     assert package_files() == before
+
+
+def test_index_manifest_must_match_build_version_and_settings(tmp_path):
+    """A persisted index is current only if its manifest records this
+    build version and the caller's settings, not just the source data's
+    fingerprint: an index an older build (or another quantizer) left in
+    the temp directory is rebuilt, not served."""
+    import json
+
+    from klinker_spark.queries.ann import (
+        INDEX_BUILD_VERSION,
+        _index_current,
+        _src_fingerprint,
+        _write_index_manifest,
+    )
+
+    src = tmp_path / "src.parquet"
+    src.write_bytes(b"rows")
+    index = tmp_path / "index"
+    index.mkdir()
+    meta = dict(kind="ivf", n_centroids=16, quantizer="kmeans")
+
+    old = {"src_fingerprint": _src_fingerprint(str(src)), **meta}
+    (index / "_MANIFEST.json").write_text(json.dumps(old))
+    assert not _index_current(str(index), str(src), **meta)
+
+    _write_index_manifest(str(index), str(src), **meta)
+    assert json.loads((index / "_MANIFEST.json").read_text())["build_version"] == INDEX_BUILD_VERSION
+    assert _index_current(str(index), str(src), **meta)
+    assert not _index_current(str(index), str(src), **{**meta, "quantizer": "hash_sample"})
+    assert not _index_current(str(index), str(src), **{**meta, "n_centroids": 8})
