@@ -27,7 +27,8 @@ from pyspark.sql import DataFrame
 
 from ..data.blocks import BlockManager
 from ..data.frames import side_of, tag_sides
-from .composite import CompositeUniqueNameBlocker, _branch_keys
+from .composite import CompositeUniqueNameBlocker
+from .relation_aware import _branch_keys
 from .token import TokenBlocker
 
 # NOTE: ..embedding.* is imported lazily inside the constructors —

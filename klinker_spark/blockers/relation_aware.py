@@ -7,25 +7,37 @@ top-n filter ``:106-153`` = W1, ``concat_neighbor_attributes``
 ``:156-247`` = E3 with the neighbor join J3, blocker classes
 ``:250-631`` = E4).
 
-Plan shape of the full pipeline (SimpleRelationalTokenBlocker, the
-paper's headline method): inverse-edge union (narrow) → optional
-broadcast-joined importance filter (aggregate is tiny: one row per
-relation/property) → neighbor equi-join on ``tail = id`` (the one big
-shuffle) → re-concat per head (second shuffle) → token blocking.
-Catalyst broadcasts the importance tables automatically; the neighbor
-join is the scale-critical edge×text join and shuffles on the entity id
-— the natural co-partitioning key for every later stage.
+Every relational blocker, here and in :mod:`.composite` /
+:mod:`.hybrid`, is one flow (:class:`_RelationalFlow`): one lazy plan
+over side-tagged frames ``(_s, id, …)``, ``_s`` = 0 left and 1 right
+(:func:`~..data.frames.tag_sides`), of own text → neighbour text →
+optional unique-name pass (its covered ids leave both texts) → one
+blocker per branch → combine.  The constructors fix what differs:
+``SimpleRelational*`` has one branch over own + neighbour text;
+``Relational*`` an attribute branch on own text and a relation branch
+on neighbour text only; ``Composite*`` adds the unique pass.
+
+Plan shape: inverse-edge union (narrow) → optional broadcast-joined
+importance filter (one row per relation/property) → neighbour
+equi-join on ``(_s, tail = id)``, the scale-critical edge×text join →
+re-concat per ``(_s, head)`` → blocking, each step once for both
+sides.  Several branches meet in one
+:meth:`~..data.blocks.BlockManager.combine_branches` exchange; no job
+runs before the caller's action except the ``top_n_*`` entity count.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..data.blocks import BlockManager
-from ..data.frames import EntityFrame, concat_frames, reverse_rel, side_keys
+from ..data.frames import EntityFrame, concat_frames, reverse_rel, side_keys, side_of, tag_sides
 from .base import Blocker, SchemaAgnosticBlocker
 from .token import TokenBlocker
+from .unique_name import _unique_pairs
 
 __all__ = [
     "count_entities",
@@ -231,39 +243,82 @@ def concat_neighbor_attributes(
     return EntityFrame(neighbor_triples, frame.name).concat_values()
 
 
-class _ConcatRelationalInfo:
-    def __init__(self, top_n_a: int | None = None, top_n_r: int | None = None):
-        self.top_n_a = top_n_a
-        self.top_n_r = top_n_r
-
-    def _conc(
-        self,
-        frame: EntityFrame,
-        rels: DataFrame,
-        include_own: bool,
-        own_text: DataFrame | None = None,
-    ) -> DataFrame:
-        return concat_neighbor_attributes(
-            frame,
-            rels,
-            include_own_attributes=include_own,
-            top_n_a=self.top_n_a,
-            top_n_r=self.top_n_r,
-            own_text=own_text,
-        )
+def _drop_covered(frame: DataFrame, covered: DataFrame, keys: list[str]) -> DataFrame:
+    """Rows of ``frame`` whose ``keys`` are not in ``covered``: a left
+    join keeping the unmatched rows, which Catalyst, unlike a
+    ``left_anti`` join, leaves above ``frame``'s aggregate, so exchange
+    reuse computes the filtered and unfiltered aggregate once."""
+    hit = covered.select(*keys, F.lit(True).alias("_covered"))
+    return (
+        frame.join(hit, keys, "left")
+        .where(F.col("_covered").isNull())
+        .drop("_covered")
+    )
 
 
-class SimpleRelationalBlocker(_ConcatRelationalInfo, Blocker):
-    """One blocker over own+neighbor text (``relation_aware.py:296-328``)."""
+def _branch_keys(
+    assign: Callable[[DataFrame, DataFrame, str, str], BlockManager],
+    tagged: DataFrame,
+    names: tuple[str, str],
+) -> DataFrame:
+    """A per-side branch ``assign(left, right, left_name, right_name)``
+    fed by the two sides of a side-tagged frame; its key frames
+    side-tagged again, ``(_s, block_key, id)``."""
+    return assign(side_of(tagged, 0), side_of(tagged, 1), *names).side_tagged_keys()
+
+
+def _blocker_keys(
+    blocker: SchemaAgnosticBlocker, text: DataFrame, names: tuple[str, str], purge: bool
+) -> DataFrame:
+    """One branch's side-tagged keys from side-tagged ``(_s, id,
+    text)``.  A token blocker tokenizes both sides at once unless it
+    must purge; any other blocker runs per side, through
+    ``assign_text`` (which purges when the blocker asks to) when
+    ``purge``, else through ``_assign``."""
+    if isinstance(blocker, TokenBlocker) and not (purge and blocker._purge):
+        return blocker._tok_keys(text)
+    return _branch_keys(blocker.assign_text if purge else blocker._assign, text, names)
+
+
+class _RelationalFlow(Blocker):
+    """The one relational blocking flow (see the module docstring).
+
+    ``attribute_blocker`` (None: no attribute branch) blocks the own
+    text and may purge; ``relation_blocker`` blocks the relation text
+    and never purges, as in the reference.  Unique-covered entities
+    are dropped after the concatenation: both are per id, so this
+    equals dropping their attributes before it.  Hooks: ``_rel_input``
+    and ``_rel_keys``, the relation branch's tagged input and keys."""
 
     def __init__(
         self,
-        blocker: SchemaAgnosticBlocker,
+        attribute_blocker: SchemaAgnosticBlocker | None,
+        relation_blocker: SchemaAgnosticBlocker | None,
         top_n_a: int | None = None,
         top_n_r: int | None = None,
+        use_unique_name: bool = False,
+        include_own_attributes: bool = True,
     ):
-        super().__init__(top_n_a, top_n_r)
-        self._blocker = blocker
+        self._attribute_blocker = attribute_blocker
+        self._relation_blocker = relation_blocker
+        self.top_n_a = top_n_a
+        self.top_n_r = top_n_r
+        self.use_unique_name = use_unique_name
+        self.include_own_attributes = include_own_attributes
+
+    def _rel_input(self, attrs: DataFrame, rels: DataFrame, own_text: DataFrame) -> DataFrame:
+        """Side-tagged input of the relation branch: neighbour text."""
+        return concat_neighbor_attributes(
+            EntityFrame(attrs, ""),
+            rels,
+            self.include_own_attributes,
+            self.top_n_a,
+            self.top_n_r,
+            own_text=own_text,
+        )
+
+    def _rel_keys(self, rel_input: DataFrame, names: tuple[str, str]) -> DataFrame:
+        return _blocker_keys(self._relation_blocker, rel_input, names, purge=False)
 
     def assign(
         self,
@@ -272,13 +327,41 @@ class SimpleRelationalBlocker(_ConcatRelationalInfo, Blocker):
         left_rel: DataFrame | None = None,
         right_rel: DataFrame | None = None,
     ) -> BlockManager:
-        assert left_rel is not None and right_rel is not None
-        return self._blocker._assign(
-            self._conc(left, left_rel, True),
-            self._conc(right, right_rel, True),
-            left.name,
-            right.name,
+        if left_rel is None or right_rel is None:
+            raise ValueError("a relational blocker needs left_rel and right_rel")
+        names = (left.name, right.name)
+        attrs = tag_sides(left.attrs, right.attrs)
+        own = EntityFrame(attrs, "").concat_values()  # (_s, id, text)
+        rel = self._rel_input(attrs, tag_sides(left_rel, right_rel), own)
+        branches = []
+        if self.use_unique_name:
+            unique = _unique_pairs(attrs).selectExpr(
+                "block_key", "stack(2, 0, left_id, 1, right_id) AS (_s, id)"
+            )
+            covered = unique.select("_s", "id")
+            own, rel = (_drop_covered(d, covered, ["_s", "id"]) for d in (own, rel))
+            branches.append(unique)
+        if self._attribute_blocker is not None:
+            branches.append(_blocker_keys(self._attribute_blocker, own, names, purge=True))
+        branches.append(self._rel_keys(rel, names))
+        if len(branches) > 1:
+            return BlockManager.combine_branches(branches, *names)
+        keys = branches[0]
+        return BlockManager.from_key_assignments(
+            side_of(keys, 0), side_of(keys, 1), *names, assume_distinct=True
         )
+
+
+class SimpleRelationalBlocker(_RelationalFlow):
+    """One blocker over own+neighbor text (``relation_aware.py:296-328``)."""
+
+    def __init__(
+        self,
+        blocker: SchemaAgnosticBlocker,
+        top_n_a: int | None = None,
+        top_n_r: int | None = None,
+    ):
+        super().__init__(None, blocker, top_n_a, top_n_r)
 
 
 class SimpleRelationalTokenBlocker(SimpleRelationalBlocker):
@@ -293,7 +376,7 @@ class SimpleRelationalTokenBlocker(SimpleRelationalBlocker):
         super().__init__(TokenBlocker(min_token_length=min_token_length), top_n_a, top_n_r)
 
 
-class RelationalBlocker(_ConcatRelationalInfo, Blocker):
+class RelationalBlocker(_RelationalFlow):
     """Separate attr/rel blockers, combined (``relation_aware.py:391-437``).
 
     Attribute blocks come from own values only; relation blocks from
@@ -308,26 +391,9 @@ class RelationalBlocker(_ConcatRelationalInfo, Blocker):
         top_n_a: int | None = None,
         top_n_r: int | None = None,
     ):
-        super().__init__(top_n_a, top_n_r)
-        self._attribute_blocker = attribute_blocker
-        self._relation_blocker = relation_blocker
-
-    def assign(
-        self,
-        left: EntityFrame,
-        right: EntityFrame,
-        left_rel: DataFrame | None = None,
-        right_rel: DataFrame | None = None,
-    ) -> BlockManager:
-        assert left_rel is not None and right_rel is not None
-        attr_blocks = self._attribute_blocker.assign(left, right)
-        rel_blocks = self._relation_blocker._assign(
-            self._conc(left, left_rel, False),
-            self._conc(right, right_rel, False),
-            left.name,
-            right.name,
+        super().__init__(
+            attribute_blocker, relation_blocker, top_n_a, top_n_r, include_own_attributes=False
         )
-        return attr_blocks.combine(rel_blocks)
 
 
 class RelationalTokenBlocker(RelationalBlocker):

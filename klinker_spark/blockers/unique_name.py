@@ -19,6 +19,32 @@ from .base import Blocker
 __all__ = ["UniqueNameBlocker"]
 
 
+def _unique_pairs(attrs: DataFrame) -> DataFrame:
+    """Side-tagged ``(_s, id, prop, value)`` → the 1:1 unique-name
+    blocks ``(block_key, left_id, right_id)``.
+
+    One aggregate over both sides: a value is unique on a side iff that
+    side's ``min(id) = max(id)`` (:meth:`UniqueNameBlocker._unique_values`'
+    rule, null ids skipped), and it is a block iff it is unique on
+    both."""
+
+    def ids(agg, s: int):
+        return agg(F.when(F.col("_s") == s, F.col("id")))
+
+    return (
+        attrs.where(F.col("value").isNotNull())
+        .groupBy(F.col("value").alias("block_key"))
+        .agg(
+            ids(F.min, 0).alias("_lo0"),
+            ids(F.max, 0).alias("left_id"),
+            ids(F.min, 1).alias("_lo1"),
+            ids(F.max, 1).alias("right_id"),
+        )
+        .where((F.col("_lo0") == F.col("left_id")) & (F.col("_lo1") == F.col("right_id")))
+        .select("block_key", "left_id", "right_id")
+    )
+
+
 class UniqueNameBlocker(Blocker):
     """Blocks keyed by values held by exactly one entity per side."""
 

@@ -60,14 +60,6 @@ class BlockManager:
     # form).  Raw single-blocker assignments are NOT effective: a value
     # seen only on one side is an assignment but never a block.
     keys_effective: bool = False
-    # True when both key frames are already hash-partitioned on
-    # block_key (combine_all's dedup exchange): block_pairs then skips
-    # its round-robin expansion repartition — the join reuses the
-    # co-partitioning with zero additional exchange, and the key space
-    # of a combined manager is high-cardinality (token-sized), so the
-    # low-cardinality single-task hazard the round-robin guards against
-    # does not apply.
-    keys_partitioned: bool = False
 
     @property
     def df(self) -> DataFrame:
@@ -157,13 +149,16 @@ class BlockManager:
         session's defaultParallelism; round-robin cannot be collapsed
         into the dedup's ENSURE_REQUIREMENTS exchange the way a hash
         repartition is.  Cost: one linear pass over the left input,
-        amortized by the super-linear output.  A ``keys_partitioned``
-        manager (``combine_all``'s token-wide key space) skips it.
+        amortized by the super-linear output.  A combined manager
+        (:meth:`combine_branches`) gets it too: its key frames are
+        already hash-partitioned on ``block_key``, but one hot key (a
+        branch of 25 nation names) still puts its whole expansion in
+        one task of that partitioning.
         """
         if self.left_keys is not None:
-            lk = self.left_keys
-            if not self.keys_partitioned:
-                lk = lk.repartition(lk.sparkSession.sparkContext.defaultParallelism)
+            lk = self.left_keys.repartition(
+                self.left_keys.sparkSession.sparkContext.defaultParallelism
+            )
             return (
                 lk.withColumnRenamed("id", "left_id")
                 .join(self.right_keys.withColumnRenamed("id", "right_id"), "block_key")
@@ -304,14 +299,16 @@ class BlockManager:
 
         Stacks the branches into a single tagged frame ``(block_key,
         id, _b=branch, _s=side)`` and hash-repartitions it on
-        ``block_key`` ONCE.  Everything downstream rides that
-        partitioning with zero further exchanges: two-sidedness per
-        (key, branch) is a window max (hash(key) satisfies the (key,
-        branch) clustering), the per-side dedup is a group-by whose
-        keys start with block_key, and the terminal pair join sees two
-        co-partitioned sides.  Both sides read the same exchange, so
-        exchange reuse computes the stacked frame once in the terminal
-        action — nothing is cached and no job runs here.  A caller
+        ``block_key`` ONCE.  The key frames and the array layout ride
+        that partitioning with zero further exchanges: two-sidedness
+        per (key, branch) is a window max (hash(key) satisfies the
+        (key, branch) clustering), and the per-side dedup and the
+        arrays are group-bys whose keys start with block_key.
+        :meth:`block_pairs` still spreads the expansion with its
+        round-robin repartition, as for any manager: one hot key would
+        otherwise expand in one task.  Both sides read the same
+        exchange, so exchange reuse computes the stacked frame once in
+        the terminal action — nothing is cached and no job runs here.  A caller
         running several actions on the result caches its frames with
         :func:`klinker_spark.ckpt.persist` inside a
         :func:`klinker_spark.ckpt.scope`."""
@@ -355,7 +352,6 @@ class BlockManager:
             side(0),
             side(1),
             keys_effective=True,
-            keys_partitioned=True,
         )
 
     def combine(self, other: "BlockManager") -> "BlockManager":

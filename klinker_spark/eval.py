@@ -58,74 +58,19 @@ class Evaluation:
         ``left_count`` / ``right_count`` accept the entity DataFrames
         themselves, counted inside the same action.
 
-        One action in general: the candidate pairs and the gold rows
-        are grouped once by ``(left_id, right_id)``, each group yielding
-        its pair count (its duplicates under ``distinct=False``, else 1),
-        its true positives (the same count if the pair is a non-null
-        gold link) and its gold count (1 if it is one); those rows and
-        one row per entity of ``left_count`` / ``right_count`` are legs
-        of one union, summed in one global aggregate.  The key path
-        (``distinct`` and key frames) takes two: the keys-per-entity
-        probe, then the counts.
+        One action, a union of count legs summed in one global
+        aggregate (:func:`_one_pass_counts` for array layouts,
+        :func:`_key_counts` for key frames, which never enumerate the
+        whole pair space); each leg yields some of the pair, true
+        positive, gold and entity counts.
         """
         lcol, rcol = gold.columns[:2]
         g = gold.select(
             F.col(lcol).cast("string").alias("left_id"),
             F.col(rcol).cast("string").alias("right_id"),
         )
-        if distinct and blocks.left_keys is not None:
-            g = g.distinct()  # gold is a set of links; dupes would inflate the counts
-            small = g.agg(F.count("*").alias("_ng"))
-            if isinstance(left_count, DataFrame):
-                small = small.crossJoin(left_count.agg(F.count("*").alias("_nl")))
-            if isinstance(right_count, DataFrame):
-                small = small.crossJoin(right_count.agg(F.count("*").alias("_nr")))
-            # Assignment-frame fast path (the reference's
-            # MinimalEvaluation direction, ``eval.py:22-141``, taken to
-            # its join-only conclusion): a gold pair is COVERED iff the
-            # two sides share ≥ 1 block key — an assignments join
-            # linear in |gold|·keys-per-entity, so TP/FN never touch
-            # the |blocks|² pair space.  When either side assigns every
-            # entity at most ONE key (standard blocking — checked with
-            # one cheap aggregate), cross-block duplicate pairs cannot
-            # exist, so the distinct comparison count is plain
-            # Σ|bl|·|br| from the per-block sizes — the 126 s → 3 s
-            # sf1 fix: the only remaining pair-space scan is the
-            # genuinely multi-key distinct count, and FP stays
-            # comparisons − TP by definition.
-            la = blocks.left_keys.select(
-                "block_key", F.col("id").cast("string").alias("left_id")
-            )
-            ra = blocks.right_keys.select(
-                "block_key", F.col("id").cast("string").alias("right_id")
-            )
-            kmax = (
-                la.groupBy("left_id").count().agg(F.max("count").alias("_ml"))
-                .crossJoin(
-                    ra.groupBy("right_id").count().agg(F.max("count").alias("_mr"))
-                )
-                .first()
-            )
-            single_key = (kmax["_ml"] or 0) <= 1 or (kmax["_mr"] or 0) <= 1
-            covered = (
-                F.broadcast(g)
-                .join(la, "left_id")
-                .join(ra, ["block_key", "right_id"])
-                .select("left_id", "right_id")
-                .distinct()
-            )
-            tp_agg = covered.agg(F.count("*").alias("_tp"))
-            if single_key:
-                n_agg = (
-                    la.groupBy("block_key").agg(F.count("*").alias("_bl"))
-                    .join(ra.groupBy("block_key").agg(F.count("*").alias("_br")), "block_key")
-                    .agg(F.sum(F.col("_bl") * F.col("_br")).alias("_n"))
-                )
-            else:
-                n_agg = blocks.pairs(distinct=True).agg(F.count("*").alias("_n"))
-            row = tp_agg.crossJoin(n_agg).crossJoin(small).first()
-        else:
-            row = _one_pass_counts(blocks, g, left_count, right_count, distinct)
+        counts = _key_counts if blocks.left_keys is not None else _one_pass_counts
+        row = counts(blocks, g, left_count, right_count, distinct)
         n_pairs, tp, n_gold = int(row["_n"] or 0), int(row["_tp"] or 0), int(row["_ng"] or 0)
         if isinstance(left_count, DataFrame):
             left_count = int(row["_nl"] or 0)
@@ -186,14 +131,32 @@ class Evaluation:
 _COUNTS = ("_n", "_tp", "_ng", "_nl", "_nr")
 
 
+def _leg(df: DataFrame, **cols) -> DataFrame:
+    """``df`` as rows of the count columns ``_COUNTS`` (0 where not given)."""
+    return df.select(*(cols.get(c, F.lit(0)).alias(c) for c in _COUNTS))
+
+
+def _sum_legs(legs: list[DataFrame], left_count, right_count):
+    """The legs, plus one row per entity of ``left_count`` /
+    ``right_count`` when those are DataFrames, summed in one action."""
+    if isinstance(left_count, DataFrame):
+        legs.append(_leg(left_count, _nl=F.lit(1)))
+    if isinstance(right_count, DataFrame):
+        legs.append(_leg(right_count, _nr=F.lit(1)))
+    union = functools.reduce(DataFrame.unionByName, legs)
+    return union.agg(*(F.sum(c).alias(c) for c in _COUNTS)).first()
+
+
 def _one_pass_counts(blocks, gold: DataFrame, left_count, right_count, distinct: bool):
     """The pair, true-positive, gold and entity counts of
     :meth:`Evaluation.from_blocks` as one row, from one action.
-    ``gold``: string ``(left_id, right_id)``."""
+    ``gold``: string ``(left_id, right_id)``.
 
-    def leg(df: DataFrame, **cols) -> DataFrame:
-        return df.select(*(cols.get(c, F.lit(0)).alias(c) for c in _COUNTS))
-
+    The candidate pairs and the gold rows are grouped once by
+    ``(left_id, right_id)``, each group yielding its pair count (its
+    duplicates under ``distinct=False``, else 1), its true positives
+    (the same count if the pair is a non-null gold link) and its gold
+    count (1 if it is one)."""
     ids = [F.col(c).cast("string").alias(c) for c in ("left_id", "right_id")]
     grouped = (
         blocks.block_pairs()
@@ -204,13 +167,52 @@ def _one_pass_counts(blocks, gold: DataFrame, left_count, right_count, distinct:
     )
     n = F.least(F.col("_p"), F.lit(1)) if distinct else F.col("_p")
     is_link = (F.col("_g") == 1) & F.col("left_id").isNotNull() & F.col("right_id").isNotNull()
-    legs = [leg(grouped, _n=n, _tp=F.when(is_link, n).otherwise(0), _ng=F.col("_g"))]
-    if isinstance(left_count, DataFrame):
-        legs.append(leg(left_count, _nl=F.lit(1)))
-    if isinstance(right_count, DataFrame):
-        legs.append(leg(right_count, _nr=F.lit(1)))
-    union = functools.reduce(DataFrame.unionByName, legs)
-    return union.agg(*(F.sum(c).alias(c) for c in _COUNTS)).first()
+    legs = [_leg(grouped, _n=n, _tp=F.when(is_link, n).otherwise(0), _ng=F.col("_g"))]
+    return _sum_legs(legs, left_count, right_count)
+
+
+def _key_counts(blocks, gold: DataFrame, left_count, right_count, distinct: bool):
+    """:func:`_one_pass_counts` from the ``(block_key, id)`` key frames
+    (distinct rows, so a pair occurs once per key it shares), the
+    reference's ``MinimalEvaluation`` direction (``eval.py:22-141``):
+    comparisons are Σ over blocks of ``|bl|·|br|``, under ``distinct``
+    minus Σ ``(c − 1)`` over pairs sharing ``c`` keys, joined only from
+    entities with ≥ 2 keys (none under standard blocking, which so
+    enumerates no pair); true positives are the distinct gold links
+    joined to a shared key, once each or once per key."""
+    la = blocks.left_keys.select("block_key", F.col("id").cast("string").alias("left_id"))
+    ra = blocks.right_keys.select("block_key", F.col("id").cast("string").alias("right_id"))
+
+    def per_pair(joined: DataFrame) -> DataFrame:
+        """Key-joined rows → one row per pair, ``_c`` its shared keys."""
+        return joined.groupBy("left_id", "right_id").agg(F.count("*").alias("_c"))
+
+    def multi(keys: DataFrame, id_col: str) -> DataFrame:
+        """The assignments of entities with ≥ 2 keys."""
+        return (
+            keys.groupBy(id_col)
+            .agg(F.collect_list("block_key").alias("_ks"))
+            .where(F.size("_ks") >= 2)
+            .select(F.explode("_ks").alias("block_key"), id_col)
+        )
+
+    def block_sizes(keys: DataFrame, name: str) -> DataFrame:
+        return keys.groupBy("block_key").agg(F.count("*").alias(name))
+
+    g = gold.distinct()  # gold is a set of links; dupes would inflate the counts
+    hits = per_pair(F.broadcast(g).join(la, "left_id").join(ra, ["block_key", "right_id"]))
+    legs = [
+        _leg(
+            block_sizes(la, "_bl").join(block_sizes(ra, "_br"), "block_key"),
+            _n=F.col("_bl") * F.col("_br"),
+        ),
+        _leg(hits, _tp=F.lit(1) if distinct else F.col("_c")),
+        _leg(g, _ng=F.lit(1)),
+    ]
+    if distinct:
+        repeats = per_pair(multi(la, "left_id").join(multi(ra, "right_id"), "block_key"))
+        legs.append(_leg(repeats, _n=1 - F.col("_c")))
+    return _sum_legs(legs, left_count, right_count)
 
 
 def dice(n_a: int, n_b: int, n_common: int) -> float:

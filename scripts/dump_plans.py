@@ -42,11 +42,11 @@ DEFAULT_QUERIES = [
 
 NOTES = {
     "token_blocking": "Both scans pruned to (id, name); per-side partial+final ObjectHashAggregate (collect_set); supplier side broadcast — zero shuffle joins.",
-    "relational_token_blocking": "The headline method: concat aggregates, one inner edge join, the own text unioned in as rows after it, re-concat, token explode, block join. Importance tables would enter as broadcasts.",
+    "relational_token_blocking": "The headline method as the one side-tagged relational flow: the tagged own-text aggregate feeds the (_s, tail) edge join of both sides (the same subtree twice here; the executed plan reuses its exchange); the single branch's side split is pushed down, so the own text unioned in after the join, the re-concat and the token explode plan per side; block join. Importance tables would enter as broadcasts.",
     "ngram_jaccard_dedup": "PPJoin prefix filter: frequency count -> per-doc window -> prefix self-join -> array_intersect verify; size filter rides the candidate join.",
     "knn_topk": "Index broadcast, deliberate BroadcastNestedLoopJoin cross product, single window for top-k; vec_id filter pushed to the scan.",
     "windowed_event_counts": "Scan pruned to 3 columns; map-side partial aggregate; one exchange on (window, type).",
-    "eval_metrics": "Evaluation runs while the query builds, so the plan is its one-row result. Key-framed blocks (this query) count covered gold links through the assignment join; array-layout blocks, or distinct=False, take one action: pairs and gold rows grouped once by (left_id, right_id), then one global aggregate of pair, TP, gold and entity counts.",
+    "eval_metrics": "Evaluation runs while the query builds, so the plan is its one-row result. It is one action either way: key-framed blocks (this query) sum per-block size products, gold links joined to shared keys, the repeats of pairs of multi-key entities, and the gold and entity counts as legs of one union; array-layout blocks group pairs and gold rows once by (left_id, right_id) first.",
     "knn_topk_sharded": "Unbroadcastable-index exact kNN: index scanned IN PLACE through MapInPandas (zero index shuffle — queries arrive via a parquet side-channel read inside the task); WindowGroupLimit prunes partial top-k before the single exchange of the merge window.",
     "ann_topk_ivf_indexed": "Persisted IVF probe: scan shows PartitionFilters on centroid_id (unprobed list directories never open); per-list matmul via FlatMapCoGroupsInPandas; probe projection read from parquet scratch (no session-lifetime cache); tiny final window.",
     "csls_topk": "Hubness-reduced kNN: two MapInPandas exact searches, scalar avg aggregates, two scalar equi-joins, one merge window — the dim-d vectors never enter an exchange after the searches.",

@@ -35,6 +35,20 @@ def spark():
     yield session
 
 
+
+def jobs_in_group(spark, group, action):
+    """``action()``'s result and the number of Spark jobs it ran, counted
+    under the job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 TABLE_A_COLUMNS = ["id", "Name", "Birthdate", "BirthCountry", "Occupation"]
 TABLE_A_ROWS = [
     ("a1", "John McExample", "11-12-1973", "USA", "Engineer"),

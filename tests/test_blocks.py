@@ -8,7 +8,7 @@ import pytest
 
 from klinker_spark.data.blocks import BlockManager
 
-from conftest import SF_DIR, blocks_as_dict
+from conftest import SF_DIR, blocks_as_dict, jobs_in_group
 
 BLOCKS_DICT = {
     2: (["3"], ["3", "5"]),
@@ -253,51 +253,48 @@ def test_covered_ids_unknown_side_raises(spark):
         BlockManager(bm.df, "A", "B").covered_ids("nope")
 
 
-def test_block_pairs_repartitions_unless_keys_partitioned(spark):
+def test_block_pairs_repartitions_combined_managers_too(spark):
     """The expanding key join runs on a round-robin repartitioned left
-    side, except on a combine()-produced (keys_partitioned) manager,
-    whose key space is already spread."""
+    side, a combined manager's too: its key frames are hash-partitioned
+    on block_key, but one hot key would still expand in one task."""
     one = _km(spark, [("k", "a1"), ("k", "a2")], [("k", "b1")])
     n = spark.sparkContext.defaultParallelism
-    assert f"RoundRobinPartitioning({n})" in one.block_pairs()._jdf.queryExecution().toString()
-    bm = one.combine(_km(spark, [("k", "a3")], [("k", "b2")]))
-    assert bm.keys_partitioned
-    assert "RoundRobinPartitioning" not in bm.block_pairs()._jdf.queryExecution().toString()
+    for bm in (one, one.combine(_km(spark, [("k", "a3")], [("k", "b2")]))):
+        plan = bm.block_pairs()._jdf.queryExecution().toString()
+        assert f"RoundRobinPartitioning({n})" in plan
 
 
 def test_composite_assign_is_lazy_and_cache_free(spark):
-    """CompositeRelationalTokenBlocker.assign builds one lazy plan: it
-    launches no Spark job, and its terminal action leaves no cache
-    behind — no persistent RDD is added, without any release_all.
-    (Compared as id sets: earlier tests' caches may be cleaned up
-    meanwhile, so the count alone can fall.)"""
+    """Every relational flow (composite, simple, relational) builds one
+    lazy plan in assign: it launches no Spark job, and its terminal
+    action leaves no cache behind — no persistent RDD is added, without
+    any release_all.  (Compared as id sets: earlier tests' caches may be
+    cleaned up meanwhile, so the count alone can fall.)"""
     from klinker_spark.blockers.composite import CompositeRelationalTokenBlocker
+    from klinker_spark.blockers.relation_aware import (
+        RelationalTokenBlocker,
+        SimpleRelationalTokenBlocker,
+    )
     from klinker_spark.queries.blocking_ml import composite_relational_inputs
 
     sc = spark.sparkContext
-    before = set(sc._jsc.getPersistentRDDs())
     inputs = composite_relational_inputs(spark, SF_DIR)
-    group = "test-composite-assign"
-    sc.setJobGroup(group, "assign")
-    try:
-        bm = CompositeRelationalTokenBlocker().assign(*inputs)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    assert bm.pairs().collect()
-    assert set(sc._jsc.getPersistentRDDs()) - before == set()
-
-
-def _jobs_in_group(spark, group, action):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    for blocker in (
+        CompositeRelationalTokenBlocker,
+        SimpleRelationalTokenBlocker,
+        RelationalTokenBlocker,
+    ):
+        before = set(sc._jsc.getPersistentRDDs())
+        group = f"test-assign-{blocker.__name__}"
+        sc.setJobGroup(group, "assign")
+        try:
+            bm = blocker().assign(*inputs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], blocker
+        assert bm.pairs().collect()
+        assert set(sc._jsc.getPersistentRDDs()) - before == set(), blocker
 
 
 def test_composite_write_and_evaluation_job_counts(spark, tmp_path):
@@ -316,7 +313,7 @@ def test_composite_write_and_evaluation_job_counts(spark, tmp_path):
     left, right, left_rel, right_rel = composite_relational_inputs(spark, SF_DIR)
     bm = CompositeRelationalTokenBlocker().assign(left, right, left_rel, right_rel)
     path = str(tmp_path / "blocks")
-    _, write_jobs = _jobs_in_group(spark, "composite-write", lambda: bm.to_parquet(path))
+    _, write_jobs = jobs_in_group(spark, "composite-write", lambda: bm.to_parquet(path))
     assert write_jobs <= 10
 
     bm.df.collect()
@@ -330,13 +327,40 @@ def test_composite_write_and_evaluation_job_counts(spark, tmp_path):
         F.concat(F.lit("c"), F.col("c_custkey")), F.concat(F.lit("s"), F.col("s_suppkey"))
     )
     read = BlockManager.read_parquet(spark, path)
-    ev, eval_jobs = _jobs_in_group(
+    ev, eval_jobs = jobs_in_group(
         spark,
         "composite-eval",
         lambda: Evaluation.from_blocks(read, gold, left_count=left.ids(), right_count=right.ids()),
     )
     assert eval_jobs <= 8
     assert ev.comparisons == bm.pairs().count()
+
+
+def test_simple_and_relational_blockers_share_one_side_tagged_plan(spark):
+    """The simple and relational blockers run the side-tagged flow: in
+    the simple flow's final plan both sides' neighbour joins read one
+    own-text exchange (reused once; 0 when each side was planned apart)
+    from 12 parquet scans, in at most 10 jobs (11 apart); the
+    relational flow's attribute and relation branches meet in one
+    combine, at most 8 jobs (11 apart)."""
+    from klinker_spark.blockers.relation_aware import (
+        RelationalTokenBlocker,
+        SimpleRelationalTokenBlocker,
+    )
+    from klinker_spark.queries.blocking_ml import composite_relational_inputs
+
+    inputs = composite_relational_inputs(spark, SF_DIR)
+    final = {}
+    for blocker, max_jobs in ((SimpleRelationalTokenBlocker, 10), (RelationalTokenBlocker, 8)):
+        pairs = blocker().assign(*inputs).block_pairs()
+        _, jobs = jobs_in_group(spark, f"plan-{blocker.__name__}", pairs.collect)
+        assert jobs <= max_jobs, blocker
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        final[blocker] = plan.split("Initial Plan")[0]
+    simple = final[SimpleRelationalTokenBlocker]
+    assert "isFinalPlan=true" in simple
+    assert simple.count("FileScan") == 12
+    assert simple.count("ReusedExchange") == 1
 
 
 def test_composite_pipeline_rerun_compiles_no_new_code(spark, tmp_path):

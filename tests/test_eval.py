@@ -9,6 +9,8 @@ import pytest
 from klinker_spark.data.blocks import BlockManager
 from klinker_spark.eval import Evaluation
 
+from conftest import SF_DIR, jobs_in_group
+
 GOLD = [(f"A:{i}", f"B:{i}") for i in range(1, 8)]
 
 EXAMPLE = {
@@ -169,17 +171,14 @@ def test_one_pass_evaluation_matches_pair_counting(spark, distinct):
 
     left = spark.createDataFrame([(f"A:{i}",) for i in range(6)], ["id"])
     right = spark.createDataFrame([(f"B:{i}",) for i in range(5)], ["id"])
-    sc = spark.sparkContext
-    group = f"one-pass-eval-{distinct}"
-    sc.setJobGroup(group, group)
-    try:
-        e = Evaluation.from_blocks(
+    e, jobs = jobs_in_group(
+        spark,
+        f"one-pass-eval-{distinct}",
+        lambda: Evaluation.from_blocks(
             blocks, gold, left_count=left, right_count=right, distinct=distinct
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
+        ),
+    )
+    assert jobs <= 8
     assert (e.comparisons, e.true_positives, e.false_negatives) == (
         len(pairs),
         tp,
@@ -187,3 +186,65 @@ def test_one_pass_evaluation_matches_pair_counting(spark, distinct):
     )
     assert (e.left_count, e.right_count) == (6, 5)
     assert e == Evaluation.from_blocks(blocks, gold, 6, 5, distinct=distinct)
+
+
+@pytest.mark.parametrize("distinct", [True, False])
+def test_key_framed_evaluation_matches_pair_counting(spark, distinct):
+    """The key-frame evaluation equals counting the enumerated pairs:
+    entities with several keys on both sides (pairs repeated across
+    blocks, counted once per block under ``distinct=False``), one-sided
+    keys, duplicate gold rows and a null gold id; and it equals the
+    evaluation of the same blocks in the array layout."""
+    from klinker_spark.session import local_df
+
+    left_keys = [
+        ("k1", "A:1"), ("k2", "A:1"), ("k3", "A:1"),
+        ("k1", "A:2"), ("k2", "A:2"),
+        ("k3", "A:3"), ("x", "A:4"),  # x: left only
+    ]
+    right_keys = [
+        ("k1", "B:1"), ("k2", "B:1"), ("k3", "B:1"),
+        ("k2", "B:2"), ("k3", "B:3"), ("y", "B:4"),  # y: right only
+    ]
+    blocks = BlockManager.from_key_assignments(
+        local_df(spark, left_keys, "block_key string, id string"),
+        local_df(spark, right_keys, "block_key string, id string"),
+        "A",
+        "B",
+    )
+    gold_rows = [
+        ("A:1", "B:1"), ("A:1", "B:1"), ("A:2", "B:2"), ("A:3", "B:3"),
+        ("A:4", "B:4"), (None, "B:1"),
+    ]
+    gold = spark.createDataFrame(gold_rows, "l string, r string")
+
+    pairs = [(lid, rid) for k, lid in left_keys for kr, rid in right_keys if k == kr]
+    if distinct:
+        pairs = list(set(pairs))
+    links = set(gold_rows)
+    tp = sum(1 for p in pairs if p in links)
+
+    left = spark.createDataFrame([(f"A:{i}",) for i in range(6)], ["id"])
+    right = spark.createDataFrame([(f"B:{i}",) for i in range(5)], ["id"])
+    e = Evaluation.from_blocks(blocks, gold, left, right, distinct=distinct)
+    assert (e.comparisons, e.true_positives, e.false_negatives) == (
+        len(pairs),
+        tp,
+        len(links) - tp,
+    )
+    assert (e.left_count, e.right_count) == (6, 5)
+    arrays = BlockManager(blocks.df, "A", "B")
+    assert e == Evaluation.from_blocks(arrays, gold, 6, 5, distinct=distinct)
+
+
+def test_eval_metrics_evaluation_is_one_action(spark):
+    """The ``eval_metrics`` query (standard blocking, key frames) is one
+    union-of-legs action: at most 24 Spark jobs (33-34 with the
+    keys-per-entity probe and a cross-joined count row)."""
+    from klinker_spark.queries.relational import eval_metrics
+
+    rows, jobs = jobs_in_group(
+        spark, "eval-metrics", lambda: eval_metrics(spark, SF_DIR).collect()
+    )
+    assert len(rows) == 1
+    assert jobs <= 24
